@@ -86,7 +86,8 @@ object MinHashDedup {
     *     small vocabulary) becomes the band minimum for every doc
     *     containing it, gluing unrelated docs into mega-buckets
     *     (measured: p99 bucket 119 docs, 10M junk join pairs on the
-    *     dup-dense dry-run corpus — tools/BucketProbe), and a J = 0.08
+    *     dup-dense dry-run corpus — BASELINE.md round-5, "Codegen
+    *     MinHashK replaces the ML pipeline"), and a J = 0.08
     *     boilerplate pair still collides with p ≈ 0.49.
     *   - r = 2, b = 8 (16 minhashes, the DEFAULT): junk collision
     *     collapses by J² (~2.5% at J = 0.08) while high-J dedup targets

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry for the wine pipeline: `runMain graft.pipeline.WineMain
   * <wine.json> <warehouseDir> [--append]`. Prints the validation report
   * and load count — the same observable surface the reference's Airflow
@@ -13,14 +11,7 @@ object WineMain {
       "usage: WineMain <wine.json> <warehouseDir> [--append]")
     val Array(json, out) = args.take(2)
     val append = args.contains("--append")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.envCpus)
     val res = WinePipeline.run(spark, json, out, append = append)
     println(s"[wine] rows loaded: ${res.rowsLoaded} -> $out (append=$append)")
     println("[wine] validation report (non-gating):")

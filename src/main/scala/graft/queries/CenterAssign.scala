@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * exactly the old window's `orderBy(dist_sq asc, center_id asc)`
   * row_number semantics. Assignment becomes a zero-exchange scan; the
   * only shuffle left in a k-means round is the (cluster, pos) centroid
-  * agg (ExplainAudit-asserted).
+  * agg (PlanShapeSpec-asserted).
   */
 object CenterAssign {
 

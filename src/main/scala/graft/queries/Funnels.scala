@@ -261,10 +261,10 @@ object Funnels {
     * so dedup happens inside the min-K sort instead of as its own
     * shuffle); the min-K cut bounds per-day state to K longs, so the
     * window pass merges #types × #days × 7 sketches of ≤K values
-    * each, never the users. Measured (RollingSketchDryRun, fresh
-    * users per copy): 100× data costs the exact q75 plan 62.8× wall
-    * vs 32.4× here — the sketch crosses over at ~10× and wins 1.6×
-    * absolute at 100×. (The rank cut is sort-based and spillable; a
+    * each, never the users. Measured (BASELINE.md round-16, "KMV
+    * scale evidence"; fresh users per copy): 100× data costs the
+    * exact q75 plan 62.8× wall vs 32.4× here — the sketch crosses over
+    * at ~10× and wins 1.6× absolute at 100×. (The rank cut is sort-based and spillable; a
     * typed min-K Aggregator would add map-side partials — the upgrade
     * path if the daily sort ever dominates.) */
   def rollingDistinctUsersSketch(e: DataFrame, k: Int = KmvK): DataFrame = {

@@ -875,7 +875,7 @@ object GraphOps {
   /** One synchronous LPA round: carry labels over the edge stream,
     * count votes per (node, label), argmax with min-label tie-break as
     * `max(struct(cnt, −label))` — a hash agg, deliberately NOT a rank
-    * window (no sort in the iteration hot loop; ExplainAudit asserts
+    * window (no sort in the iteration hot loop; PlanShapeSpec asserts
     * this shape directly since the registry entry only exposes the
     * final staged scan). */
   private[graft] def lpaRound(edges: DataFrame, labels: DataFrame): DataFrame =

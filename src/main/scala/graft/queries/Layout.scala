@@ -13,7 +13,8 @@ import graft.{Q, Tables}
   * bit-interleave via the shared integer terms, box filter) — so a
   * hash-green q149 certifies the writer loses/duplicates nothing and
   * the landed Morton key equals a fresh interleave, while the spec +
-  * ZOrderAB carry the file-skipping measurements. The layout is
+  * BASELINE.md round-12 ("Morton layout writer: measured file-skip
+  * A/B") carry the file-skipping measurements. The layout is
   * written once per (session, corpus path) via SessionCache — the
   * production shape (Z-ORDER is a write-once layout choice, scans are
   * the steady state), and the scan's PushedFilters on zx/zy are the
@@ -98,7 +99,8 @@ object Layout {
     * bloom-filter layout (the access path min/max stats can't serve on
     * a date-sorted table: every row group straddles the probed key, so
     * stats-only skipping opens all of them — BloomLayoutSpec and
-    * BloomAB measure the row groups the landed blooms actually skip).
+    * BASELINE.md round-12 ("q154 bloom-filter layout") measure the row
+    * groups the landed blooms actually skip).
     * The 8-key IN list stays under Spark's parquet
     * `pushdown.inFilterThreshold` (10), so the scan pushes per-key
     * equality predicates and parquet-mr's row-group filter consults

@@ -358,7 +358,8 @@ object Learn {
     * q134 ships [[embedCovarianceAcc]], which accumulates the same
     * cells in a fixed buffer per partition — bit-identical
     * (suite-asserted) and measured 2.3-2.6× faster (the 2,080 generated
-    * rows per vector were pure CPU overhead — tools/Q134GramAB). */
+    * rows per vector were pure CPU overhead — BASELINE.md round-10,
+    * "q134 Gram: explode+hash-agg vs typed-accumulator A/B"). */
   def embedCovariance(embeddings: DataFrame): DataFrame = {
     val e = embeddings.filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding"))
@@ -400,7 +401,7 @@ object Learn {
     * vector. Output is bit-identical to the explode plan (equality
     * suite-asserted; quantization and divisor contracts in the
     * aggregator's scaladoc). Measured A/B vs the explode plan:
-    * tools/Q134GramAB, recorded in BASELINE.md round-10. */
+    * BASELINE.md round-10 ("q134 Gram"). */
   def embedCovarianceAcc(embeddings: DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
@@ -423,7 +424,7 @@ object Learn {
 
   /** q134 — embedding covariance matrix (upper triangle). Ships the
     * accumulator plan: measured 2.3× over the explode plan at sf0.1 and
-    * 2.6× at 10× (tools/Q134GramAB, BASELINE.md round-10), bit-identical
+    * 2.6× at 10× (BASELINE.md round-10, "q134 Gram"), bit-identical
     * output (suite-asserted), so the hash gate also proves the explode
     * twin's oracle still describes this plan's semantics exactly. */
   val q134: Q = Q(

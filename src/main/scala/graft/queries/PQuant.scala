@@ -21,7 +21,7 @@ import graft.{Q, Tables}
   * q126 bounded-collect contract — k, mSub, d are operator constants);
   * encoding is a ZERO-exchange projection fold against one broadcast
   * codebook row (the CenterAssign recipe, subspace-aware —
-  * ExplainAudit-asserted); ADC scoring is another zero-exchange scan
+  * PlanShapeSpec-asserted); ADC scoring is another zero-exchange scan
   * whose per-row work is mSub array lookups, with the per-query top-k
   * as the only rank window. The codes table is 64× smaller than the
   * raw store — the artifact that actually fits executor memory when

@@ -130,7 +130,7 @@ object Quantize {
     */
   /** The distributed half of q121: integer micro-unit relevance against
     * the broadcast query vector, top-`nCand` via TakeOrderedAndProject
-    * (never a global sort — ExplainAudit-asserted). At 100 TB this is
+    * (never a global sort — PlanShapeSpec-asserted). At 100 TB this is
     * the piece that swaps for `ivfQuery` — the greedy consumes whatever
     * bounded candidate table the retrieval tier produced. */
   private[graft] def mmrCandidateQuery(

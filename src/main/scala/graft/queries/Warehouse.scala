@@ -534,7 +534,8 @@ object Warehouse {
     * (pos·N overflows int64 at warehouse scale). Global totals are a
     * 1-row broadcast re-agg of the ≤10-row decile table.
     *
-    * Scale bound, MEASURED (round 15, tools/PercentileCutDryRun):
+    * Scale bound, MEASURED (BASELINE.md round-15, "Percentile-cut
+    * family scale evidence"):
     * Spark's exact Percentile merges a value→count map at one final
     * reducer, so the binding quantity is DISTINCT score values, not
     * rows. With the score = line cents (bounded by the part price
@@ -546,7 +547,7 @@ object Warehouse {
     * catalog-bounded score column; for unbounded values use [[q237]]'s
     * fixed-bin histogram cuts (mergeable, constant state regardless of
     * distinct growth — A/B'd under the adversarial generator in
-    * tools/PercentileCutDryRun). */
+    * BASELINE.md round-16, "q237: the histogram cut path as code"). */
   /** The gains-table score stream: line value in exact cents, positive
     * = returned line — shared by q233 (exact cuts) and q237 (histogram
     * cuts). */
@@ -991,7 +992,7 @@ object Warehouse {
     * (driver heartbeat death mid-merge at 60 M distinct) — while this
     * histogram cut source holds constant state (256 integer cells,
     * mergeable by addition) at the price of bin-granular cut
-    * placement: the round-16 A/B (PercentileCutDryRun `hist`) measured
+    * placement: the round-16 A/B (BASELINE.md round-16, q237) measured
     * 2.2× at 10× and 89.4× at 100× adversarial distinct — row-bound
     * ~linear scan scaling with NO distinct-growth term, on the same
     * window where the exact path died. Same scored stream, same

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Sessions, SparkEntry}
 
 /** Plan-evidence dumper: writes `.explain("formatted")` for the named
   * registry queries (all when no args) to `plans/<tag>/<name>_<suffix>.txt`.
@@ -16,16 +15,7 @@ object DumpPlans {
     val suffix = args.drop(1).headOption.getOrElse("before")
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
     val dir = java.nio.file.Paths.get("plans", tag)
     java.nio.file.Files.createDirectories(dir)
     val wanted =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale dry-run: self-union the sf0.1 fact tables 10× (~6M lineitem
@@ -12,20 +12,13 @@ import org.apache.spark.sql.functions._
   */
 object ScaleDryRun {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Sessions.envCpus
+    val spark = graft.Sessions.local(cpus)
     val dir = "/root/testdata/sf0.1"
     val mult = 10
 
     def x10(df: DataFrame): DataFrame =
-      (1 to mult).map(_ => df).reduce(_ union _).repartition(cpus.toInt)
+      (1 to mult).map(_ => df).reduce(_ union _).repartition(cpus)
 
     val li = x10(spark.read.parquet(s"$dir/lineitem.parquet"))
     val o = x10(spark.read.parquet(s"$dir/orders.parquet"))
@@ -75,7 +68,7 @@ object ScaleDryRun {
       else docs0.select((col("doc_id") + lit(i * 10000000L)).as("doc_id"),
         concat_ws(" ", shuffle(split(col("text"), " "))).as("text"),
         col("lang"), col("source"), col("n_chars"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(cpus)
 
     time("exact_dedup (q23 shape)") {
       docs10.groupBy(md5(col("text").cast("binary")).as("h"))
@@ -140,7 +133,7 @@ object ScaleDryRun {
         expr("transform(embedding, x -> cast(rand() * 2 - 1 as float))")
           .as("embedding"),
         col("label"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(cpus)
     time("embedding_neardup_lsh (q47 shape)") {
       graft.ext.Similarity.neardupLsh(emb10)
     }
@@ -163,7 +156,7 @@ object ScaleDryRun {
         else docs0.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
           concat(col("text"), lit(s" salt$k")).as("text"),
           col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _).repartition(cpus.toInt)
+      }.reduce(_ unionByName _).repartition(cpus)
     def timed(df: => DataFrame): (Double, Long) = {
       val t0 = System.nanoTime()
       val n = df.count()
@@ -230,7 +223,7 @@ object ScaleDryRun {
             concat_ws(" ", shuffle(split(col("text"), " "))).as("text"),
             col("lang"), col("source"), col("n_chars"))
         c.withColumn("text", concat(lit("h1 h2 h3 h4 h5 "), col("text")))
-      }.reduce(_ unionByName _).repartition(cpus.toInt)
+      }.reduce(_ unionByName _).repartition(cpus)
     val (h1, hp1) = (hot(1), hot(4))
     val (tHx1, nHx1) = timed(graft.queries.TextOps.jaccardPairs(h1, 0.5))
     val (tHx4, nHx4) = timed(graft.queries.TextOps.jaccardPairs(hp1, 0.5))
@@ -270,7 +263,7 @@ object ScaleDryRun {
       else ev0.select((col("event_id") + lit(i * 100000000L)).as("event_id"),
         col("ts"), (col("user_id") + lit(i * 1000000L)).as("user_id"),
         col("event_type"), col("value"), col("props"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(cpus)
     val (tFun1, _) = timed(graft.queries.Funnels.funnel(ev0))
     val (tFun10, _) = timed(graft.queries.Funnels.funnel(ev10))
     println(f"[scale-dry-run] q61_funnel_1x          $tFun1%8.2f s")
@@ -283,7 +276,7 @@ object ScaleDryRun {
     val bk10 = (0 until mult).map { i =>
       if (i == 0) bk0
       else bk0.select((col("ok") + lit(i * 100000000L)).as("ok"), col("part"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(cpus)
     val (tAr1, _) = timed(graft.queries.Mining.assocRules(bk0))
     val (tAr10, _) = timed(graft.queries.Mining.assocRules(bk10))
     println(f"[scale-dry-run] q142_assoc_1x          $tAr1%8.2f s")
@@ -430,7 +423,7 @@ object ScaleDryRun {
     val li10pr = (0 until mult).map { i =>
       if (i == 0) li0pr
       else li0pr.select((col("ok") + lit(i * 1000000000L)).as("ok"), col("part"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(cpus)
     val (tPr1, _) = timed(graft.queries.GraphOps.partPageRank(li0pr))
     val (tPr10, _) = timed(graft.queries.GraphOps.partPageRank(li10pr))
     println(f"[scale-dry-run] q101_pagerank_1x       $tPr1%8.2f s")
@@ -453,7 +446,7 @@ object ScaleDryRun {
         expr("transform(embedding, x -> cast(rand() * 2 - 1 as float))")
           .as("embedding"),
         col("label"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(cpus)
     val (tKnn1, _) = timed(graft.queries.Retrieval.knnClassify(emb0))
     val (tKnn10, _) = timed(graft.queries.Retrieval.knnClassify(embKnn10))
     println(f"[scale-dry-run] q103_knn_1x            $tKnn1%8.2f s")
@@ -588,7 +581,7 @@ object ScaleDryRun {
           if (i == 0) li0pr
           else li0pr.select((col("ok") + lit(i * 1000000000L)).as("ok"),
             (col("part") + lit(i * 10000000L)).as("part"))
-        }.reduce(_ unionByName _).repartition(cpus.toInt)
+        }.reduce(_ unionByName _).repartition(cpus)
       for (m <- Seq(10, 100)) {
         val base = liParts(m)
         val (tB, _) = timed(

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 100× scale dry-run: the evidence pass for "would this plan survive a
@@ -18,15 +18,8 @@ import org.apache.spark.sql.functions._
   */
 object ScaleDryRun100 {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Sessions.envCpus
+    val spark = graft.Sessions.local(cpus)
     val dir = "/root/testdata/sf0.1"
 
     def timed(df: => DataFrame): (Double, Long) = {
@@ -46,7 +39,7 @@ object ScaleDryRun100 {
         if (i == 0) df
         else keys.foldLeft(df)((d, k) =>
           d.withColumn(k, col(k) + lit(i * stride)))
-      }.reduce(_ unionByName _).repartition(cpus.toInt)
+      }.reduce(_ unionByName _).repartition(cpus)
 
     def relational(tag: String, mult: Int): (Double, Double) = {
       val li = growKeyed(li0, mult, Seq("l_orderkey"))
@@ -97,7 +90,7 @@ object ScaleDryRun100 {
         else base.select((col("doc_id") + lit(k * 100000000L)).as("doc_id"),
           concat(col("text"), lit(s" salt$k")).as("text"),
           col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _).repartition(cpus.toInt)
+      }.reduce(_ unionByName _).repartition(cpus)
 
     def clusterCase(tag: String, docs: DataFrame): Double = {
       val t0 = System.nanoTime()
@@ -127,7 +120,7 @@ object ScaleDryRun100 {
     // 500k docs / ~8M chunks
     def cdCase(tag: String, docs: DataFrame): Double = {
       val (t, n) = timed(graft.queries.PipelineOps.chunkDedup(
-        docs.filter(col("text").isNotNull).repartition(cpus.toInt)))
+        docs.filter(col("text").isNotNull).repartition(cpus)))
       row(s"chunk_dedup_$tag", t, n)
       t
     }
@@ -141,7 +134,7 @@ object ScaleDryRun100 {
     // bucket-bounded — the 100x/1x ratio IS that claim, measured
     def contCase(tag: String, docs: DataFrame): Double = {
       val (t, n) = timed(graft.queries.TextOps.containmentPairs(
-        docs.filter(col("text").isNotNull).repartition(cpus.toInt)))
+        docs.filter(col("text").isNotNull).repartition(cpus)))
       row(s"containment_$tag", t, n)
       t
     }
@@ -158,7 +151,7 @@ object ScaleDryRun100 {
         else ev0.select((col("event_id") + lit(i * 1000000000L)).as("event_id"),
           col("ts"), (col("user_id") + lit(i * 10000000L)).as("user_id"),
           col("event_type"), col("value"), col("props"))
-      }.reduce(_ unionByName _).repartition(cpus.toInt)
+      }.reduce(_ unionByName _).repartition(cpus)
     def rolling(tag: String, mult: Int): (Double, Double) = {
       val ev = growEvents(mult)
       val (tEx, nEx) = timed(graft.queries.Funnels.rollingDistinctUsers(ev))
@@ -182,7 +175,7 @@ object ScaleDryRun100 {
         expr("transform(embedding, x -> cast(rand() * 2 - 1 as float))")
           .as("embedding"),
         col("label"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(cpus)
     val (tCold, nCold) = timed(graft.ext.Similarity.ivfTopK(emb100))
     row("ivf_cold_build+query_100x", tCold, nCold)
     val tB0 = System.nanoTime()
@@ -208,7 +201,7 @@ object ScaleDryRun100 {
           expr("transform(embedding, x -> cast(rand() * 2 - 1 as float))")
             .as("embedding"),
           col("label"))
-      }.reduce(_ unionByName _).repartition(cpus.toInt)
+      }.reduce(_ unionByName _).repartition(cpus)
       val centers = graft.ext.Similarity.ivfBuild(e, nCells = cells).get
         .centroids.select(col("pcell").as("center_id"), col("centroid"))
       val (t, n) = timed(graft.queries.VectorOps.semDedup(e, centers))
@@ -348,7 +341,7 @@ object ScaleDryRun100 {
         else scored0.select(
           (col("score_cents") + lit(i * 10000000000L)).as("score_cents"),
           col("pos"))
-      }.reduce(_ unionByName _).repartition(cpus.toInt)
+      }.reduce(_ unionByName _).repartition(cpus)
     def gainsCase(tag: String, scored: DataFrame): Double = {
       val cuts = scored.agg(percentile(col("score_cents"),
         array((1 to 9).map(i => lit(i / 10.0)): _*)).as("cuts"))

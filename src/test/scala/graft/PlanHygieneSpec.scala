@@ -16,28 +16,12 @@ class PlanHygieneSpec extends AnyFunSuite {
   private val boundedGlobalWindowOk = Set.empty[String]
 
   test("no registry query plans a CartesianProduct; all queries plan") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
-    // AQE-aware walk: AdaptiveSparkPlanExec hides its inner plan from
-    // TreeNode children, so a naive collect is vacuously empty
-    def partitionless(p: SparkPlan): Boolean = {
-      val here = p match {
-        case w: WindowExec => w.partitionSpec.isEmpty
-        case w: WindowGroupLimitExec => w.partitionSpec.isEmpty
-        case _ => false
-      }
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case o => o.children
-      }
-      here || kids.exists(partitionless)
-    }
     val offenders = SparkEntry.registry.flatMap { q =>
       val exec = q.run(spark, TestSpark.sf0001).queryExecution.executedPlan
       val cartesian = exec.toString.contains("CartesianProduct")
       val badWindow =
-        !boundedGlobalWindowOk.contains(q.name) && partitionless(exec)
+        !boundedGlobalWindowOk.contains(q.name) &&
+          PlanWalk.partitionlessWindows(exec).nonEmpty
       if (cartesian) Some(q.name -> "CartesianProduct")
       else if (badWindow) Some(q.name -> "partition-less window")
       else None

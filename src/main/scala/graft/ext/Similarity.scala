@@ -326,7 +326,7 @@ object Similarity {
 
   /** Cold-path convenience: build + query in one call (a cold build
     * each time; production amortizes via [[ivfBuild]]/[[ivfQuery]],
-    * dry-run-measured in ScaleDryRun). */
+    * scale-measured by ScaleRun's ivf_* legs). */
   def ivfTopK(embeddings: DataFrame, k: Int = 5, nQueries: Int = 10,
       nCells: Int = 16, nProbe: Int = 4, maxFitRows: Long = 100000L): DataFrame =
     ivfBuild(embeddings, nCells, maxFitRows) match {

@@ -9,10 +9,18 @@ import graft.operators.{Transforms, Validation}
   * (SURVEY.md §2.A / §3; reference /root/reference/dags/wine_etl_kaggle.py).
   *
   * The reference runs extract → transform → validate → load → cleanup as
-  * five Airflow tasks exchanging CSV paths; here the chain is ONE lazy
-  * plan (Catalyst fuses transform+load into a single job) with exactly
-  * two extra actions: the median scalar aggregate and the validation
-  * report. The reference's semantics are preserved:
+  * five Airflow tasks exchanging CSV paths; here no CSV is staged
+  * between tasks, and the work splits into two kinds:
+  *   - EAGER, inside [[transform]]: `dictEncode`'s dictionary. Under
+  *     AQE, turning the sorted distinct country set into an RDD runs that
+  *     plan's jobs on the spot, and `zipWithIndex` runs one more job to
+  *     number the values.
+  *   - LAZY, in the consumer's plan: the coercions and fills, the median
+  *     aggregate broadcast into the rows, the per-row expressions and the
+  *     join with the code table. [[run]] caches the result and consumes
+  *     it three times: the validation report collect, the warehouse
+  *     write and a row count.
+  * The reference's semantics are preserved:
   *   - validation is observational, never gating (wine_etl_kaggle.py:100)
   *   - the warehouse write is append by default but overwrite-able
   *     (`:199` if_exists='append' makes re-runs duplicate rows — kept as

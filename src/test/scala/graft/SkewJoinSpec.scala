@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** SkewJoin contract: salting must change the SHUFFLE DISTRIBUTION and
   * nothing else — the joined multiset is exactly the plain inner
   * join's, including duplicate keys on either side. (The wall-clock A/B
-  * against plain SMJ and AQE's skew split runs in
-  * tools/ScaleDryRun on the 10x corpus.) */
+  * against plain SMJ and AQE's skew split is the skew_join_* legs of
+  * tools/ScaleRun.) */
 class SkewJoinSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 

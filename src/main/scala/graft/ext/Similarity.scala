@@ -227,14 +227,14 @@ object Similarity {
     * like a production vector index. */
   final case class IvfIndex(assigned: DataFrame, centroids: DataFrame)
 
-  /** Fit the coarse quantizer and stage the assignment — the build half
-    * of [[ivfTopK]]. None on an empty/all-null corpus (no index to
-    * build; callers short-circuit to their schema-correct empty). */
   /** Bounded Lloyd rounds for the coarse-quantizer fit (the q126
     * iteration budget; enough for a rough cell balance, which is all a
     * coarse quantizer needs). */
   val IvfIters = 4
 
+  /** Fit the coarse quantizer and stage the assignment — the build half
+    * of [[ivfTopK]]. None on an empty/all-null corpus (no index to
+    * build; callers short-circuit to their schema-correct empty). */
   def ivfBuild(embeddings: DataFrame, nCells: Int = 16,
       maxFitRows: Long = 100000L): Option[IvfIndex] = {
     val spark = embeddings.sparkSession

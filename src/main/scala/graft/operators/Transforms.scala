@@ -39,13 +39,12 @@ object Transforms {
     * median imputed into nulls. Implemented scale-safely as a 1-row
     * aggregate broadcast-joined into the plan (no collect, no global
     * window): the tiny aggregate is its own Spark job but the scalar flows
-    * through a BroadcastNestedLoopJoin of a single row. `exact=false`
-    * switches to approx_percentile for the 100 TB path (SURVEY §4.3).
+    * through a BroadcastNestedLoopJoin of a single row. Always exact
+    * (`percentile`, pandas parity); at 100 TB `approx_percentile` is the
+    * swap SURVEY §4.3 records.
     */
-  def imputeMedian(col0: String, exact: Boolean = true): DataFrame => DataFrame = { df =>
-    val med =
-      if (exact) df.agg(percentile(col(col0), lit(0.5)).as("__med"))
-      else df.agg(approx_percentile(col(col0), lit(0.5), lit(10000)).as("__med"))
+  def imputeMedian(col0: String): DataFrame => DataFrame = { df =>
+    val med = df.agg(percentile(col(col0), lit(0.5)).as("__med"))
     df.crossJoin(broadcast(med))
       .withColumn(col0, coalesce(col(col0), col("__med")))
       .drop("__med")

@@ -756,9 +756,10 @@ object Export {
 
   /** q195's lifecycle: TWO CONCURRENT WRITERS (real threads) ingest
     * the corpus halves through the optimistic-concurrency append —
-    * each claims its version via the atomic reservation, neither
-    * coordinates with the other. Which half lands as v0 vs v1 is a
-    * race; the CONTENT of the current snapshot is not. */
+    * each takes its version by the atomic pointer create that
+    * publishes it, neither coordinates with the other. Which half lands
+    * as v0 vs v1 is a race; the CONTENT of the current snapshot is
+    * not. */
   private[graft] def concurrentLayoutFor(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
     graft.operators.SessionCache.memoOn(spark, dir,
@@ -770,7 +771,7 @@ object Export {
       import scala.concurrent.ExecutionContext.Implicits.global
       val writers = Seq(0, 1).map { half =>
         Future {
-          graft.sinks.VersionedShards.commitAppendAtomic(spark,
+          graft.sinks.VersionedShards.commitAppend(spark,
             docs.filter(col("doc_id") % 2 === half), "doc_id", out,
             nShards)
         }
@@ -781,17 +782,18 @@ object Export {
 
   /** q195 — OPTIMISTIC CONCURRENCY CONTROL for independent writers
     * (the Delta commit-protocol shape): two uncoordinated threads
-    * append into one layout, each atomically claiming its version via
-    * create-no-overwrite reservation markers; blind appends have an
-    * empty read-set so first-claim-wins is serializable with no
-    * conflict detection. The registry reads the current snapshot after
+    * append into one layout; each commit IS the atomic no-clobber
+    * create of its version's pointer file, so a writer that loses a
+    * version retries at the next one. Blind appends have an empty
+    * read-set, so first-create-wins is serializable with no conflict
+    * detection. The registry reads the current snapshot after
     * the race — hash-green against the full corpus certifies that
     * WHICHEVER interleaving the scheduler produced, both commits
     * landed whole (the failure mode this protocol exists to prevent is
     * a racing writer silently overwriting the other's version). The
-    * suite additionally pins the reservation semantics: a claimed slot
-    * refuses a second claimant, losers advance, crashed reservations
-    * leave harmless gaps. */
+    * suite additionally pins the publish semantics: a taken version
+    * refuses a second writer, losers advance, and a writer that crashed
+    * after staging consumes no version, so versions stay contiguous. */
   val q195: Q = Q(
     "q195_concurrent_appends",
     run = { (spark, dir) =>
@@ -806,10 +808,10 @@ object Export {
 
   /** q200's lifecycle: FOUR uncoordinated writers hit one layout —
     * two appenders (new keys), one MERGE upserter (existing keys), one
-    * compactor — all through the OCC protocols. The interleaving is a
-    * race; the final content is not: appended keys are disjoint from
-    * merge keys, the compaction preserves multisets, and the rewrite
-    * protocols replan on conflict instead of clobbering. */
+    * compactor — all through the one OCC commit path. The
+    * interleaving is a race; the final content is not: appended keys
+    * are disjoint from merge keys, the compaction preserves multisets,
+    * and the rewrites replan on conflict instead of clobbering. */
   private[graft] def concurrentRewriteLayoutFor(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
     graft.operators.SessionCache.memoOn(spark, dir,
@@ -827,15 +829,15 @@ object Export {
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
       val writers: Seq[Future[Any]] = Seq(
-        Future(graft.sinks.VersionedShards.commitAppendAtomic(spark,
+        Future(graft.sinks.VersionedShards.commitAppend(spark,
           docs.filter(col("doc_id") % 8 === 3), "doc_id", out, nShards)),
-        Future(graft.sinks.VersionedShards.commitAppendAtomic(spark,
+        Future(graft.sinks.VersionedShards.commitAppend(spark,
           docs.filter(col("doc_id") % 8 === 7), "doc_id", out, nShards)),
-        Future(graft.sinks.VersionedShards.mergeCommitAtomic(spark,
+        Future(graft.sinks.VersionedShards.mergeCommit(spark,
           docs.filter(col("doc_id") % 8 === 0)
             .withColumn("source", lit("merged")),
           "doc_id", out, nShards)),
-        Future(graft.sinks.VersionedShards.compactCommitAtomic(spark,
+        Future(graft.sinks.VersionedShards.compactCommit(spark,
           out, nShards)))
       Await.result(Future.sequence(writers), 10.minutes): Unit
       out
@@ -844,16 +846,19 @@ object Export {
   /** q200 — OPTIMISTIC CONCURRENCY for REWRITE commits (read-set
     * validation, the Delta conflict-detection shape): a MERGE upsert
     * and a compaction race two appenders on one layout, no
-    * coordinator. Every rewrite claims its slot atomically, SETTLES
-    * behind earlier claimants, then validates its read-set against the
-    * winners' log rows — a removed victim or an add in a read shard
-    * forces a replan from the fresh snapshot. Hash-green against the
+    * coordinator. Every rewrite plans against the snapshot it read,
+    * stages its files, then validates its read-set against the log rows
+    * of every version committed since — a removed victim or an add in a
+    * read shard forces a replan from the fresh snapshot — and publishes
+    * at the next version (a lost publish race just revalidates against
+    * the new winner). Hash-green against the
     * oracle certifies that WHICHEVER interleaving the scheduler
     * produced, no commit was lost, no row duplicated, and the upsert
     * landed over every copy of its keys (the failure modes unvalidated
     * rewrites produce). The suite additionally pins each conflict
-    * class deterministically (victim-removed, add-in-read-shard,
-    * stale-reservation abandonment). */
+    * class deterministically (victim-removed, add-in-read-shard for a
+    * merge and a delete) and that a writer stalled between plan and
+    * publish still lands. */
   val q200: Q = Q(
     "q200_concurrent_rewrite",
     run = { (spark, dir) =>

@@ -21,15 +21,15 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
   * its manifest, data subtree, and timestamp ([[atomicPublishFile]] —
   * the exact name is the contended unit, the content is complete the
   * instant the name exists). Version
-  * allocation IS commit: an optimistic writer targets
-  * currentVersion+1 and a failed create means that exact version just
-  * committed — there is no claim/commit window, no reservation to go
-  * stale, and NO LIVENESS ASSUMPTION: a writer may stall arbitrarily
-  * long between staging and publish and still lands (at whatever
-  * version is next when it wakes). Versions committed by the
-  * optimistic paths are therefore contiguous, and a crash before
-  * publish leaves only invisible orphans ([[gcOrphans]] reclaims
-  * them) — never a half-visible commit.
+  * allocation IS commit: every writer targets currentVersion+1 through
+  * the one optimistic commit path ([[commit]]) and a failed create
+  * means that exact version just committed — there is no claim/commit
+  * window, no reservation to go stale, and NO LIVENESS ASSUMPTION: a
+  * writer may stall arbitrarily long between staging and publish and
+  * still lands (at whatever version is next when it wakes). Committed
+  * versions are therefore contiguous, and a crash before publish
+  * leaves only invisible orphans ([[gcOrphans]] reclaims them) —
+  * never a half-visible commit.
   *
   * The live file set as of version v is the order-aware fold of
   * manifests ≤ v; readers ALWAYS resolve through the log, never by
@@ -245,17 +245,6 @@ object VersionedShards {
       s"$effTs $mId ${dId.getOrElse("none")}")
   }
 
-  /** [[publish]] for the SINGLE-WRITER commit paths (fixed version,
-    * seq 0): a lost race here is a contract violation — fail loudly
-    * instead of silently shadowing either writer's commit (what the
-    * old overwrite-the-log-dir scheme would have done). */
-  private def publishStrict(spark: SparkSession, dir: String, v: Int,
-      mId: String, dId: Option[String], ts: Long): Unit =
-    if (!publish(spark, dir, v, 0, mId, dId, ts))
-      sys.error(s"version v$v already committed at $dir — a concurrent " +
-        "writer raced a single-writer commit path; use the OCC " +
-        "commit*Atomic variants for independent writers")
-
   /** Stage one commit's manifest rows as a parquet at a
     * contention-free id — fully written and closed BEFORE the pointer
     * that makes them visible can exist. Returns the manifest id. */
@@ -269,38 +258,6 @@ object VersionedShards {
     mId
   }
 
-  /** Data files of one staged subtree, as (shard, layout-relative
-    * path) — one bounded listing of the freshly-staged payload, never
-    * of the whole lake. */
-  private def listStagedFiles(spark: SparkSession, dir: String,
-      dId: String): Seq[(Int, String)] = {
-    val (fs, _) = hfs(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(s"$dir/d-$dId")
-    if (!fs.exists(root)) return Nil
-    fs.listStatus(root).toSeq
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("shard="))
-      .flatMap { d =>
-        val shard = d.getPath.getName.stripPrefix("shard=").toInt
-        fs.listStatus(d.getPath).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(f => shard -> s"d-$dId/shard=$shard/${f.getPath.getName}")
-      }
-  }
-
-  /** Stage a batch as a ShardExport landing (same md5 draw/shard
-    * purity, every file a sorted run) under a fresh `d-<id>/` subtree;
-    * returns the id and the staged add-set. A zero-row batch lands the
-    * schema-bearing empty marker (ShardExport's landedEmpty
-    * discipline) — zero add rows, but the subtree still anchors
-    * [[emptyMarker]]'s schema walk via the pointer's dId. */
-  private def stageShards(spark: SparkSession, batch: DataFrame,
-      keyCol: String, dir: String,
-      nShards: Int): (String, Seq[(Int, String)]) = {
-    enforceConstraints(spark, dir, batch)
-    val dId = newId()
-    ShardExport.writeShards(batch, keyCol, s"$dir/d-$dId", nShards)
-    (dId, listStagedFiles(spark, dir, dId))
-  }
 
   /** Manifest rows of the given commits as (shard, path, action,
     * version) — ONE pruned scan, version re-attached by a broadcast
@@ -414,14 +371,14 @@ object VersionedShards {
   }
 
   /** AUTO-CHECKPOINT cadence (round-16, the Delta
-    * `checkpointInterval` shape): every ingest commit whose version is
+    * `checkpointInterval` shape): every commit whose version is
     * a multiple of this triggers [[checkpoint]], so long histories
     * never regress to O(#versions) log reads without anyone calling
     * checkpoint() by hand. */
   val CheckpointEvery: Int = 10
 
-  /** Piggybacked on the ingest commit paths, AFTER the publish — a
-    * checkpoint failure must never fail a committed ingest (the commit
+  /** Piggybacked on every commit, AFTER the publish — a
+    * checkpoint failure must never fail a committed write (the commit
     * is already durable; the next multiple retries), and a lost x-V
     * race just means another writer checkpointed the same prefix. */
   private def maybeCheckpoint(spark: SparkSession, dir: String,
@@ -447,19 +404,178 @@ object VersionedShards {
       .flatMap { case (vv, seq) => readCommit(spark, dir, vv, seq).dId }
       .map(id => s"$dir/d-$id")
 
-  /** COMMIT a batch as the next version — the SINGLE-WRITER append
-    * (use [[commitAppendAtomic]] when independent writers race): stage
-    * payload + manifest, then one atomic publish at currentVersion+1.
-    * Returns the committed version. */
+  /** One commit, planned at `vRead`: the live files it supersedes
+    * (`removes`) and re-adds without landing bytes (`readds`,
+    * [[restoreTo]]); the rows it lands, carrying `shard` and `draw`
+    * (None = a LOG-ONLY commit, which still takes a version), with the
+    * landing's partition count, sort-only columns ahead of `draw`
+    * (optimize's Morton value) and parquet row-group size; and the
+    * shards whose winner ADDS conflict (`readShards`: None for a blind
+    * plan — append, compact, optimize; [[AnyShard]] for delete and
+    * restore, which read the whole snapshot). A winner that removed
+    * one of `removes` conflicts with every plan. */
+  private[graft] final case class Plan(
+      removes: Seq[(Int, String)] = Nil,
+      readds: Seq[(Int, String)] = Nil,
+      rows: Option[DataFrame] = None,
+      parts: Int = 1,
+      order: Seq[String] = Nil,
+      blockSize: Option[Int] = None,
+      readShards: Option[Int => Boolean] = None)
+
+  /** The read scope of a plan that read the whole snapshot. */
+  private val AnyShard: Option[Int => Boolean] = Some(_ => true)
+
+  /** LAND a plan's rows under a fresh `d-<id>/` with the ShardExport
+    * discipline: one hash shuffle on the shard, every file a sorted run
+    * on (shard, the plan's order, draw). Returns the id and the staged
+    * add-set as (shard, layout-relative path) — one bounded listing of
+    * the fresh subtree, never of the whole lake. Zero rows land
+    * ShardExport's schema-bearing empty marker instead: no add rows,
+    * but the subtree anchors [[emptyMarker]]'s schema walk via the
+    * pointer's dId. */
+  private def land(spark: SparkSession, dir: String, p: Plan,
+      rows: DataFrame): (String, Seq[(Int, String)]) = {
+    val dId = newId()
+    val w = rows.repartition(math.max(p.parts, 1), col("shard"))
+      .sortWithinPartitions((("shard" +: p.order) :+ "draw").map(col): _*)
+      .drop(p.order: _*)
+      .write.mode("overwrite").partitionBy("shard")
+    p.blockSize.fold(w)(b => w.option("parquet.block.size", b.toString))
+      .parquet(s"$dir/d-$dId")
+    val (fs, _) = hfs(spark, dir)
+    val root = new org.apache.hadoop.fs.Path(s"$dir/d-$dId")
+    val files = fs.listStatus(root).toSeq
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("shard="))
+      .flatMap { d =>
+        val shard = d.getPath.getName.stripPrefix("shard=").toInt
+        fs.listStatus(d.getPath).toSeq
+          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+          .map(f => shard -> s"d-$dId/shard=$shard/${f.getPath.getName}")
+      }
+    if (files.isEmpty)
+      rows.drop(p.order: _*).limit(0).coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/d-$dId")
+    (dId, files)
+  }
+
+  /** Stage a plan: land its rows, then write its manifest (removes,
+    * re-adds, landed files). Returns (manifest id, data id). */
+  private def stage(spark: SparkSession, dir: String,
+      p: Plan): (String, Option[String]) = {
+    val landed = p.rows.map(land(spark, dir, p, _))
+    val mId = stageManifest(spark, dir,
+      p.removes.map { case (s, f) => (s, f, "remove") } ++
+        (p.readds ++ landed.toSeq.flatMap(_._2))
+          .map { case (s, f) => (s, f, "add") })
+    (mId, landed.map(_._1))
+  }
+
+  /** Replans one commit may take before it gives up. */
+  private val MaxReplans = 8
+
+  /** THE COMMIT PATH of every version-allocating verb — the Delta OCC
+    * recipe, with the atomic pointer create playing the role of the
+    * atomic log-file write:
+    *
+    *  1. snapshot-read at vRead = currentVersion; `plan(vRead)` names
+    *     what the commit supersedes and what it lands;
+    *  2. STAGE the rows under a fresh `d-<id>/` and the manifest under
+    *     `_log/m-<id>/` — invisible until published;
+    *  3. VALIDATE the read-set against winners committed in
+    *     (vRead, vTry) where vTry = currentVersion+1 ([[conflicts]]) —
+    *     every such winner is COMPLETE, since version allocation is the
+    *     publish itself; on conflict, abandon the staged payload (GC
+    *     food) and REPLAN from the fresh snapshot;
+    *  4. PUBLISH at vTry with one atomic pointer create. A lost race
+    *     (another writer just committed vTry) loops back to 3 — the new
+    *     winner joins the validation set — without restaging.
+    *
+    * A lone writer meets no winner, so it commits at currentVersion+1
+    * on the first try; independent writers need no coordinator, and
+    * committed versions stay contiguous (a crash before publish leaves
+    * only invisible orphans, [[gcOrphans]] food). `plan` returning None
+    * = nothing to do (returns -1, no commit). NO LIVENESS CONTRACT:
+    * claim ≡ commit, so a writer stalled arbitrarily long between
+    * staging and publish simply lands later at a higher version with
+    * full validation against everything that landed meanwhile — slow
+    * can never be mistaken for crashed. Streaming's batchId-addressed
+    * [[commitAs]] must not share a layout with this path — it lands at
+    * FIXED versions without racing. Returns the committed version, or
+    * -1 for a planned no-op. */
+  private[graft] def commit(spark: SparkSession, dir: String,
+      ts: Long = -1L)(plan: Int => Option[Plan]): Int = {
+    var replans = 0
+    while (replans < MaxReplans) {
+      replans += 1
+      val vRead = currentVersion(spark, dir)
+      val p = plan(vRead) match {
+        case Some(p) => p
+        case None => return -1
+      }
+      val (mId, dId) = stage(spark, dir, p)
+      var vTry = currentVersion(spark, dir) + 1
+      while (!conflicts(spark, dir, p, vRead, vTry)) {
+        if (publish(spark, dir, vTry, 0, mId, dId, ts)) {
+          maybeCheckpoint(spark, dir, vTry)
+          return vTry
+        }
+        // a writer just took vTry — revalidate against it
+        vTry = currentVersion(spark, dir) + 1
+      }
+      // lost: the staged payload + manifest become GC-able orphans;
+      // replan against the new state
+    }
+    sys.error(s"commit: still conflicting after $MaxReplans replans at " +
+      s"$dir — rewrite storm")
+  }
+
+  /** Read-set validation: did any winner — a version committed in
+    * (vRead, vTry) — change state this plan depended on? Two conflict
+    * classes, both decided from LOG METADATA only (never a data read):
+    * a winner REMOVED one of our victim files (it rewrote rows we also
+    * rewrote), or a winner ADDED files in a shard the plan read
+    * (`readShards`): those files may hold rows the plan should have
+    * seen. A blind plan with nothing to remove skips the winners'
+    * manifests entirely — any free slot is serializable for it. Stops
+    * reading winners at the first conflict. */
+  private def conflicts(spark: SparkSession, dir: String, p: Plan,
+      vRead: Int, vTry: Int): Boolean =
+    (p.removes.nonEmpty || p.readShards.nonEmpty) && {
+      val victims = p.removes.map(_._2).toSet
+      val read = p.readShards.getOrElse((_: Int) => false)
+      // resolve names first, read the content of ONLY the (vRead, vTry)
+      // window's winners
+      winnerKeys(spark, dir)
+        .filter { case (v, _) => v > vRead && v < vTry }
+        .exists { case (v, seq) =>
+          val w = readCommit(spark, dir, v, seq)
+          spark.read.schema(logSchema).parquet(s"$dir/_log/m-${w.mId}")
+            .collect().exists { r =>
+              val a = r.getString(2)
+              (a == "remove" && victims(r.getString(1))) ||
+                (a == "add" && read(r.getInt(0)))
+            }
+        }
+    }
+
+  /** A batch as a blind append plan: ShardExport's md5 draw and shard
+    * assignment, one sorted run per shard. */
+  private def appendPlan(batch: DataFrame, keyCol: String,
+      nShards: Int): Plan =
+    Plan(rows = Some(ShardExport.withShardKey(batch, keyCol, nShards)),
+      parts = nShards)
+
+  /** COMMIT a batch as the next version — the append. Blind appends
+    * have an empty read-set, so racing appenders never conflict: each
+    * lands whole at the next free version, with no coordinator (the
+    * Delta OCC shape). A zero-row batch still commits, landing the
+    * schema-bearing empty marker. Returns the committed version. */
   def commitAppend(spark: SparkSession, batch: DataFrame, keyCol: String,
       dir: String, nShards: Int, ts: Long = -1L): Int = {
-    val (dId, files) = stageShards(spark, batch, keyCol, dir, nShards)
-    val mId = stageManifest(spark, dir,
-      files.map { case (s, p) => (s, p, "add") })
-    val v = currentVersion(spark, dir) + 1
-    publishStrict(spark, dir, v, mId, Some(dId), ts)
-    maybeCheckpoint(spark, dir, v)
-    v
+    enforceConstraints(spark, dir, batch)
+    val p = appendPlan(batch, keyCol, nShards)
+    commit(spark, dir, ts)(_ => Some(p))
   }
 
   /** [[commitAppend]] at a CALLER-CHOSEN version — the replay-
@@ -474,224 +590,13 @@ object VersionedShards {
     * payloads become [[gcOrphans]] food. */
   def commitAs(spark: SparkSession, batch: DataFrame, keyCol: String,
       dir: String, nShards: Int, v: Int, ts: Long = -1L): Int = {
-    val (dId, files) = stageShards(spark, batch, keyCol, dir, nShards)
-    val mId = stageManifest(spark, dir,
-      files.map { case (s, p) => (s, p, "add") })
+    enforceConstraints(spark, dir, batch)
+    val (mId, dId) = stage(spark, dir, appendPlan(batch, keyCol, nShards))
     var seq = pointerKeys(spark, dir).collect { case (`v`, s) => s }
       .foldLeft(-1)(math.max) + 1
-    while (!publish(spark, dir, v, seq, mId, Some(dId), ts)) seq += 1
+    while (!publish(spark, dir, v, seq, mId, dId, ts)) seq += 1
     maybeCheckpoint(spark, dir, v)
     v
-  }
-
-  /** OPTIMISTIC-CONCURRENCY append — the commit protocol that lets
-    * INDEPENDENT WRITERS ingest into one layout without a coordinator
-    * (the Delta OCC shape): stage payload + manifest ONCE, then try to
-    * publish at currentVersion+1; a failed atomic create means that
-    * version just committed under another writer, so retry one higher.
-    * Blind appends have an empty read-set, so any-slot-wins IS
-    * serializable — no conflict detection needed; rewrite commits
-    * (merge/delete/compact) additionally validate their read-set
-    * against the winners' changes — [[commitRewriteAtomic]]. A crash
-    * before publish leaves only invisible staged orphans
-    * ([[gcOrphans]]); committed versions stay contiguous. Returns the
-    * committed version. */
-  def commitAppendAtomic(spark: SparkSession, batch: DataFrame,
-      keyCol: String, dir: String, nShards: Int, ts: Long = -1L,
-      maxAttempts: Int = 64): Int = {
-    val (dId, files) = stageShards(spark, batch, keyCol, dir, nShards)
-    val mId = stageManifest(spark, dir,
-      files.map { case (s, p) => (s, p, "add") })
-    var tries = 0
-    while (tries < maxAttempts) {
-      tries += 1
-      val v = currentVersion(spark, dir) + 1
-      if (publish(spark, dir, v, 0, mId, Some(dId), ts)) {
-        maybeCheckpoint(spark, dir, v)
-        return v
-      }
-    }
-    sys.error(s"commitAppendAtomic: no free version after $maxAttempts " +
-      s"attempts at $dir — writer storm")
-  }
-
-  /** Read-set validation: did any winner — a version committed in
-    * (vRead, vTry) — change state this rewrite depended on? Two
-    * conflict classes, both decided from LOG METADATA only (never a
-    * data read): a winner REMOVED one of our victim files (it rewrote
-    * rows we also rewrote), or — for key/predicate-scoped rewrites —
-    * a winner ADDED files in a shard whose content we read
-    * (`conflictOnAdd`): those files may hold rows our plan should have
-    * seen. The winner set is COMPLETE by construction: versions are
-    * allocated by the atomic publish itself, so every version below
-    * the one we are about to take is fully committed — the settle
-    * wait (and its slow-equals-crashed misjudgment) the old two-phase
-    * claim needed no longer exists. Returns the first conflict. */
-  private def validateRewrite(spark: SparkSession, dir: String,
-      vRead: Int, vTry: Int, victims: Set[String],
-      conflictOnAdd: Int => Boolean): Option[String] = {
-    // runs inside the OCC retry loop: resolve names first, read the
-    // content of ONLY the (vRead, vTry) window's winners
-    val winners = winnerKeys(spark, dir)
-      .filter { case (v, _) => v > vRead && v < vTry }
-      .map { case (v, s) => readCommit(spark, dir, v, s) }
-    winners.iterator.flatMap { w =>
-      spark.read.schema(logSchema).parquet(s"$dir/_log/m-${w.mId}")
-        .collect()
-        .iterator.flatMap { r =>
-          val (s, p, a) = (r.getInt(0), r.getString(1), r.getString(2))
-          if (a == "remove" && victims(p))
-            Some(s"winner v${w.v} removed victim $p")
-          else if (a == "add" && conflictOnAdd(s))
-            Some(s"winner v${w.v} added files in read shard $s")
-          else None
-        }
-    }.nextOption()
-  }
-
-  /** A rewrite's landing set: the files it supersedes, the replacement
-    * rows (must carry `shard` and `draw`), and the partition count of
-    * the landing write. */
-  final case class RewritePlan(victims: Seq[(Int, String)],
-      replacement: DataFrame, parts: Int)
-
-  /** OPTIMISTIC-CONCURRENCY REWRITE — merge/delete/compact/optimize
-    * commits from INDEPENDENT writers, closing the single-writer
-    * limitation [[commitAppend]] documents. A rewrite has a non-empty
-    * read-set, so any-slot-wins is NOT enough; the protocol is the
-    * Delta OCC recipe, with the atomic pointer create playing the
-    * role of the atomic log-file write:
-    *
-    *  1. snapshot-read at vRead = currentVersion; `plan(vRead)` names
-    *     the victim files and computes the replacement rows;
-    *  2. STAGE replacement data under a fresh `d-<id>/` and the
-    *     manifest (removes of victims + adds) under `_log/m-<id>/` —
-    *     invisible until published;
-    *  3. VALIDATE the read-set against winners committed in
-    *     (vRead, vTry) where vTry = currentVersion+1
-    *     ([[validateRewrite]]) — every such winner is COMPLETE, since
-    *     version allocation is the publish itself; on conflict,
-    *     abandon the staged payload (GC food) and REPLAN from the
-    *     fresh snapshot;
-    *  4. PUBLISH at vTry with one atomic pointer create. A lost race
-    *     (another writer just committed vTry) loops back to 3 — the
-    *     new winner joins the validation set — without restaging.
-    *
-    * `plan` returning None = nothing to do (returns -1, no commit).
-    * NO LIVENESS CONTRACT: claim ≡ commit, so a writer stalled
-    * arbitrarily long between staging and publish simply lands later
-    * at a higher version with full validation against everything that
-    * landed meanwhile — slow can never be mistaken for crashed (the
-    * round-14 `settleMs` abandonment window is gone; its horizon
-    * survives only as [[gcOrphans]]' payload-GC age). Streaming's
-    * batchId-addressed [[commitAs]] must not share a layout with OCC
-    * rewrites — it lands at FIXED versions without racing.
-    * Returns the committed version, or -1 for a planned no-op. */
-  def commitRewriteAtomic(spark: SparkSession, dir: String,
-      conflictOnAdd: Int => Boolean, maxAttempts: Int = 8,
-      ts: Long = -1L)(
-      plan: Int => Option[RewritePlan]): Int = {
-    var tries = 0
-    while (tries < maxAttempts) {
-      tries += 1
-      val vRead = currentVersion(spark, dir)
-      plan(vRead) match {
-        case None => return -1
-        case Some(p) =>
-          val dId = newId()
-          p.replacement
-            .repartition(math.max(p.parts, 1), col("shard"))
-            .sortWithinPartitions(col("shard"), col("draw"))
-            .write.mode("overwrite").partitionBy("shard")
-            .parquet(s"$dir/d-$dId")
-          val victimSet = p.victims.map(_._2).toSet
-          val mId = stageManifest(spark, dir,
-            p.victims.map { case (s, pa) => (s, pa, "remove") } ++
-              listStagedFiles(spark, dir, dId)
-                .map { case (s, pa) => (s, pa, "add") })
-          var conflicted = false
-          while (!conflicted) {
-            val vTry = currentVersion(spark, dir) + 1
-            validateRewrite(spark, dir, vRead, vTry, victimSet,
-              conflictOnAdd) match {
-              case Some(_) =>
-                // lost: the staged payload + manifest become GC-able
-                // orphans; replan against the new state
-                conflicted = true
-              case None =>
-                if (publish(spark, dir, vTry, 0, mId, Some(dId), ts)) {
-                  maybeCheckpoint(spark, dir, vTry)
-                  return vTry
-                }
-              // else: a writer just took vTry — revalidate against it
-            }
-          }
-      }
-    }
-    sys.error(s"commitRewriteAtomic: still conflicting after " +
-      s"$maxAttempts replans at $dir — rewrite storm")
-  }
-
-  /** [[compactCommit]] under the OCC protocol: safe to race against
-    * concurrent appends AND other rewrites. Appends never conflict
-    * with a compaction (its read-set is exactly its victim files;
-    * winner-added runs stay live untouched), so `conflictOnAdd` is
-    * constant-false; a winner that removed one of our victims (another
-    * compaction, a merge, a delete) forces a replan. Returns
-    * (version, compacted shard ids) — (-1, Nil) when no shard exceeds
-    * the threshold at the final read. */
-  def compactCommitAtomic(spark: SparkSession, dir: String,
-      nShards: Int, maxRuns: Int = 1, maxAttempts: Int = 8,
-      ts: Long = -1L): (Int, Seq[Int]) = {
-    var shards: Seq[Int] = Nil
-    val v = commitRewriteAtomic(spark, dir, _ => false, maxAttempts,
-      ts) { vRead =>
-      val byShard = liveFiles(spark, dir, vRead).groupBy(_._1)
-      val toCompact = byShard.filter(_._2.size > maxRuns).keys.toSeq.sorted
-      shards = toCompact
-      if (toCompact.isEmpty) None
-      else {
-        val victims = toCompact.flatMap(s => byShard(s))
-        Some(RewritePlan(victims,
-          spark.read.parquet(victims.map(f => resolve(dir, f._2)): _*)
-            .withColumn("shard", ShardExport.shardOf(col("draw"), nShards)),
-          toCompact.length))
-      }
-    }
-    (v, if (v < 0) Nil else shards)
-  }
-
-  /** [[mergeCommit]] under the OCC protocol. The merge READS the
-    * touched shards' live content, so its read-set is shard-scoped:
-    * a winner's add in a touched shard conflicts (the added file may
-    * carry keys this merge should have upserted over), as does any
-    * winner removing a victim. An empty batch is a planned no-op
-    * (returns -1 — unlike [[mergeCommit]]'s log-only empty commit,
-    * there is nothing to make idempotent here). */
-  def mergeCommitAtomic(spark: SparkSession, batch: DataFrame,
-      keyCol: String, dir: String, nShards: Int, maxAttempts: Int = 8,
-      ts: Long = -1L): Int = {
-    enforceConstraints(spark, dir, batch)
-    val keyedBatch = ShardExport.withShardKey(batch, keyCol, nShards)
-    val touched = keyedBatch.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    commitRewriteAtomic(spark, dir, touched.contains, maxAttempts,
-      ts) { vRead =>
-      if (touched.isEmpty) None
-      else {
-        val victims = liveFiles(spark, dir, vRead).filter(f => touched(f._1))
-        val survivors =
-          if (victims.isEmpty) keyedBatch
-          else {
-            val keys = batch.select(col(keyCol)).distinct()
-            spark.read.parquet(victims.map(f => resolve(dir, f._2)): _*)
-              .withColumn("shard", ShardExport.shardOf(col("draw"), nShards))
-              .join(keys, Seq(keyCol), "left_anti")
-              .unionByName(keyedBatch)
-          }
-        Some(RewritePlan(victims, survivors, touched.size))
-      }
-    }
   }
 
   /** Commit timestamps, version-ordered, with the Delta-recipe
@@ -790,38 +695,46 @@ object VersionedShards {
     parts.reduceLeft(_.unionByName(_, allowMissingColumns = true))
   }
 
+  /** Runs a shard may hold before [[compactCommit]] rewrites it. */
+  private val MaxRuns = 1
+
+  /** [[compactCommit]]'s plan at `vRead`; None when no shard is over
+    * [[MaxRuns]]. Blind to appends — a winner's new runs stay live
+    * untouched — so only a winner that removed a victim conflicts. */
+  private[graft] def compactPlan(spark: SparkSession, dir: String,
+      nShards: Int)(vRead: Int): Option[Plan] = {
+    val byShard = liveFiles(spark, dir, vRead).groupBy(_._1)
+    val toCompact = byShard.filter(_._2.size > MaxRuns).keys.toSeq.sorted
+    if (toCompact.isEmpty) None
+    else {
+      val victims = toCompact.flatMap(s => byShard(s))
+      // one read of ONLY the victim files; shard re-derives from draw
+      // (pure function — the same value the log carries)
+      Some(Plan(removes = victims,
+        rows = Some(spark.read.parquet(victims.map(f => resolve(dir, f._2)): _*)
+          .withColumn("shard", ShardExport.shardOf(col("draw"), nShards))),
+        parts = toCompact.length))
+    }
+  }
+
   /** LOGICAL compaction commit: shards whose LIVE run count exceeds
-    * `maxRuns` get their live rows rewritten as one draw-ordered file
-    * in the next version; the superseded files are logged `remove`d
-    * but their bytes stay put — snapshots before the compaction keep
-    * reading them until [[vacuum]]. The rewrite job reads and shuffles
-    * ONLY the selected shards' rows (the q163 posture, made
-    * time-travel-safe). Returns (version, compacted shard ids);
-    * version -1 when nothing exceeds the threshold (no empty
-    * commits). */
-  def compactCommit(spark: SparkSession, dir: String, nShards: Int,
-      maxRuns: Int = 1): (Int, Seq[Int]) = {
-    val cur = currentVersion(spark, dir)
-    val live = liveFiles(spark, dir, cur)
-    val byShard = live.groupBy(_._1)
-    val toCompact = byShard.filter(_._2.size > maxRuns).keys.toSeq.sorted
-    if (toCompact.isEmpty) return (-1, Nil)
-    val v = cur + 1
-    val victims = toCompact.flatMap(s => byShard(s))
-    // one read of ONLY the victim files; shard re-derives from draw
-    // (pure function — the same value the log carries)
-    val dId = newId()
-    spark.read.parquet(victims.map(f => resolve(dir, f._2)): _*)
-      .withColumn("shard", ShardExport.shardOf(col("draw"), nShards))
-      .repartition(toCompact.length, col("shard"))
-      .sortWithinPartitions(col("shard"), col("draw"))
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(s"$dir/d-$dId")
-    val mId = stageManifest(spark, dir,
-      victims.map { case (s, p) => (s, p, "remove") } ++
-        listStagedFiles(spark, dir, dId).map { case (s, p) => (s, p, "add") })
-    publishStrict(spark, dir, v, mId, Some(dId), -1L)
-    (v, toCompact)
+    * one get their live rows rewritten as one draw-ordered file in the
+    * next version; the superseded files are logged `remove`d but their
+    * bytes stay put — snapshots before the compaction keep reading
+    * them until [[vacuum]]. The rewrite job reads and shuffles ONLY the
+    * selected shards' rows (the q163 posture, made time-travel-safe),
+    * and races concurrent appends and rewrites safely
+    * ([[compactPlan]]). Returns (version, compacted shard ids); version
+    * -1 when nothing exceeds the threshold (no empty commits). */
+  def compactCommit(spark: SparkSession, dir: String,
+      nShards: Int): (Int, Seq[Int]) = {
+    var planned: Option[Plan] = None
+    val v = commit(spark, dir) { vRead =>
+      planned = compactPlan(spark, dir, nShards)(vRead)
+      planned
+    }
+    if (v < 0) (-1, Nil)
+    else (v, planned.get.removes.map(_._1).distinct.sorted)
   }
 
   /** OPTIMIZE … ZORDER BY as a TRANSACTIONAL commit (the Delta
@@ -834,35 +747,31 @@ object VersionedShards {
     * reading byte-identically until [[vacuum]]. Data clustering
     * becomes just another commit: isolated, time-travelable, CDC-inert
     * (rows merely move between files — [[readChanges]] across it is
-    * EMPTY, suite-asserted). `zx`/`zy` must already be 0..255 ints
+    * EMPTY, suite-asserted). Like compaction it conflicts only with a
+    * winner that removed one of its victims; appends racing it stay
+    * live unclustered. `zx`/`zy` must already be 0..255 ints
     * (the [[ZOrderLayout.mortonTerms]] contract); `blockSize`
     * shrinks parquet row groups so test-scale files carry many —
     * production leaves the ~128 MB default. Returns (version,
-    * files rewritten). */
+    * files rewritten); (-1, 0) on an empty snapshot. */
   def optimizeCommit(spark: SparkSession, dir: String, nShards: Int,
       zx: org.apache.spark.sql.Column, zy: org.apache.spark.sql.Column,
       ts: Long = -1L, blockSize: Option[Int] = None): (Int, Int) = {
-    val cur = currentVersion(spark, dir)
-    val live = liveFiles(spark, dir, cur)
-    if (live.isEmpty) return (-1, 0)
-    val v = cur + 1
-    val clustered = spark.read.option("mergeSchema", "true")
-      .parquet(live.map(f => resolve(dir, f._2)): _*)
-      .withColumn("shard", ShardExport.shardOf(col("draw"), nShards))
-      .withColumn("_zx", zx).withColumn("_zy", zy)
-      .withColumn("_zv", expr(ZOrderLayout.mortonTerms("_zx", "_zy")))
-      .repartition(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("_zv"), col("draw"))
-      .drop("_zx", "_zy", "_zv")
-    val dId = newId()
-    val w = clustered.write.mode("overwrite").partitionBy("shard")
-    blockSize.fold(w)(b => w.option("parquet.block.size", b.toString))
-      .parquet(s"$dir/d-$dId")
-    val mId = stageManifest(spark, dir,
-      live.map { case (s, p) => (s, p, "remove") } ++
-        listStagedFiles(spark, dir, dId).map { case (s, p) => (s, p, "add") })
-    publishStrict(spark, dir, v, mId, Some(dId), ts)
-    (v, live.size)
+    var rewritten = 0
+    val v = commit(spark, dir, ts) { vRead =>
+      val live = liveFiles(spark, dir, vRead)
+      rewritten = live.size
+      if (live.isEmpty) None
+      else Some(Plan(removes = live,
+        rows = Some(spark.read.option("mergeSchema", "true")
+          .parquet(live.map(f => resolve(dir, f._2)): _*)
+          .withColumn("shard", ShardExport.shardOf(col("draw"), nShards))
+          .withColumn("_zx", zx).withColumn("_zy", zy)
+          .withColumn("_zv", expr(ZOrderLayout.mortonTerms("_zx", "_zy")))
+          .drop("_zx", "_zy")),
+        parts = nShards, order = Seq("_zv"), blockSize = blockSize))
+    }
+    (v, if (v < 0) 0 else rewritten)
   }
 
   /** SNAPSHOT DIFF as a metadata operation: the rows ADDED between
@@ -935,29 +844,55 @@ object VersionedShards {
     * history stays intact, every old snapshot keeps reading, and the
     * rollback is itself a version you can diff against or roll back
     * FROM — the table-format restore semantics (Delta RESTORE /
-    * Iceberg rollback). Re-added files must still exist on disk — a
-    * vacuum past `v` already reclaimed them, so the restore REFUSES
-    * loudly rather than committing a snapshot that cannot be read.
-    * Returns the new version. */
-  def restoreTo(spark: SparkSession, dir: String, v: Int): Int = {
-    val cur = currentVersion(spark, dir)
-    require(v >= 0 && v <= cur, s"restore target v$v outside [0, $cur]")
-    val want = liveFiles(spark, dir, v).toSet
-    val have = liveFiles(spark, dir, cur).toSet
-    val (fs, _) = hfs(spark, dir)
-    (want -- have).foreach { case (_, p) =>
-      require(fs.exists(new org.apache.hadoop.fs.Path(resolve(dir, p))),
-        s"restore to v$v needs vacuumed file $p — past the retention " +
-          "horizon")
+    * Iceberg rollback). The plan reads the whole current snapshot, so
+    * any winner's add forces a replan. Re-added files must still exist
+    * on disk — a vacuum past `v` already reclaimed them, so the restore
+    * REFUSES loudly rather than committing a snapshot that cannot be
+    * read. Returns the new version. */
+  def restoreTo(spark: SparkSession, dir: String, v: Int): Int =
+    commit(spark, dir) { vRead =>
+      require(v >= 0 && v <= vRead, s"restore target v$v outside [0, $vRead]")
+      val want = liveFiles(spark, dir, v).toSet
+      val have = liveFiles(spark, dir, vRead).toSet
+      val (fs, _) = hfs(spark, dir)
+      (want -- have).foreach { case (_, p) =>
+        require(fs.exists(new org.apache.hadoop.fs.Path(resolve(dir, p))),
+          s"restore to v$v needs vacuumed file $p — past the retention " +
+            "horizon")
+      }
+      Some(Plan(removes = (have -- want).toSeq.sortBy(_._2),
+        readds = (want -- have).toSeq.sortBy(_._2), readShards = AnyShard))
     }
-    val vNew = cur + 1
-    val mId = stageManifest(spark, dir,
-      (have -- want).toSeq.sortBy(_._2)
-        .map { case (s, p) => (s, p, "remove") } ++
-        (want -- have).toSeq.sortBy(_._2)
-          .map { case (s, p) => (s, p, "add") })
-    publishStrict(spark, dir, vNew, mId, None, -1L)
-    vNew
+
+  /** [[mergeCommit]]'s plan: the batch's touched shards are collected
+    * ONCE (≤ nShards values), then each `vRead` re-lands those shards.
+    * A winner's add in a touched shard conflicts (the added file may
+    * carry keys this merge should have upserted over). */
+  private[graft] def mergePlan(spark: SparkSession, batch: DataFrame,
+      keyCol: String, dir: String, nShards: Int): Int => Option[Plan] = {
+    val keyedBatch = ShardExport.withShardKey(batch, keyCol, nShards)
+    val touched = keyedBatch.select(col("shard")).distinct()
+      .collect().map(_.getInt(0)).toSet
+    vRead =>
+      // empty batch ⇒ empty merge: a LOG-ONLY commit (no data subtree
+      // at all — [[emptyMarker]] walks only dId-carrying pointers, so a
+      // schema-less commit can't poison it)
+      if (touched.isEmpty) Some(Plan())
+      else {
+        val victims = liveFiles(spark, dir, vRead).filter(f => touched(f._1))
+        val survivors =
+          if (victims.isEmpty) keyedBatch
+          else {
+            val keys = batch.select(col(keyCol)).distinct()
+            spark.read.parquet(victims.map(f => resolve(dir, f._2)): _*)
+              .withColumn("shard", ShardExport.shardOf(col("draw"), nShards))
+              .join(keys, Seq(keyCol), "left_anti")
+              .unionByName(keyedBatch)
+          }
+        // land ONLY the touched shards' new state
+        Some(Plan(removes = victims, rows = Some(survivors),
+          parts = touched.size, readShards = Some(touched)))
+      }
   }
 
   /** MERGE (upsert) a keyed batch into the current snapshot as the
@@ -974,48 +909,45 @@ object VersionedShards {
     * 100 TB with thousands of shards a small upsert touches a
     * handful). Untouched shards keep their exact files; superseded
     * victim files are logged `remove`d and stay on disk for old
-    * snapshots until [[vacuum]]. Returns the committed version. */
+    * snapshots until [[vacuum]]. Safe against concurrent writers
+    * ([[mergePlan]]'s read-set). Returns the committed version. */
   def mergeCommit(spark: SparkSession, batch: DataFrame, keyCol: String,
       dir: String, nShards: Int): Int = {
     enforceConstraints(spark, dir, batch)
-    val cur = currentVersion(spark, dir)
-    val keyedBatch = ShardExport.withShardKey(batch, keyCol, nShards)
-    // the batch's touched-shard set: one bounded distinct over the
-    // batch (batch-sized, driver-collected — ≤ nShards values)
-    val touched = keyedBatch.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val victims = liveFiles(spark, dir, cur).filter(f => touched(f._1))
-    val v = cur + 1
-    if (touched.isEmpty) {
-      // empty batch ⇒ empty merge: a LOG-ONLY no-op commit (no data
-      // subtree at all — [[emptyMarker]] walks only dId-carrying
-      // pointers, so a schema-less commit can't poison it).
-      publishStrict(spark, dir, v, stageManifest(spark, dir, Nil),
-        None, -1L)
-      return v
-    }
-    val survivors =
-      if (victims.isEmpty) keyedBatch
-      else {
-        val keys = batch.select(col(keyCol)).distinct()
-        spark.read.parquet(victims.map(f => resolve(dir, f._2)): _*)
-          .withColumn("shard", ShardExport.shardOf(col("draw"), nShards))
-          .join(keys, Seq(keyCol), "left_anti")
-          .unionByName(keyedBatch)
-      }
-    // land ONLY the touched shards' new state; same sorted-run write
-    // discipline as every landing path
-    val dId = newId()
-    survivors
-      .repartition(math.max(touched.size, 1), col("shard"))
-      .sortWithinPartitions(col("shard"), col("draw"))
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(s"$dir/d-$dId")
-    val mId = stageManifest(spark, dir,
-      victims.map { case (s, p) => (s, p, "remove") } ++
-        listStagedFiles(spark, dir, dId).map { case (s, p) => (s, p, "add") })
-    publishStrict(spark, dir, v, mId, Some(dId), -1L)
-    v
+    commit(spark, dir)(mergePlan(spark, batch, keyCol, dir, nShards))
+  }
+
+  /** [[deleteCommit]]'s plan at `vRead`. It reads the whole snapshot, so
+    * any winner's add conflicts (a rival may have landed a matching row);
+    * a predicate matching nothing plans a LOG-ONLY commit. */
+  private[graft] def deletePlan(spark: SparkSession, dir: String,
+      predicate: org.apache.spark.sql.Column, nShards: Int)(
+      vRead: Int): Option[Plan] = {
+    val live = liveFiles(spark, dir, vRead)
+    if (live.isEmpty) return Some(Plan(readShards = AnyShard))
+    // log paths are exactly `d-<id>/shard=<k>/<basename>` — the last
+    // three URI segments of `_metadata.file_path`. Basenames ALONE are
+    // not unique (one write task lands the same part-file name under
+    // several shard dirs), so the key keeps the partition segments.
+    def relOf(fp: String): String =
+      fp.split('/').takeRight(3).mkString("/")
+    val byRel = live.map { case (s, p) => relOf(p) -> ((s, p)) }.toMap
+    // mergeSchema: composes with schema-evolved lakes (a plain read
+    // would adopt one file's schema and silently drop evolved columns)
+    val matched = spark.read.option("mergeSchema", "true")
+      .parquet(live.map(f => resolve(dir, f._2)): _*)
+      .filter(predicate)
+      .select(col("_metadata.file_path").as("fp"))
+      .distinct().collect()
+      .map(r => relOf(r.getString(0)))
+    if (matched.isEmpty) return Some(Plan(readShards = AnyShard))
+    val victims = matched.toSeq.map(byRel).sortBy(_._2)
+    val survivors = spark.read.option("mergeSchema", "true")
+      .parquet(victims.map(f => resolve(dir, f._2)): _*)
+      .filter(not(coalesce(predicate, lit(false))))
+      .withColumn("shard", ShardExport.shardOf(col("draw"), nShards))
+    Some(Plan(removes = victims, rows = Some(survivors),
+      parts = victims.map(_._1).distinct.size, readShards = AnyShard))
   }
 
   /** Row-level DELETE with a FILE-PRUNED rewrite — the `DELETE WHERE`
@@ -1041,51 +973,8 @@ object VersionedShards {
     * Returns the committed version. */
   def deleteCommit(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column, nShards: Int,
-      ts: Long = -1L): Int = {
-    val cur = currentVersion(spark, dir)
-    val live = liveFiles(spark, dir, cur)
-    val v = cur + 1
-    if (live.isEmpty) {
-      publishStrict(spark, dir, v, stageManifest(spark, dir, Nil), None, ts)
-      return v
-    }
-    // log paths are exactly `v=<j>/shard=<k>/<basename>` — the last
-    // three URI segments of `_metadata.file_path`. Basenames ALONE are
-    // not unique (one write task lands the same part-file name under
-    // several shard dirs), so the key keeps the partition segments.
-    def relOf(fp: String): String =
-      fp.split('/').takeRight(3).mkString("/")
-    val byRel = live.map { case (s, p) => relOf(p) -> ((s, p)) }.toMap
-    // mergeSchema: composes with schema-evolved lakes (a plain read
-    // would adopt one file's schema and silently drop evolved columns)
-    val matched = spark.read.option("mergeSchema", "true")
-      .parquet(live.map(f => resolve(dir, f._2)): _*)
-      .filter(predicate)
-      .select(col("_metadata.file_path").as("fp"))
-      .distinct().collect()
-      .map(r => relOf(r.getString(0)))
-    if (matched.isEmpty) {
-      publishStrict(spark, dir, v, stageManifest(spark, dir, Nil), None, ts)
-      return v
-    }
-    val victims = matched.toSeq.map(byRel).sortBy(_._2)
-    val survivors = spark.read.option("mergeSchema", "true")
-      .parquet(victims.map(f => resolve(dir, f._2)): _*)
-      .filter(not(coalesce(predicate, lit(false))))
-      .withColumn("shard", ShardExport.shardOf(col("draw"), nShards))
-    val touchedShards = victims.map(_._1).distinct
-    val dId = newId()
-    survivors
-      .repartition(math.max(touchedShards.size, 1), col("shard"))
-      .sortWithinPartitions(col("shard"), col("draw"))
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(s"$dir/d-$dId")
-    val mId = stageManifest(spark, dir,
-      victims.map { case (s, p) => (s, p, "remove") } ++
-        listStagedFiles(spark, dir, dId).map { case (s, p) => (s, p, "add") })
-    publishStrict(spark, dir, v, mId, Some(dId), ts)
-    v
-  }
+      ts: Long = -1L): Int =
+    commit(spark, dir, ts)(deletePlan(spark, dir, predicate, nShards))
 
   /** ROW-LEVEL snapshot diff — the slow-path CDC arm [[readDiff]]'s
     * refusal points at: rows live as of `to` but not as of `from`,
@@ -1394,7 +1283,7 @@ object VersionedShards {
     * `_log/k-<name>` (the same [[atomicPublishFile]] primitive as
     * commits, so two writers racing ADD CONSTRAINT on one name collide
     * deterministically), and every INGEST commit path — append,
-    * fixed-version replay, OCC append, merge batch — evaluates the
+    * fixed-version replay, merge batch — evaluates the
     * active set over its incoming rows BEFORE staging: a violating
     * batch rejects the WHOLE commit (all-or-nothing, offending sample
     * in the error) and the layout is untouched. Rewrites that only
@@ -1435,7 +1324,7 @@ object VersionedShards {
     // commit log, so an ingest that read the constraint set BEFORE the
     // k-file existed can land violating rows between our snapshot read
     // and the publish above. Re-validate every version committed since
-    // the snapshot (an OCC-style loop like commitRewriteAtomic's); on
+    // the snapshot (an OCC-style loop like [[commit]]'s); on
     // violation the constraint retracts itself and fails loudly.
     // RESIDUAL window, documented: a writer that read the (empty)
     // constraint set before the k-file existed and is still staging
@@ -1542,7 +1431,9 @@ object VersionedShards {
       }
     val mId = stageManifest(spark, dstDir,
       live.map { case (s, p) => (s, resolve(srcQual, p), "add") })
-    publishStrict(spark, dstDir, 0, mId, dId, ts)
+    if (!publish(spark, dstDir, 0, 0, mId, dId, ts))
+      sys.error(s"clone target $dstDir already has a v0 — clone into a " +
+        "fresh layout")
     0
   }
 }

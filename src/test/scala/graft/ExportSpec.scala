@@ -741,6 +741,14 @@ class ExportSpec extends AnyFunSuite {
       .select("text").collect().map(_.getString(0))
     assert(v0texts.forall(_ != "revised content"),
       "merge mutated the historical snapshot")
+    // an EMPTY batch is a LOG-ONLY commit: it still takes the next
+    // version, lands no data subtree, and moves no file
+    val v2 = VersionedShards.mergeCommit(spark, batch.limit(0), "doc_id",
+      dir, 16)
+    assert(v2 == 2, s"empty merge did not take a version: $v2")
+    assert(VersionedShards.dataRootOf(spark, dir, 2).isEmpty,
+      "an empty merge landed a data subtree")
+    assert(VersionedShards.liveFiles(spark, dir, 2).toSet == afterFiles)
   }
 
   test("q178: delete removes exactly the matches, rewrites only match-holding files, NULL predicates survive") {
@@ -1355,12 +1363,12 @@ class ExportSpec extends AnyFunSuite {
     // before its atomic publish consumes no version at all — the next
     // atomic append lands at v0 and the history stays contiguous
     docs.limit(3).write.parquet(s"$dir/d-00000000000000cc")
-    val landed = VersionedShards.commitAppendAtomic(spark,
+    val landed = VersionedShards.commitAppend(spark,
       docs.limit(7), "doc_id", dir, 16)
     assert(landed == 0,
       s"a crashed stager consumed a version slot: landed at v$landed")
     assert(VersionedShards.readAsOf(spark, dir, 0).count() == 7)
-    val second = VersionedShards.commitAppendAtomic(spark,
+    val second = VersionedShards.commitAppend(spark,
       docs.filter(col("doc_id") >= 7 && col("doc_id") < 10), "doc_id",
       dir, 16)
     assert(second == 1)
@@ -1373,7 +1381,7 @@ class ExportSpec extends AnyFunSuite {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val versions = Await.result(Future.sequence((20L until 36L).map { i =>
-      Future(VersionedShards.commitAppendAtomic(spark,
+      Future(VersionedShards.commitAppend(spark,
         docs.filter(col("doc_id") === i), "doc_id", dir, 16))
     }), 5.minutes)
     assert(versions.toSet == (2 to 17).toSet,
@@ -1399,11 +1407,11 @@ class ExportSpec extends AnyFunSuite {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val appenders = (0 until 8).map { i =>
-      Future(VersionedShards.commitAppendAtomic(spark,
+      Future(VersionedShards.commitAppend(spark,
         docs.filter(col("doc_id") === (200L + i)), "doc_id", dir, 8))
     }
     val compactor = Future(
-      VersionedShards.compactCommitAtomic(spark, dir, 8))
+      VersionedShards.compactCommit(spark, dir, 8))
     val appended = Await.result(Future.sequence(appenders), 5.minutes)
     val (cv, cShards) = Await.result(compactor, 5.minutes)
     assert(cv >= 2 && cShards.nonEmpty, s"compaction never landed: $cv")
@@ -1420,26 +1428,6 @@ class ExportSpec extends AnyFunSuite {
     assert(got == want, "rows lost or duplicated across the race")
   }
 
-  /** A compaction-shaped [[VersionedShards.RewritePlan]] over `dir`'s
-    * multi-run shards — the in-test twin of compactCommitAtomic's
-    * internal plan, exposed so the conflict tests can inject rivals at
-    * the plan seam deterministically. */
-  private def planCompact(dir: String, nShards: Int)(vRead: Int)
-      : Option[graft.sinks.VersionedShards.RewritePlan] = {
-    import graft.sinks.VersionedShards
-    val byShard = VersionedShards.liveFiles(spark, dir, vRead).groupBy(_._1)
-    val multi = byShard.filter(_._2.size > 1).keys.toSeq.sorted
-    if (multi.isEmpty) None
-    else {
-      val victims = multi.flatMap(s => byShard(s))
-      Some(VersionedShards.RewritePlan(victims,
-        spark.read.parquet(victims.map(f => s"$dir/${f._2}"): _*)
-          .withColumn("shard",
-            ShardExport.shardOf(col("draw"), nShards)),
-        multi.length))
-    }
-  }
-
   test("OCC rewrite: a winner removing our victims forces a replan (compaction degrades to no-op)") {
     import graft.sinks.VersionedShards
     val docs = Tables.documents(spark, TestSpark.sf0001)
@@ -1454,10 +1442,9 @@ class ExportSpec extends AnyFunSuite {
     // polling and a settle window to stage this; claim ≡ commit makes
     // the race a plain sequential schedule)
     var plans = 0
-    val v = VersionedShards.commitRewriteAtomic(spark, dir,
-      _ => false) { vRead =>
+    val v = VersionedShards.commit(spark, dir) { vRead =>
       plans += 1
-      val p = planCompact(dir, 4)(vRead)
+      val p = VersionedShards.compactPlan(spark, dir, 4)(vRead)
       if (plans == 1) {
         assert(p.isDefined, "every shard should be at 2 runs")
         // rival compaction commits v2, removing the very victims this
@@ -1487,29 +1474,18 @@ class ExportSpec extends AnyFunSuite {
       "doc_id", dir, 4)
     val merged = docs.filter(col("doc_id") < 10)
       .withColumn("source", org.apache.spark.sql.functions.lit("merged"))
-    val keyedBatch = ShardExport.withShardKey(merged, "doc_id", 4)
-    val touched = keyedBatch.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    // the merge-shaped rewrite, with the rival injected at the plan
-    // seam: AFTER the merge snapshots v0 but BEFORE it publishes, a
-    // blind append lands doc 3 AGAIN in a shard the merge reads — an
+    val mergePlan = VersionedShards.mergePlan(spark, merged, "doc_id", dir, 4)
+    // the merge's own plan, with the rival injected at the plan seam:
+    // AFTER the merge snapshots v0 but BEFORE it publishes, a blind
+    // append lands doc 3 AGAIN in a shard the merge reads — an
     // unvalidated merge would leave doc 3 twice
     var plans = 0
-    val mv = VersionedShards.commitRewriteAtomic(spark, dir,
-      touched.contains) { vRead =>
+    val mv = VersionedShards.commit(spark, dir) { vRead =>
       plans += 1
       if (plans == 1)
         VersionedShards.commitAppend(spark,
           docs.filter(col("doc_id") === 3L), "doc_id", dir, 4)
-      val victims = VersionedShards.liveFiles(spark, dir, vRead)
-        .filter(f => touched(f._1))
-      val keys = merged.select(col("doc_id")).distinct()
-      val survivors = spark.read
-        .parquet(victims.map(f => s"$dir/${f._2}"): _*)
-        .withColumn("shard", ShardExport.shardOf(col("draw"), 4))
-        .join(keys, Seq("doc_id"), "left_anti")
-        .unionByName(keyedBatch)
-      Some(VersionedShards.RewritePlan(victims, survivors, touched.size))
+      mergePlan(vRead)
     }
     assert(plans == 2, "merge did not replan around the winner's add")
     assert(mv == 2, s"merge landed at the wrong version: $mv")
@@ -1522,6 +1498,39 @@ class ExportSpec extends AnyFunSuite {
     assert(fin.filter(col("doc_id") < 10 && col("source") === "merged")
       .count() == 10, "replanned merge lost its upserts")
     assert(fin.count() == 50)
+  }
+
+  test("OCC rewrite: delete validates winner ADDS anywhere — a matching row landed mid-flight is deleted too") {
+    import graft.sinks.VersionedShards
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+      .select(col("doc_id"), col("source"), col("lang"),
+        col("n_chars"), col("text"))
+    val dir = tmp("occ-del")
+    VersionedShards.commitAppend(spark, docs.filter(col("doc_id") < 50),
+      "doc_id", dir, 4)
+    val pred = col("doc_id") % 5 === 0
+    // the delete's own plan, with the rival injected at the plan seam:
+    // AFTER the delete snapshots v0 but BEFORE it publishes, a blind
+    // append lands a row the predicate matches — a delete that did not
+    // replan would publish over it and leave the row live
+    var plans = 0
+    val v = VersionedShards.commit(spark, dir) { vRead =>
+      plans += 1
+      if (plans == 1)
+        VersionedShards.commitAppend(spark,
+          docs.limit(1).withColumn("doc_id", lit(1000L)), "doc_id", dir, 4)
+      VersionedShards.deletePlan(spark, dir, pred, 4)(vRead)
+    }
+    assert(plans == 2, "delete did not replan around the winner's add")
+    assert(v == 2, s"delete landed at the wrong version: $v")
+    val fin = VersionedShards.readAsOf(spark, dir, v)
+    assert(fin.filter(coalesce(pred, lit(false))).count() == 0,
+      "a matching row committed mid-flight survived the delete")
+    assert(fin.count() == docs.filter(col("doc_id") < 50 &&
+      not(coalesce(pred, lit(false)))).count())
+    // the rival's own snapshot still holds its row
+    assert(VersionedShards.readAsOf(spark, dir, 1)
+      .filter(col("doc_id") === 1000L).count() == 1)
   }
 
   test("OCC rewrite: a slow-but-alive writer always lands — stalls can never be judged as crashes") {
@@ -1539,10 +1548,9 @@ class ExportSpec extends AnyFunSuite {
     // mid-flight (holding its plan) while TWO rivals commit, then
     // wakes and lands at the next version, validated against both.
     var plans = 0
-    val v = VersionedShards.commitRewriteAtomic(spark, dir,
-      _ => false) { vRead =>
+    val v = VersionedShards.commit(spark, dir) { vRead =>
       plans += 1
-      val p = planCompact(dir, 4)(vRead)
+      val p = VersionedShards.compactPlan(spark, dir, 4)(vRead)
       if (plans == 1) {
         VersionedShards.commitAppend(spark,
           docs.filter(col("doc_id") === 200L), "doc_id", dir, 4)
@@ -1552,8 +1560,8 @@ class ExportSpec extends AnyFunSuite {
       }
       p
     }
-    // appends never remove this plan's victims and a compaction has no
-    // conflictOnAdd read-set, so the stalled writer lands FIRST TRY at
+    // appends never remove this plan's victims and a compaction reads
+    // no shard's adds, so the stalled writer lands FIRST TRY at
     // the slot after the rivals — never abandoned, never replanned
     assert(plans == 1 && v == 4,
       s"slow writer failed to land cleanly: v=$v after $plans plans")
@@ -1592,7 +1600,7 @@ class ExportSpec extends AnyFunSuite {
     val dirty = docs.limit(2).unionByName(
       docs.limit(1).withColumn("n_chars", lit(-5L)))
     val rej = intercept[Exception] {
-      VersionedShards.commitAppendAtomic(spark, dirty, "doc_id", dir, 8)
+      VersionedShards.commitAppend(spark, dirty, "doc_id", dir, 8)
     }
     assert(rej.getMessage.contains("n_chars_nonneg"),
       s"wrong rejection: ${rej.getMessage}")
@@ -1606,7 +1614,7 @@ class ExportSpec extends AnyFunSuite {
     assert(v1 == 1)
     // a merge batch is enforced too
     val rejM = intercept[Exception] {
-      VersionedShards.mergeCommitAtomic(spark,
+      VersionedShards.mergeCommit(spark,
         docs.limit(1).withColumn("n_chars", lit(-1L)), "doc_id", dir, 8)
     }
     assert(rejM.getMessage.contains("n_chars_nonneg"))

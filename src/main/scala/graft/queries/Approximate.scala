@@ -238,44 +238,49 @@ object Approximate {
     * the deterministic, mergeable quantile structure (the q159 story
     * applied to q39's other half: where KLL/GK are engine-private,
     * equi-width bin counts are pure arithmetic both engines replay
-    * exactly). Two passes: exact per-group (min, max, n), then one
-    * hash agg into ≤ groups·bins cells; the estimate walks the 256-row
-    * cumulative per group to the ceil(q·n) rank (INTEGER ceil —
-    * (q·n+99) DIV 100, no float rank) and reports the bin midpoint.
-    * Bin counts ADD cell-wise, so partition partials ARE local
-    * histograms and the shuffle merges them — same mergeability as
-    * the CMS, suite-asserted. At 100 TB: two scans, constant state,
-    * error bounded by one bin width of the [min,max] span. */
-  def histQuantiles(vals: org.apache.spark.sql.DataFrame,
-      bins: Int = 256, qpcts: Seq[Int] = Seq(50, 90, 99))
+    * exactly). The [[graft.operators.Quantiles]] core under the
+    * oracle's bin formula: exact per-flag (min, max, n), one hash agg
+    * into ≤ groups·256 cells, and the rank walk to the ceil(q·n) rank
+    * (INTEGER ceil — (q·n+99) DIV 100, no float rank); the estimate is
+    * the bin midpoint `mn + ((eb + 0.5)·(mx − mn)) / 256.0`, the
+    * oracle's IEEE ops in the oracle's order. Bin counts ADD cell-wise,
+    * so partition partials ARE local histograms and the shuffle merges
+    * them — same mergeability as the CMS, suite-asserted. At 100 TB:
+    * two scans, constant state, error bounded by one bin width of the
+    * [min,max] span. Nulls are ignored (l_extendedprice is NOT NULL;
+    * the oracle's count(*) would put them in the top bin). */
+  def histEstimates(vals: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val s = vals.groupBy(col("flag")).agg(
-      min(col("v")).as("mn"), max(col("v")).as("mx"),
-      count(lit(1)).as("n"))
-    val h = vals.join(broadcast(s), "flag")
-      .withColumn("bin", when(col("mx") === col("mn"), lit(0)).otherwise(
-        least(lit(bins - 1),
-          floor((col("v") - col("mn")) * lit(bins)
-            / (col("mx") - col("mn"))).cast("int"))))
-      .groupBy(col("flag"), col("bin")).agg(count(lit(1)).as("c"))
-    val cum = h.withColumn("cum", sum(col("c")).over(
-      Window.partitionBy(col("flag")).orderBy(col("bin"))))
-      .select(col("flag").as("cflag"), col("bin"), col("cum"))
-    val qdf = vals.sparkSession
-      .createDataset(qpcts)(org.apache.spark.sql.Encoders.scalaInt)
-      .toDF("qpct")
-    s.crossJoin(broadcast(qdf))
-      .withColumn("tr", expr("(qpct * n + 99) DIV 100"))
-      .join(cum, col("cflag") === col("flag") && col("cum") >= col("tr"))
-      .groupBy(col("flag"), col("qpct"), col("n"), col("mn"), col("mx"))
-      .agg(min(col("bin")).as("est_bin"))
-      .withColumn("est", when(col("mx") === col("mn"), col("mn"))
-        .otherwise(col("mn")
-          + (col("est_bin") + lit(0.5)) * (col("mx") - col("mn"))
-            / lit(bins.toDouble)))
-      .select(col("flag").as("l_returnflag"), col("qpct"), col("n"),
-        col("est_bin"), col("est"))
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.operators.Quantiles
+    val (bins, qpcts) = (256, Seq(50, 90, 99)) // hard-coded in the oracle SQL
+    val groups = Quantiles.bounds(vals, Some("flag"), "v").filter(_.n > 0L)
+    val hist = if (groups.isEmpty) Map.empty[Any, IndexedSeq[(Long, Long)]]
+      else Quantiles.histogram(Quantiles.binned(vals, Some("flag"), "v",
+        groups) { (b, v) =>
+        val (mn, mx) = (b.mn.asInstanceOf[Double], b.mx.asInstanceOf[Double])
+        if (mx == mn) lit(0)
+        else least(lit(bins - 1),
+          floor((v - lit(mn)) * lit(bins) / lit(mx - mn)).cast("int"))
+      })
+    val rows = new java.util.ArrayList[Row]()
+    groups.foreach { b =>
+      val (mn, mx) = (b.mn.asInstanceOf[Double], b.mx.asInstanceOf[Double])
+      val trs = qpcts.map(q => (q * b.n + 99L) / 100L)
+      val at = Quantiles.rankBins(hist(b.key), trs)
+      qpcts.zip(trs).foreach { case (q, tr) =>
+        val eb = at(tr)._1.toInt
+        rows.add(Row(b.key, q, b.n, eb,
+          if (mx == mn) mn else mn + ((eb + 0.5) * (mx - mn)) / bins.toDouble))
+      }
+    }
+    vals.sparkSession.createDataFrame(rows, StructType(Seq(
+      StructField("l_returnflag", StringType),
+      StructField("qpct", IntegerType),
+      StructField("n", LongType),
+      StructField("est_bin", IntegerType),
+      StructField("est", DoubleType))))
   }
 
   /** q160 — histogram-quantile estimates (p50/p90/p99 of
@@ -283,7 +288,7 @@ object Approximate {
   val q160: Q = Q(
     "q160_hist_quantiles",
     run = { (spark, dir) =>
-      histQuantiles(Tables.lineitem(spark, dir)
+      histEstimates(Tables.lineitem(spark, dir)
         .select(col("l_returnflag").as("flag"),
           col("l_extendedprice").as("v")))
     },

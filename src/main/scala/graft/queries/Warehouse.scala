@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.operators.Quantiles
 
 /** Warehouse-maintenance operators: change-data-capture compaction into
   * SCD-2 validity intervals, and MERGE (upsert + delete) semantics —
@@ -579,9 +580,10 @@ object Warehouse {
     * the DECIMAL(38,0) cross products), so every output digit is
     * identical. */
   private[graft] def gainsFromCuts(scored: DataFrame,
-      cuts: DataFrame): DataFrame = {
+      cuts: Column): DataFrame = {
     val spark = scored.sparkSession
-    val byDecile = scored.crossJoin(broadcast(cuts))
+    val byDecile = scored
+      .crossJoin(broadcast(spark.range(1).select(cuts.as("cuts"))))
       .select(expr("size(filter(cuts, c -> c < score_cents))")
         .as("decile"), col("pos"))
       .groupBy(col("decile"))
@@ -601,247 +603,6 @@ object Warehouse {
           .as("lift_milli"))
   }
 
-  /** EXACT multi-percentile cuts at histogram cost (round 16, guide
-    * §1.2 "the distributed algorithm" + §2.3): bit-identical to
-    * `percentile(v, array(qs))` on a BIGINT column — replicates
-    * `PercentileBase.getPercentile` verbatim (verified against the
-    * Spark 4.1.2 bytecode): position = (N−1).toDouble·q; lowerKey /
-    * higherKey = the sorted-multiset elements at 1-based ranks
-    * floor(position)+1 / ceil(position)+1; result = lowerKey when the
-    * ranks or keys coincide, else
-    * (higher−position)·lowerKey + (position−lower)·higherKey — the
-    * same JVM ops in the same order, because the assembly runs ON the
-    * driver (bounded: ≤ `bins` histogram cells + ≤ 2·|qs| keys — the
-    * kmeans/bpeLearn bounded-collect contract, never data-sized).
-    *
-    * Why: Spark's `Percentile` is an ObjectHashAggregate whose state is
-    * a value→count OpenHashMap MERGED AT ONE REDUCER — 583 k distinct
-    * keys at sf0.1, the round-15 MEASURED 131×-at-100× adversarial
-    * cliff. This path replaces it with three codegen passes whose
-    * distributed state is constant: (1) min/max/count, (2) a
-    * `bins`-cell integer histogram (map-side combined — partials add
-    * cell-wise under ANY distinct growth), (3) row_number over ONLY the
-    * ≤ 2·|qs| candidate bins holding a target rank (≈ n·2|qs|/bins
-    * rows). Duplicate-skew caveat: one hot VALUE concentrates its bin,
-    * so pass 3 degrades toward a one-partition sort of that bin — still
-    * never worse than the old plan's global single-reducer map merge,
-    * and the exact-percentile outputs are unchanged either way.
-    * Returns the 1-row `cuts` array<double> in `qs` order (exactly what
-    * the old `percentile(...)` agg returned). */
-  private[graft] def exactPercentileCuts(scored: DataFrame, valueCol: String,
-      qs: Seq[Double], bins: Int = 8192): DataFrame = {
-    val spark = scored.sparkSession
-    val v = col(valueCol)
-    val st = scored.agg(min(v).as("mn"), max(v).as("mx"),
-      count(lit(1)).as("n")).head()
-    if (st.isNullAt(0) || st.getLong(2) == 0L)
-      return spark.range(1)
-        .select(lit(null).cast("array<double>").as("cuts"))
-    val mn = st.getLong(0); val mx = st.getLong(1); val n = st.getLong(2)
-    // PercentileBase.getPercentile replicated: (N−1) long→double, ×q
-    val positions = qs.map(q => (n - 1).toDouble * q)
-    val ranks: Seq[Long] = positions.flatMap(p =>
-      Seq(math.floor(p).toLong + 1L, math.ceil(p).toLong + 1L))
-      .distinct.sorted
-    val keyAt: Map[Long, Long] =
-      if (mn == mx) ranks.map(_ -> mn).toMap
-      else {
-        val binE = least(lit((bins - 1).toLong),
-          expr(s"(($valueCol - ${mn}L) * ${bins}L) DIV ${mx - mn}L"))
-        val hist = scored.select(binE.as("bin"))
-          .groupBy(col("bin")).agg(count(lit(1)).as("c"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
-        // rows in bins strictly before each bin (1-based global rank
-        // r lives in the first bin with start + count ≥ r)
-        var acc = 0L
-        val binStart = hist.map { case (b, c) =>
-          val s = acc; acc += c; (b, s, c)
-        }
-        val rankBin: Map[Long, Long] = ranks.map(r =>
-          r -> binStart.find { case (_, s, c) => s + c >= r }.get._1).toMap
-        val candBins = rankBin.values.toSeq.distinct.sorted
-        val startOf = binStart.map { case (b, s, _) => b -> s }.toMap
-        val startExpr = candBins.tail.foldLeft(
-          when(col("bin") === candBins.head, lit(startOf(candBins.head)))) {
-          (acc, b) => acc.when(col("bin") === b, lit(startOf(b)))
-        }
-        val w = Window.partitionBy(col("bin")).orderBy(v.asc)
-        scored.select(v, binE.as("bin"))
-          .filter(col("bin").isin(candBins: _*))
-          .withColumn("grank", row_number().over(w) + startExpr)
-          .filter(col("grank").isin(ranks: _*))
-          .collect().map(r => r.getLong(2) -> r.getLong(0)).toMap
-      }
-    val cuts = positions.map { pos =>
-      val lower = math.floor(pos).toLong
-      val higher = math.ceil(pos).toLong
-      val lowerKey = keyAt(lower + 1).toDouble
-      if (higher == lower) lowerKey
-      else {
-        val higherKey = keyAt(higher + 1).toDouble
-        if (higherKey == lowerKey) lowerKey
-        else (higher - pos) * lowerKey + (pos - lower) * higherKey
-      }
-    }
-    spark.range(1).select(array(cuts.map(lit(_)): _*).as("cuts"))
-  }
-
-  /** GROUPED exact percentiles over a DOUBLE column at histogram cost
-    * (round 17 — [[exactPercentileCuts]] generalized per group, the
-    * verdict-queued q45 recipe): bit-identical to
-    * `groupBy(g).agg(percentile(v, array(qs)), min(v), max(v))` when
-    * the grouping column is catalog-bounded (the caller contract — q45
-    * groups on l_returnflag's 3-value domain; every collect here is
-    * ≤ |groups|·bins histogram cells or ≤ |groups|·2·|qs| candidate
-    * keys, never data-sized).
-    *
-    * Replication contract, per group with n non-null values:
-    * position = (n−1)·q; lower/higher keys at 1-based multiset ranks
-    * floor(position)+1 / ceil(position)+1 under the DoubleType total
-    * order (the same order the window sort uses, so −0.0 < 0.0 and NaN
-    * sorts last); result = lowerKey when the ranks coincide or
-    * the keys compare equal under PRIMITIVE double == (PercentileBase
-    * compares boxed keys with Scala's cooperative numeric equality, so
-    * −0.0 == 0.0 short-circuits to lowerKey and NaN == NaN
-    * interpolates), else
-    * (higher−pos)·lowerKey + (pos−lower)·higherKey — the same JVM ops
-    * in the same order as `PercentileBase.getPercentile`.
-    *
-    * The per-group bin function floor((v−mn)/(mx−mn)·bins) is monotone
-    * non-decreasing in v (each IEEE step is correctly rounded and
-    * monotone), so per-bin counts + within-bin sorts reproduce exact
-    * multiset ranks; groups whose min/max carry identical bits skip the
-    * probe entirely (every key equals mn). Returns one entry per group:
-    * (key, cuts in qs order or null when the group has no non-null
-    * values, min, max). */
-  private[graft] def exactGroupedPercentilesDouble(df: DataFrame,
-      groupCol: String, valueCol: String, qs: Seq[Double],
-      bins: Int = 8192): Seq[(Any, Seq[Double], Any, Any)] = {
-    import java.lang.{Double => JDouble}
-    val g = col(groupCol); val v = col(valueCol)
-    def keyEq(c: org.apache.spark.sql.Column, key: Any) =
-      if (key == null) c.isNull else c === lit(key)
-    // pass 1: per-group bounds + non-null count (bounded collect)
-    val stats = df.groupBy(g)
-      .agg(min(v).as("mn"), max(v).as("mx"), count(v).as("nv"))
-      .collect()
-      .map(r => (r.get(0),
-        if (r.isNullAt(1)) Double.NaN else r.getDouble(1),
-        if (r.isNullAt(2)) Double.NaN else r.getDouble(2),
-        r.getLong(3)))
-    // a group is degenerate (every key == mn, answer mn for every cut)
-    // only when min/max carry identical bits AND that value is neither
-    // ±0.0 nor NaN: codegen min/max compare primitively, so −0.0/0.0
-    // mixes (and NaN mixes) can report equal bounds while the
-    // percentile agg still distinguishes the keys — those groups take
-    // the general path, whose NaN bin function degrades to ONE bin and
-    // the within-bin sort stays exact under the DoubleType total order
-    def degenerate(mn: Double, mx: Double): Boolean =
-      JDouble.doubleToLongBits(mn) == JDouble.doubleToLongBits(mx) &&
-        mn != 0.0 && !JDouble.isNaN(mn)
-    val general = stats.filter { case (_, mn, mx, n) =>
-      n > 0L && !degenerate(mn, mx)
-    }
-    val keyAt: Map[Any, Map[Long, Double]] = if (general.isEmpty) Map.empty
-    else {
-      def binOf(mn: Double, mx: Double) = {
-        // driver-side scale factor: multiply beats ANSI's throwing /0,
-        // and a ±Inf/NaN factor (zero-mix or NaN-bearing group) makes
-        // EVERY row's product NaN-or-constant → the nanvl/clamp below
-        // sends the whole group to one bin, where the within-bin sort
-        // is exact. Monotone non-decreasing in v for any factor ≥ 0.
-        val k = bins / (mx - mn)
-        least(lit((bins - 1).toDouble),
-          greatest(lit(0.0),
-            nanvl(floor((v - lit(mn)) * lit(k)), lit(0.0)))).cast("long")
-      }
-      val binE = general.tail.foldLeft(
-        when(keyEq(g, general.head._1), binOf(general.head._2, general.head._3))) {
-        (acc, gi) => acc.when(keyEq(g, gi._1), binOf(gi._2, gi._3))
-      }
-      val generalPred = general.map(gi => keyEq(g, gi._1))
-        .reduce(_ || _)
-      val withBin = df.filter(v.isNotNull && generalPred)
-        .select(g.as("gk"), v.as("vv"), binE.as("bin"))
-      // pass 2: per-(group, bin) histogram (≤ |groups|·bins cells)
-      val hist = withBin.groupBy(col("gk"), col("bin"))
-        .agg(count(lit(1)).as("c"))
-        .collect().map(r => (r.get(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1)
-      // per group: candidate bins + their start offsets + needed ranks
-      case class Probe(key: Any, ranks: Seq[Long], cands: Seq[Long],
-          startOf: Map[Long, Long])
-      val probes = general.map { case (key, _, _, n) =>
-        val positions = qs.map(q => (n - 1).toDouble * q)
-        val ranks = positions.flatMap(p =>
-          Seq(math.floor(p).toLong + 1L, math.ceil(p).toLong + 1L))
-          .distinct.sorted
-        var acc = 0L
-        val binStart = hist(key).sortBy(_._2).map { case (_, b, c) =>
-          val s = acc; acc += c; (b, s, c)
-        }
-        val rankBin = ranks.map(r =>
-          r -> binStart.find { case (_, s, c) => s + c >= r }.get._1).toMap
-        Probe(key, ranks, rankBin.values.toSeq.distinct.sorted,
-          binStart.map { case (b, s, _) => b -> s }.toMap)
-      }
-      // pass 3: exact keys at the needed ranks — sort ONLY candidate
-      // bins, offset each by its bin start (≈ n·2|qs|/bins rows sorted)
-      val candPred = probes.map(p =>
-        keyEq(col("gk"), p.key) && col("bin").isin(p.cands: _*))
-        .reduce(_ || _)
-      val kbStarts = probes.toSeq.flatMap(p =>
-        p.cands.map(b => (p.key, b, p.startOf(b))))
-      val startE = kbStarts.tail.foldLeft(
-        when(keyEq(col("gk"), kbStarts.head._1) &&
-          col("bin") === kbStarts.head._2, lit(kbStarts.head._3))) {
-        (acc, kb) =>
-          acc.when(keyEq(col("gk"), kb._1) && col("bin") === kb._2,
-            lit(kb._3))
-      }
-      val rankPred = probes.map(p =>
-        keyEq(col("gk"), p.key) && col("grank").isin(p.ranks: _*))
-        .reduce(_ || _)
-      val w = Window.partitionBy(col("gk"), col("bin"))
-        .orderBy(col("vv").asc)
-      withBin.filter(candPred)
-        .withColumn("grank", row_number().over(w) + startE)
-        .filter(rankPred)
-        .collect()
-        .map(r => (r.get(0), r.getLong(3), r.getDouble(1)))
-        .groupBy(_._1)
-        .map { case (k, rows) => k -> rows.map(t => t._2 -> t._3).toMap }
-    }
-    // driver-side interpolation — PercentileBase.getPercentile verbatim
-    stats.toSeq.map { case (key, mn, mx, n) =>
-      if (n == 0L) (key, null, null, null)
-      else {
-        val cuts =
-          if (degenerate(mn, mx)) qs.map(_ => mn)
-          else {
-            val at = keyAt(key)
-            qs.map { q =>
-              val pos = (n - 1).toDouble * q
-              val lower = math.floor(pos).toLong
-              val higher = math.ceil(pos).toLong
-              val lowerKey = at(lower + 1L)
-              if (higher == lower) lowerKey
-              else {
-                val higherKey = at(higher + 1L)
-                // primitive ==, NOT Double.compare: PercentileBase's
-                // `higherKey == lowerKey` is Scala cooperative numeric
-                // equality on boxed keys (−0.0 == 0.0 short-circuits to
-                // lowerKey; NaN == NaN interpolates)
-                if (higherKey == lowerKey) lowerKey
-                else (higher - pos) * lowerKey + (pos - lower) * higherKey
-              }
-            }
-          }
-        (key, cuts, mn: java.lang.Double, mx: java.lang.Double)
-      }
-    }
-  }
-
   val q233: Q = Q(
     "q233_gains_table",
     run = { (spark, dir) =>
@@ -851,15 +612,17 @@ object Warehouse {
       // relies on the engine's percentile semantics and DuckDB
       // `quantile_cont` producing bit-identical interpolants — both
       // compute the same IEEE interpolation over exact integer inputs
-      // (validated green on fixture + fuzz; since round 16 the Spark
-      // side is [[exactPercentileCuts]], pinned bit-identical to the
-      // `percentile` agg by WarehouseSpec), but a last-ulp formula
-      // divergence would flip a score lying exactly on a cut; the
-      // engine-independent alternative (exact integer lower+frac cut
-      // pairs) is the documented fallback.
-      val cuts = exactPercentileCuts(scored, "score_cents",
+      // (validated green on fixture + fuzz; the Spark side is
+      // [[graft.operators.Quantiles.exactCuts]], pinned bit-identical
+      // to the `percentile` agg by WarehouseSpec), but a last-ulp
+      // formula divergence would flip a score lying exactly on a cut;
+      // the engine-independent alternative (exact integer lower+frac
+      // cut pairs) is the documented fallback.
+      val Seq((_, cuts)) = Quantiles.exactCuts(scored, None, "score_cents",
         (1 to 9).map(_ / 10.0))
-      gainsFromCuts(scored, cuts)
+      gainsFromCuts(scored,
+        if (cuts == null) lit(null).cast("array<double>")
+        else array(cuts.map(lit(_)): _*))
     },
     oracle = Some("""
       WITH scored AS (
@@ -933,55 +696,31 @@ object Warehouse {
           AS repeat_ppm
       FROM per_cust GROUP BY 1"""))
 
-  /** HISTOGRAM decile cuts for [[q237]] — the q160 fixed-bin recipe as
-    * a cut SOURCE, all-integer: one exact (min, max, n) pass, one hash
-    * agg into ≤`bins` cells (counts ADD cell-wise, so partition
-    * partials ARE local histograms — constant state under ANY distinct
-    * growth, where exact `Percentile` merges a value→count map at one
-    * reducer), a ≤bins² broadcast triangle for the cumulative (never a
-    * partition-less window), and per-decile target ranks in integer
-    * ceil arithmetic. The cut value is the estimated bin's UPPER BOUND
-    * `mn + ((eb+1)·(mx−mn)) DIV bins` — integer DIV, no float anywhere,
-    * so the oracle replays every cut digit-by-digit. Returns the 1-row
-    * sorted 9-cut array the gains rollup broadcasts. */
-  private[graft] def histCuts(scored: DataFrame,
-      bins: Int = 256): DataFrame = {
-    val spark = scored.sparkSession
-    // Round 16 (guide §2.4): the old all-DataFrame formulation
-    // referenced the 1-row (mn,mx,n) agg twice and the ≤bins-cell
-    // histogram twice (the cumulative triangle), and Catalyst
-    // duplicated each subtree — the r16 before-plan carried 60
-    // Exchanges and re-scanned the scored stream for every reference.
-    // The histogram is bounded by the operator constant `bins`, so the
-    // cut ASSEMBLY (cumulative + target ranks + bin upper bounds) moves
-    // to the driver under the bounded-collect contract: two codegen
-    // scans total (stats + histogram), all-integer arithmetic
-    // replicated verbatim (nonneg Long / == SQL DIV), cut values
-    // digit-identical.
-    val st = scored.agg(min(col("score_cents")).as("mn"),
-      max(col("score_cents")).as("mx"), count(lit(1)).as("n")).head()
-    def out(cuts: Seq[Long]): DataFrame =
-      spark.range(1).select(
-        (if (cuts.isEmpty) array().cast("array<bigint>")
-         else array(cuts.map(lit(_)): _*)).as("cuts"))
-    if (st.isNullAt(0) || st.getLong(2) == 0L) return out(Seq.empty)
-    val mn = st.getLong(0); val mx = st.getLong(1); val n = st.getLong(2)
-    val hist: Seq[(Long, Long)] =
-      if (mn == mx) Seq(0L -> n)
-      else scored.select(least(lit((bins - 1).toLong),
-          expr(s"((score_cents - ${mn}L) * ${bins}L) DIV ${mx - mn}L"))
-          .as("bin"))
-        .groupBy(col("bin")).agg(count(lit(1)).as("c"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1))
-        .sortBy(_._1).toIndexedSeq
-    var acc = 0L
-    val cum = hist.map { case (b, c) => acc += c; (b, acc) }
-    val cuts = (1 to 9).map(_ * 10).map { qpct =>
-      val tr = (qpct * n + 99L) / 100L
-      val eb = cum.find(_._2 >= tr).get._1
-      mn + ((eb + 1L) * (mx - mn)) / bins
-    }.sorted
-    out(cuts)
+  /** HISTOGRAM decile cuts for [[q237]] on the
+    * [[graft.operators.Quantiles]] core, all-integer: the (min, max, n)
+    * pass, a 256-cell histogram under the oracle's bin formula
+    * `least(255, ((v − mn)·256) DIV (mx − mn))`, the rank walk to each
+    * decile's target rank in integer ceil arithmetic ((q·n+99) DIV
+    * 100, no float rank), and the cut at the estimated bin's UPPER
+    * BOUND `mn + ((eb+1)·(mx−mn)) DIV 256` — integer DIV, no float
+    * anywhere, so the oracle replays every cut digit-by-digit. Returns
+    * the sorted 9-cut literal array<bigint> (empty on empty input). */
+  private[graft] def histDecileCuts(scored: DataFrame): Column = {
+    val GainsBins = 256L // hard-coded in the oracle SQL
+    val Seq(b) = Quantiles.bounds(scored, None, "score_cents")
+    if (b.n == 0L) return array().cast("array<bigint>")
+    val (mn, mx) = (b.mn.asInstanceOf[Long], b.mx.asInstanceOf[Long])
+    val cuts = if (mn == mx) Seq.fill(9)(mn) else {
+      val hist = Quantiles.histogram(
+        Quantiles.binned(scored, None, "score_cents", Seq(b)) { (_, v) =>
+          least(lit(GainsBins - 1L),
+            call_function("div", (v - lit(mn)) * lit(GainsBins), lit(mx - mn)))
+        })(null)
+      val ranks = (1 to 9).map(d => (d * 10 * b.n + 99L) / 100L)
+      val at = Quantiles.rankBins(hist, ranks)
+      ranks.map(r => mn + ((at(r)._1 + 1L) * (mx - mn)) / GainsBins).sorted
+    }
+    array(cuts.map(lit(_)): _*)
   }
 
   /** q237 — GAINS TABLE FROM HISTOGRAM CUTS: q233's rollup on the
@@ -991,8 +730,9 @@ object Warehouse {
     * and on round-16's degraded window it KILLED the JVM outright
     * (driver heartbeat death mid-merge at 60 M distinct) — while this
     * histogram cut source holds constant state (256 integer cells,
-    * mergeable by addition) at the price of bin-granular cut
-    * placement: the round-16 A/B (BASELINE.md round-16, q237) measured
+    * mergeable by addition — [[histDecileCuts]] on the
+    * [[graft.operators.Quantiles]] core) at the price of bin-granular
+    * cut placement: the round-16 A/B (BASELINE.md round-16, q237) measured
     * 2.2× at 10× and 89.4× at 100× adversarial distinct — row-bound
     * ~linear scan scaling with NO distinct-growth term, on the same
     * window where the exact path died. Same scored stream, same
@@ -1003,7 +743,7 @@ object Warehouse {
     "q237_gains_hist",
     run = { (spark, dir) =>
       val scored = scoredLines(spark, dir)
-      gainsFromCuts(scored, histCuts(scored))
+      gainsFromCuts(scored, histDecileCuts(scored))
     },
     oracle = Some("""
       WITH scored AS (

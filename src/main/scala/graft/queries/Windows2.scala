@@ -54,23 +54,23 @@ object Windows2 {
     * last ObjectHashAggregate whose state is a value→count map merged
     * per group key (~190k distinct prices per flag at sf0.1 — the same
     * single-reducer cliff q233 hit at 100×); the cuts now come from
-    * [[Warehouse.exactGroupedPercentilesDouble]] — three codegen passes
+    * [[graft.operators.Quantiles.exactCuts]] — three codegen passes
     * with constant distributed state (per-group bounds, a bins-cell
     * histogram, a rank-pruned candidate sort), pinned bit-identical to
-    * the agg by WarehouseSpec. min/max ride the recipe's first pass. */
+    * the agg by WarehouseSpec. min/max ride the first pass. */
   val q45: Q = Q(
     "q45_percentiles",
     run = { (spark, dir) =>
-      val res = Warehouse.exactGroupedPercentilesDouble(
+      val res = graft.operators.Quantiles.exactCuts(
         Tables.lineitem(spark, dir)
           .select(col("l_returnflag"), col("l_extendedprice")),
-        "l_returnflag", "l_extendedprice", Seq(0.25, 0.5, 0.75))
+        Some("l_returnflag"), "l_extendedprice", Seq(0.25, 0.5, 0.75))
       val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      res.foreach { case (key, cuts, lo, hi) =>
-        rows.add(org.apache.spark.sql.Row(key,
+      res.foreach { case (b, cuts) =>
+        rows.add(org.apache.spark.sql.Row(b.key,
           if (cuts == null) null else cuts(0),
           if (cuts == null) null else cuts(1),
-          if (cuts == null) null else cuts(2), lo, hi))
+          if (cuts == null) null else cuts(2), b.mn, b.mx))
       }
       spark.createDataFrame(rows, StructType(Seq(
         StructField("l_returnflag", StringType),

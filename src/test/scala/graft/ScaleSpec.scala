@@ -241,6 +241,17 @@ class ScaleSpec extends AnyFunSuite {
     assert(merged == binsOf(vals))
   }
 
+  test("q160 assembly: a constant group and a one-row group estimate mn from bin 0") {
+    val rows = queries.Approximate.histEstimates(
+      (Seq.fill(3)(("A", 7.5)) :+ ("B", 2.25)).toDF("flag", "v"))
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2),
+        r.getInt(3), r.getDouble(4))).sortBy(r => (r._1, r._2)).toSeq
+    // mx == mn: bin 0, est = mn, for every qpct
+    assert(rows == Seq(("A", 50, 3L, 0, 7.5), ("A", 90, 3L, 0, 7.5),
+      ("A", 99, 3L, 0, 7.5), ("B", 50, 1L, 0, 2.25), ("B", 90, 1L, 0, 2.25),
+      ("B", 99, 1L, 0, 2.25)))
+  }
+
   test("q161: linear-count estimates at least the occupied cells and tracks truth at fixture load factors") {
     val rows = queries.Approximate.q161.run(spark, TestSpark.sf0001)
       .collect()

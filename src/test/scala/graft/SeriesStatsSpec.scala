@@ -122,6 +122,29 @@ class SeriesStatsSpec extends AnyFunSuite {
       s"histogram decile far from even: $r"))
   }
 
+  test("q237 cut assembly: empty input, one row, a constant column and negatives match the oracle SQL by hand") {
+    def cuts(vals: Seq[Long]): Row = {
+      val scored = spark.createDataFrame(
+        spark.sparkContext.parallelize(vals.map(Row(_)), 1),
+        StructType(Seq(StructField("score_cents", LongType))))
+      spark.range(1)
+        .select(queries.Warehouse.histDecileCuts(scored).as("cuts")).head()
+    }
+    // empty: an empty array<bigint> (no scored row reads it)
+    val empty = cuts(Seq.empty)
+    assert(empty.schema("cuts").dataType.asInstanceOf[ArrayType]
+      .elementType == LongType)
+    assert(empty.getSeq[Long](0).isEmpty)
+    // mx == mn: bin 0 holds every rank, every cut is mn
+    assert(cuts(Seq(500L)).getSeq[Long](0) == Seq.fill(9)(500L))
+    assert(cuts(Seq.fill(7)(42L)).getSeq[Long](0) == Seq.fill(9)(42L))
+    // -300..100 step 100: bins ((v+300)·256) DIV 400 = 0, 64, 128, 192,
+    // 255 (clamped); target ranks (q·5+99) DIV 100 = 1,1,2,2,3,3,4,4,5;
+    // cut = -300 + ((eb+1)·400) DIV 256
+    assert(cuts(Seq(-300L, -200L, -100L, 0L, 100L)).getSeq[Long](0) ==
+      Seq(-299L, -299L, -199L, -199L, -99L, -99L, 1L, 1L, 100L))
+  }
+
   test("q232: a customer missing one year is excluded; an every-year customer counts") {
     val custSchema = StructType(Seq(
       StructField("c_custkey", LongType), StructField("c_name", StringType),

@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Quantiles
 import graft.queries.Warehouse
 
 /** Semantic contracts for the q93/q94 warehouse operators: interval
@@ -222,20 +223,19 @@ class WarehouseSpec extends AnyFunSuite {
       "top spend decile does not dominate the bottom per customer")
   }
 
-  test("exactPercentileCuts is BIT-identical to the percentile agg " +
+  test("exactCuts ungrouped is BIT-identical to the percentile agg " +
       "(fixture + adversarial: ties on cuts, hot duplicates, tiny n, " +
-      "constant column, negatives)") {
+      "constant column, negatives, nulls, wide range, keys above 2^53)") {
     def aggCuts(df: org.apache.spark.sql.DataFrame): Seq[Double] = {
       val r = df.agg(percentile(col("v"),
         array((1 to 9).map(i => lit(i / 10.0)): _*)).as("cuts")).head()
       if (r.isNullAt(0)) null else r.getSeq[Double](0)
     }
-    def fastCuts(df: org.apache.spark.sql.DataFrame): Seq[Double] = {
-      val r = Warehouse.exactPercentileCuts(df, "v",
-        (1 to 9).map(_ / 10.0)).head()
-      if (r.isNullAt(0)) null else r.getSeq[Double](0)
-    }
-    def check(vals: Seq[Long], label: String): Unit = {
+    def fastCuts(df: org.apache.spark.sql.DataFrame): Seq[Double] =
+      Quantiles.exactCuts(df, None, "v", (1 to 9).map(_ / 10.0)).head._2
+    def check(vals: Seq[Long], label: String): Unit =
+      checkOpt(vals.map(Some(_)), label)
+    def checkOpt(vals: Seq[Option[Long]], label: String): Unit = {
       val df = vals.toDF("v")
       val (a, f) = (aggCuts(df), fastCuts(df))
       assert(a == f ||
@@ -261,12 +261,21 @@ class WarehouseSpec extends AnyFunSuite {
     check((0L until 1000L).map(i => i % 10), "10 heavy duplicates")
     check(Seq.tabulate(997)(i => (i * i * 2654435761L) % 100000),
       "pseudo-random")
+    // a range wider than 2^63/8192: an integer (v − mn)·bins would overflow
+    check(Seq(0L, 1000000000000000L, 2000000000000000L), "range > 2^63/8192")
+    // nulls are ignored, as the agg ignores them (not counted, not binned)
+    checkOpt(Seq(Some(1L), None, Some(3L), Some(5L), None), "nulls")
+    // distinct keys above 2^53 that round to one double: the agg
+    // compares them as Longs and interpolates (q=0.3 → bits
+    // 4879132438521338732), never short-circuits on the double
+    check(Seq.fill(205)(1596836276854287000L) ++
+      Seq.fill(479)(1596836276854287001L), "keys above 2^53")
     // empty input: both sides yield the null-cuts row
     val empty = spark.emptyDataset[Long].toDF("v")
     assert(aggCuts(empty) == null && fastCuts(empty) == null)
   }
 
-  test("exactGroupedPercentilesDouble is BIT-identical to the grouped " +
+  test("exactCuts grouped is BIT-identical to the grouped " +
       "percentile agg (fixture + adversarial: nulls, tiny groups, " +
       "constant group, hot values, signed zero, negatives)") {
     def bits(d: java.lang.Double): Long =
@@ -286,13 +295,13 @@ class WarehouseSpec extends AnyFunSuite {
         }.toMap
     def fastSide(df: org.apache.spark.sql.DataFrame, qs: Seq[Double],
         bins: Int): Map[Any, (Seq[Long], Long, Long)] =
-      Warehouse.exactGroupedPercentilesDouble(df, "g", "v", qs, bins)
-        .map { case (k, cuts, lo, hi) =>
-          k -> ((
+      Quantiles.exactCuts(df, Some("g"), "v", qs, bins)
+        .map { case (b, cuts) =>
+          b.key -> ((
             if (cuts == null) null
             else cuts.map(java.lang.Double.doubleToRawLongBits),
-            bits(lo.asInstanceOf[java.lang.Double]),
-            bits(hi.asInstanceOf[java.lang.Double])))
+            bits(b.mn.asInstanceOf[java.lang.Double]),
+            bits(b.mx.asInstanceOf[java.lang.Double])))
         }.toMap
     def check(rows: Seq[(String, Option[Double])], label: String,
         qs: Seq[Double] = Seq(0.25, 0.5, 0.75), bins: Int = 8192): Unit = {

@@ -9,31 +9,34 @@ import graft.{Q, Tables}
   * opaque `binary` columns with typed metadata; decode/feature-extract
   * runs batched per partition.
   *
-  * Four containers get REAL decoders — BMP (header parse → pixel stats
-  * + nearest-neighbor luminance thumbnail), WAV (chunk walk → PCM
-  * sample stats + envelope thumbnail), PNG (chunk walk → zlib inflate
-  * via JDK Inflater → the five standard scanline unfilters → pixel
-  * stats + thumbnail), and GIF (LZW variable-width bit decode of the
-  * first frame + real frame count) — all dependency-free: raw header
-  * math plus java.util.zip, no codec library. Baseline JPEG decodes for
-  * real too, and the three video/audio containers (mp4/ogg/webm) get
-  * REAL metadata walks; only codec-bound frame/sample decode routes
-  * through the labeled STUB — this container ships no codecs, and the
-  * stub keeps the contract (bytes in, fixed-width features out) so a
-  * real decoder drops in without touching the plan.
+  * Decoders only decode; features are computed in two places. Every
+  * image path (BMP, AVI raw-DIB and MJPEG, PNG, GIF, JPEG) hands its
+  * decoded frames to [[imageFeatures]] (pixel histogram, mean, 4x4
+  * luminance thumbnail), and both PCM paths (WAV, PCM-in-mp4) hand a
+  * sample accessor to [[pcmFeatures]] (amplitude histogram, DC mean,
+  * 16-segment envelope). PNG pixels come from the JDK's
+  * `javax.imageio` reader, which matches the former hand decoder
+  * byte-for-byte; BMP, WAV, GIF's LZW and [[Jpeg]] stay hand-written
+  * (each decoder's doc says why). The three video/audio containers
+  * (mp4/ogg/webm) get REAL metadata walks; only codec-bound
+  * frame/sample decode routes through the labeled STUB — this
+  * container ships no codecs, and the stub keeps the contract (bytes
+  * in, fixed-width features out) so a real decoder drops in without
+  * touching the plan.
   *
   * The fixtures have no binary table, so document text bytes stand in as
   * the payload (cast string→binary), exactly as an image-bytes column
-  * would arrive from parquet; real BMP/WAV payloads are exercised in the
+  * would arrive from parquet; every real decoder is exercised in the
   * suite with exact-value assertions against independently-computed
-  * pixel/PCM stats.
+  * pixel/PCM stats, and in q34 through [[syntheticMediaPayloads]].
   */
 object Multimodal {
 
   /** Typed row for the feature-extraction stage. Common fields carry
     * whole-payload stats; `width`/`height`/`channels`/`sample_rate`/
-    * `mean_signal` are REAL decoded values for bmp/wav and zeros for
-    * stub formats. `thumb` is a fixed 16-byte downsample (4x4 luminance
+    * `mean_signal` are REAL decoded values for the decoded containers
+    * (container metadata for the mp4/ogg/webm/AVI metadata tiers) and
+    * zeros for stub formats. `thumb` is a fixed 16-byte downsample (4x4 luminance
     * grid for images, 16-segment envelope for audio, byte stride for
     * stubs); `n_frames` is the real frame count where decodable. */
   final case class MediaFeatures(
@@ -103,13 +106,43 @@ object Multimodal {
     else "unknown"
   }
 
-  // little-endian header readers (BMP and WAV are both LE formats)
+  // Byte-order readers shared by every container walk: the RIFF family
+  // (BMP, WAV, AVI), GIF and Ogg are little-endian, ISO-BMFF and PNG
+  // big-endian. `be32` is unsigned (a Long), so a size field compares
+  // without sign games; callers narrow with `.toInt` where the field is
+  // a signed 32-bit value.
   private def u16(p: Array[Byte], off: Int): Int =
     (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
   private def i32(p: Array[Byte], off: Int): Int =
     (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8) |
       ((p(off + 2) & 0xff) << 16) | ((p(off + 3) & 0xff) << 24)
+  private def le64(p: Array[Byte], off: Int): Long =
+    (i32(p, off) & 0xffffffffL) | (i32(p, off + 4).toLong << 32)
+  private def be16(p: Array[Byte], off: Long): Int =
+    ((p(off.toInt) & 0xff) << 8) | (p(off.toInt + 1) & 0xff)
+  private def be32(p: Array[Byte], off: Long): Long =
+    (be16(p, off).toLong << 16) | be16(p, off + 2)
+  private def be64(p: Array[Byte], off: Long): Long =
+    (be32(p, off) << 32) | be32(p, off + 4)
 
+  /** Adds the 16-bin (top-nibble) histogram of `data` into `histo` and
+    * returns the byte sum — the one byte-statistics loop behind every
+    * image feature and the stub's whole-payload stats. */
+  private def byteHisto(data: Array[Byte], histo: Array[Long]): Long = {
+    var sum = 0L
+    var i = 0
+    while (i < data.length) {
+      val b = data(i) & 0xff
+      histo(b >> 4) += 1
+      sum += b
+      i += 1
+    }
+    sum
+  }
+
+  /** `mean_byte` of a decoded payload: a plain sum, not [[byteHisto]] —
+    * the discarded histogram made this whole-payload pass, which every
+    * decoder runs, about 3x slower (measured on a 49 KB BMP). */
   private def meanByteOf(p: Array[Byte]): Double =
     if (p.isEmpty) 0.0
     else {
@@ -118,17 +151,135 @@ object Multimodal {
       s.toDouble / p.length
     }
 
+  /** The one image-feature kernel. `frames` are decoded pixel buffers,
+    * each `w`·`h` pixels of `channels` interleaved bytes, top-down, in
+    * gray / gray+alpha / RGB / RGBA band order. `histo16` and
+    * `mean_signal` cover every byte of every frame; `thumb` is the
+    * first frame's 4x4 nearest-neighbor luminance grid — pixel
+    * (tx·w/4, ty·h/4) per cell, the gray band itself for 1–2 channels,
+    * integer Rec.601 luma otherwise. */
+  private def imageFeatures(docId: Long, format: String, p: Array[Byte],
+      frames: Seq[Array[Byte]], w: Int, h: Int, channels: Int,
+      nFrames: Int, sampleRate: Int): MediaFeatures = {
+    val histo = new Array[Long](16)
+    var sum = 0L
+    var n = 0L
+    frames.foreach { f => sum += byteHisto(f, histo); n += f.length }
+    val f0 = frames.head
+    val thumb = new Array[Byte](16)
+    var ty = 0
+    while (ty < 4) {
+      var tx = 0
+      while (tx < 4) {
+        val base = ((ty * h / 4) * w + tx * w / 4) * channels
+        thumb(ty * 4 + tx) =
+          (if (channels <= 2) f0(base) & 0xff
+           else (77 * (f0(base) & 0xff) + 150 * (f0(base + 1) & 0xff) +
+             29 * (f0(base + 2) & 0xff)) >> 8).toByte
+        tx += 1
+      }
+      ty += 1
+    }
+    MediaFeatures(docId, format, p.length, meanByteOf(p), p.take(4),
+      histo, thumb, nFrames, w, h, channels, sampleRate,
+      if (n == 0) 0.0 else sum.toDouble / n)
+  }
+
+  /** `n` signed PCM samples from `off` — 8-bit unsigned (centered on
+    * 0) or 16-bit signed, little- or big-endian — the one sample decoder
+    * behind WAV and PCM-in-mp4. The caller has bounded the span. */
+  private def pcmSamples(p: Array[Byte], off: Int, n: Int, bits: Int,
+      bigEndian: Boolean): Array[Int] = {
+    val out = new Array[Int](n)
+    var j = 0
+    while (j < n) {
+      out(j) =
+        if (bits == 8) (p(off + j) & 0xff) - 128
+        else if (bigEndian) (p(off + 2 * j) << 8) | (p(off + 2 * j + 1) & 0xff)
+        else (p(off + 2 * j + 1) << 8) | (p(off + 2 * j) & 0xff)
+      j += 1
+    }
+    out
+  }
+
+  /** The one PCM-feature kernel over decoded signed samples of `bits`
+    * (8 or 16) width: (`histo16` — the amplitude histogram over the
+    * full signed range, `thumb` — a 16-segment mean-|amplitude|
+    * envelope scaled to bytes, `mean_signal` — the DC mean). The
+    * samples come decoded ([[pcmSamples]]), so both passes are plain
+    * array loops rather than a per-sample call into the container's
+    * sample format. */
+  private def pcmFeatures(samples: Array[Int],
+      bits: Int): (Array[Long], Array[Byte], Double) = {
+    val nSamples = samples.length
+    val histo = new Array[Long](16)
+    var sum = 0L
+    var j = 0
+    while (j < nSamples) {
+      val v = samples(j)
+      sum += v
+      // shift to [0, 2^16) then take the top 4 bits → 16 bins
+      val u = if (bits == 8) (v + 128) << 8 else v + 32768
+      histo(u >> 12) += 1
+      j += 1
+    }
+    val thumb = new Array[Byte](16)
+    var t = 0
+    while (t < 16) {
+      val s0 = (t.toLong * nSamples / 16).toInt
+      val s1 = ((t + 1).toLong * nSamples / 16).toInt
+      var acc = 0L
+      var k = s0
+      while (k < s1) { acc += math.abs(samples(k)); k += 1 }
+      val m = if (s1 > s0) acc / (s1 - s0) else 0L
+      thumb(t) =
+        (if (bits == 8) math.min(255L, m << 1)
+         else math.min(255L, m >> 7)).toByte
+      t += 1
+    }
+    (histo, thumb, if (nSamples == 0) 0.0 else sum.toDouble / nSamples)
+  }
+
+  /** The one DIB row walker (BMP and the AVI raw-DIB tier): `height`
+    * stored rows of `width` pixels at `bytesPerPx` (1 = gray, 3/4 =
+    * BGR(A)), each padded to 4 bytes, become the interleaved top-down
+    * gray / RGB(A) buffer [[imageFeatures]] reads. `bottomUp` (a
+    * positive biHeight) stores the last image row first. The caller
+    * has bounded `off + rowSize·height` by the payload. */
+  private def dibPixels(p: Array[Byte], off: Int, width: Int, height: Int,
+      bytesPerPx: Int, bottomUp: Boolean): Array[Byte] = {
+    val rowSize = (((8L * bytesPerPx * width + 31) / 32) * 4).toInt
+    val out = new Array[Byte](width * height * bytesPerPx)
+    val rowBytes = width * bytesPerPx
+    var y = 0
+    while (y < height) {
+      val s = off + (if (bottomUp) height - 1 - y else y) * rowSize
+      val o = y * rowBytes
+      System.arraycopy(p, s, out, o, rowBytes)
+      // BGR(A) → RGB(A): B and R trade places
+      var i = 0
+      while (bytesPerPx > 1 && i < rowBytes) {
+        out(o + i) = p(s + i + 2); out(o + i + 2) = p(s + i)
+        i += bytesPerPx
+      }
+      y += 1
+    }
+    out
+  }
+
   /** REAL BMP decode: BITMAPINFOHEADER parse + raw pixel math for
     * uncompressed (BI_RGB) 8/24/32-bpp payloads — width/height/channels
-    * from the header, `mean_signal` the mean over all pixel channel
-    * bytes, `histo16` the pixel-byte histogram (header and row padding
-    * excluded — unlike the stub's whole-file stats), and `thumb` a 4x4
-    * nearest-neighbor luminance grid (integer Rec.601 luma; BMP rows are
-    * stored bottom-up for positive heights, so sampling flips). Returns
-    * None on structural violations (truncation, unsupported bpp,
-    * compressed) — the caller falls back to the stub rather than
-    * throwing, because at 100 TB a crawl WILL contain truncated files
-    * and one bad row must not kill a 1000-executor stage. */
+    * from the header, pixel bytes through [[dibPixels]] (header and row
+    * padding excluded — unlike the stub's whole-file stats; rows are
+    * stored bottom-up for positive heights) into [[imageFeatures]]; an
+    * 8-bpp payload reports its raw index bytes as one gray channel.
+    * The header checks stay hand-written: they bound every size by the
+    * payload before anything is allocated, so a hostile header
+    * degrades instead of allocating. Returns None on structural
+    * violations (truncation, unsupported bpp, compressed) — the caller
+    * falls back to the stub rather than throwing, because at 100 TB a
+    * crawl WILL contain truncated files and one bad row must not kill a
+    * 1000-executor stage. */
   def decodeBmp(docId: Long, p: Array[Byte]): Option[MediaFeatures] = {
     if (p.length < 54) return None
     val dataOffset = i32(p, 10)
@@ -150,66 +301,23 @@ object Multimodal {
     if (rowSizeL > p.length || height.toLong > p.length) return None
     if (dataOffset < 54 ||
       dataOffset.toLong + rowSizeL * height > p.length) return None
-    val rowSize = rowSizeL.toInt // safe: bounded by p.length above
-    val histo = new Array[Long](16)
-    var sum = 0L
-    var n = 0L
-    var row = 0
-    while (row < height) {
-      val base = dataOffset + row * rowSize
-      var x = 0
-      while (x < width) {
-        var c = 0
-        while (c < bytesPerPx) {
-          val b = p(base + x * bytesPerPx + c) & 0xff
-          histo(b >> 4) += 1
-          sum += b
-          n += 1
-          c += 1
-        }
-        x += 1
-      }
-      row += 1
-    }
-    val thumb = new Array[Byte](16)
-    var ty = 0
-    while (ty < 4) {
-      var tx = 0
-      while (tx < 4) {
-        val iy = ty * height / 4
-        val ix = tx * width / 4
-        val storedRow = if (heightRaw > 0) height - 1 - iy else iy
-        val px = dataOffset + storedRow * rowSize + ix * bytesPerPx
-        val lum =
-          if (bytesPerPx == 1) p(px) & 0xff
-          else {
-            // pixel order is BGR(A)
-            val b = p(px) & 0xff
-            val g = p(px + 1) & 0xff
-            val r = p(px + 2) & 0xff
-            (29 * b + 150 * g + 77 * r) >> 8
-          }
-        thumb(ty * 4 + tx) = lum.toByte
-        tx += 1
-      }
-      ty += 1
-    }
-    Some(MediaFeatures(docId, "bmp", p.length, meanByteOf(p), p.take(4),
-      histo, thumb, 1, width, height,
-      if (bpp == 8) 1 else bytesPerPx, 0,
-      if (n == 0) 0.0 else sum.toDouble / n))
+    val px = dibPixels(p, dataOffset, width, height, bytesPerPx,
+      bottomUp = heightRaw > 0)
+    Some(imageFeatures(docId, "bmp", p, Seq(px), width, height, bytesPerPx,
+      nFrames = 1, sampleRate = 0))
   }
 
   /** REAL WAV decode: RIFF chunk walk (word-aligned) to the `fmt ` and
     * `data` chunks, then raw PCM sample math for 8-bit (unsigned) and
     * 16-bit (signed LE) integer PCM — channels/sample rate from the
-    * header, `n_frames` the real per-channel frame count, `mean_signal`
-    * the mean sample value (DC offset — ~0 for real audio), `histo16`
-    * the 16-bin amplitude histogram over the full signed range, and
-    * `thumb` a 16-segment mean-|amplitude| envelope scaled to bytes.
-    * None on structural violations (no fmt/data chunk, compressed
-    * format tag, truncation — including a `data` chunk whose declared
-    * size overruns the payload) — caller falls back to the stub. */
+    * header, `n_frames` the real per-channel frame count, the sample
+    * statistics from [[pcmFeatures]]. Stays hand-written:
+    * `javax.sound.sampled` reads a `data` chunk that declares more bytes
+    * than the payload holds (measured: 1,000 declared, 16 present),
+    * where this walk reports `wav_corrupt`. None on structural
+    * violations (no fmt/data chunk, compressed format tag, truncation —
+    * including a `data` chunk whose declared size overruns the payload)
+    * — caller falls back to the stub. */
   def decodeWav(docId: Long, p: Array[Byte]): Option[MediaFeatures] = {
     if (p.length < 12) return None
     // Long offsets: a corrupt chunk size near Int.MaxValue would wrap an
@@ -245,55 +353,27 @@ object Multimodal {
     if (!fmtOk || dataOff < 0) return None
     val bytesPerSample = bits / 8
     val nSamples = dataLen / bytesPerSample
-    // signed sample value at index j (8-bit WAV is unsigned, centered)
-    def sample(j: Int): Int =
-      if (bits == 8) (p(dataOff + j) & 0xff) - 128
-      else (p(dataOff + 2 * j + 1) << 8) | (p(dataOff + 2 * j) & 0xff)
-    val histo = new Array[Long](16)
-    var sum = 0L
-    var j = 0
-    while (j < nSamples) {
-      val v = sample(j)
-      sum += v
-      // shift to [0, 2^16) then take the top 4 bits → 16 bins
-      val u = if (bits == 8) (v + 128) << 8 else v + 32768
-      histo(u >> 12) += 1
-      j += 1
-    }
-    val thumb = new Array[Byte](16)
-    if (nSamples > 0) {
-      var t = 0
-      while (t < 16) {
-        val s0 = (t.toLong * nSamples / 16).toInt
-        val s1 = ((t + 1).toLong * nSamples / 16).toInt
-        var acc = 0L
-        var k = s0
-        while (k < s1) { acc += math.abs(sample(k)); k += 1 }
-        val m = if (s1 > s0) acc / (s1 - s0) else 0L
-        thumb(t) =
-          (if (bits == 8) math.min(255L, m << 1)
-           else math.min(255L, m >> 7)).toByte
-        t += 1
-      }
-    }
+    // 8-bit WAV is unsigned, 16-bit signed little-endian
+    val (histo, thumb, mean) = pcmFeatures(
+      pcmSamples(p, dataOff, nSamples, bits, bigEndian = false), bits)
     Some(MediaFeatures(docId, "wav", p.length, meanByteOf(p), p.take(4),
-      histo, thumb, nSamples / channels, 0, 0, channels, sampleRate,
-      if (nSamples == 0) 0.0 else sum.toDouble / nSamples))
+      histo, thumb, nSamples / channels, 0, 0, channels, sampleRate, mean))
   }
 
   /** REAL AVI decode for UNCOMPRESSED video (round-10 verdict item 7 —
     * raising the codec-bound floor where JDK-only allows): the RIFF
     * chunk walk the WAV decoder already does, extended with LIST
     * recursion (hdrl→avih, strl→strh/strf, movi→'##db' frames), plus
-    * the BMP decoder's bottom-up padded-row pixel math applied per
-    * frame when the video stream is BI_RGB 24-bpp DIB.
+    * the BMP decoder's DIB row walker ([[dibPixels]]) applied per frame
+    * when the video stream is BI_RGB 24-bpp DIB.
     *
     * Three tiers, all REAL:
     *  - raw-DIB streams (biCompression=0, 24 bpp): full pixel decode —
     *    n_frames = '##db' chunk count, channels=3, mean_signal / histo16
     *    over every frame's pixel bytes (row padding excluded), thumb =
     *    the first frame's 4x4 luminance grid, sample_rate = fps from
-    *    avih's dwMicroSecPerFrame;
+    *    avih's dwMicroSecPerFrame; rows are bottom-up for a positive
+    *    biHeight and top-down for a negative one, as in BMP;
     *  - MJPEG streams (biCompression='MJPG'): every '##dc' chunk is a
     *    complete baseline JPEG decoded through [[Jpeg]] — same outputs
     *    as the raw-DIB tier, stats over the decoded RGB bytes; a frame
@@ -375,37 +455,18 @@ object Multimodal {
         val d0 = ds.head
         if (d0.width > 0 && d0.height > 0 && ds.forall(d =>
             d.width == d0.width && d.height == d0.height &&
-              d.channels == d0.channels)) {
-          val histo = new Array[Long](16)
-          var sum = 0L
-          var n = 0L
-          ds.foreach { d =>
-            var i = 0
-            while (i < d.rgb.length) {
-              val b = d.rgb(i) & 0xff
-              histo(b >> 4) += 1
-              sum += b
-              n += 1
-              i += 1
-            }
-          }
-          val thumb = lumaThumb(d0.width, d0.height, (sx, sy) => {
-            val base = (sy * d0.width + sx) * d0.channels
-            if (d0.channels == 1) d0.rgb(base) & 0xff
-            else luma601(d0.rgb(base) & 0xff, d0.rgb(base + 1) & 0xff,
-              d0.rgb(base + 2) & 0xff)
-          })
-          return Some(MediaFeatures(docId, "avi", p.length, meanByteOf(p),
-            p.take(4), histo, thumb, ds.size, d0.width, d0.height,
-            d0.channels, fps,
-            if (n == 0) 0.0 else sum.toDouble / n))
-        }
+              d.channels == d0.channels))
+          return Some(imageFeatures(docId, "avi", p, ds.map(_.rgb),
+            d0.width, d0.height, d0.channels, ds.size, fps))
       }
     }
     val decodable = bihOk && compression == 0 && bpp == 24 &&
       width > 0 && height > 0 && frames.nonEmpty && {
+        // bound each factor by the payload first (as in decodeBmp), so the
+        // product cannot wrap and the decoded frames fit in p.length bytes
         val rowSize = ((24L * width + 31) / 32) * 4
-        frames.forall { case (_, _, s, e) => e - s >= rowSize * height }
+        rowSize <= p.length && height <= p.length &&
+          frames.forall { case (_, _, s, e) => e - s >= rowSize * height }
       }
     if (!decodable) {
       // container metadata is still REAL — the mp4-meta tier
@@ -418,209 +479,131 @@ object Multimodal {
           if (fps > 0) (frames.size + dcFrames.size).toDouble / fps
           else 0.0))
     }
-    val rowSize = (((24L * width + 31) / 32) * 4).toInt
-    val histo = new Array[Long](16)
-    var sum = 0L
-    var n = 0L
-    frames.foreach { case (_, _, s, _) =>
-      var row = 0
-      while (row < height) {
-        val base = s.toInt + row * rowSize
-        var x = 0
-        while (x < width * 3) {
-          val b = p(base + x) & 0xff
-          histo(b >> 4) += 1
-          sum += b
-          n += 1
-          x += 1
-        }
-        row += 1
-      }
+    val pixels = frames.map { case (_, _, s, _) =>
+      dibPixels(p, s.toInt, width, height, 3, bottomUp = h > 0)
     }
-    // thumb: first frame's 4x4 luminance; DIB rows store bottom-up
-    val f0 = frames.head._3.toInt
-    val thumb = new Array[Byte](16)
-    var ty = 0
-    while (ty < 4) {
-      var tx = 0
-      while (tx < 4) {
-        val iy = ty * height / 4
-        val ix = tx * width / 4
-        val px = f0 + (height - 1 - iy) * rowSize + ix * 3
-        val b = p(px) & 0xff
-        val g = p(px + 1) & 0xff
-        val r = p(px + 2) & 0xff
-        thumb(ty * 4 + tx) = ((29 * b + 150 * g + 77 * r) >> 8).toByte
-        tx += 1
-      }
-      ty += 1
-    }
-    Some(MediaFeatures(docId, "avi", p.length, meanByteOf(p), p.take(4),
-      histo, thumb, frames.size, width, height, 3, fps,
-      if (n == 0) 0.0 else sum.toDouble / n))
+    Some(imageFeatures(docId, "avi", p, pixels, width, height, 3,
+      frames.size, fps))
   }
 
-  // big-endian reader — PNG is the one big-endian container here
-  private def i32be(p: Array[Byte], off: Int): Int =
-    ((p(off) & 0xff) << 24) | ((p(off + 1) & 0xff) << 16) |
-      ((p(off + 2) & 0xff) << 8) | (p(off + 3) & 0xff)
-
-  /** REAL PNG decode — no codec library: the chunk walk, zlib inflate
-    * (java.util.zip.Inflater, JDK-only), and the five standard scanline
-    * unfilters (None/Sub/Up/Average/Paeth) are all raw byte math.
-    * Supports the 8-bit-depth non-interlaced profiles (gray,
-    * gray+alpha, RGB, RGBA); width/height/channels from IHDR,
-    * `mean_signal`/`histo16` over the UNFILTERED pixel channel bytes
-    * (the decode-dependent numbers a stub cannot fake), `thumb` the 4x4
-    * nearest-neighbor luminance grid (integer Rec.601; PNG pixel order
-    * is RGB, top-down — no BMP-style flip). None on structural
-    * violations — truncated chunk table, inflate error or short stream,
-    * unsupported profile, or an inflation that would exceed the 64 MiB
-    * zip-bomb cap — and the caller falls back to the labeled stub, so a
-    * hostile payload degrades instead of killing the stage. */
-  /** Rec.601 integer luminance — the one formula all three image
-    * decoders share for their 4x4 thumbnails. */
-  @inline private def luma601(r: Int, g: Int, b: Int): Int =
-    (77 * r + 150 * g + 29 * b) >> 8
-
-  /** 16-bin histogram + byte sum over a decoded pixel buffer (PNG and
-    * JPEG; GIF's palette-indexed loop has its own validity check). */
-  private def byteHisto(data: Array[Byte]): (Array[Long], Long) = {
-    val histo = new Array[Long](16)
-    var sum = 0L
-    var i = 0
-    while (i < data.length) {
-      val b = data(i) & 0xff
-      histo(b >> 4) += 1
-      sum += b
-      i += 1
-    }
-    (histo, sum)
-  }
-
-  /** 4x4 luminance thumbnail by stride sampling: pixel (tx·w/4, ty·h/4)
-    * per cell, luminance supplied by the format's accessor. */
-  private def lumaThumb(w: Int, h: Int, lumAt: (Int, Int) => Int): Array[Byte] = {
-    val thumb = new Array[Byte](16)
-    var ty = 0
-    while (ty < 4) {
-      var tx = 0
-      while (tx < 4) {
-        thumb(ty * 4 + tx) = lumAt(tx * w / 4, ty * h / 4).toByte
-        tx += 1
-      }
-      ty += 1
-    }
-    thumb
-  }
-
+  /** REAL PNG decode — pixels from the JDK's `javax.imageio` PNG reader
+    * behind a hand chunk walk. The walk keeps its gates in front of the
+    * reader: the whole chunk table must fit, IHDR must be the first
+    * chunk, 13 bytes and the only one (the reader decodes from the
+    * first IHDR, so the cap must check that one), the IDATs must be one
+    * consecutive run, as the PNG spec requires (the reader's stream
+    * stops at the first other chunk), the profile is 8-bit
+    * non-interlaced gray, gray+alpha, RGB or RGBA, and an image whose
+    * filtered scanlines would inflate past 64 MiB is rejected as a zip
+    * bomb before any allocation. The reader runs over a
+    * `MemoryCacheImageInputStream` — `ImageIO.read(InputStream)` would
+    * cache through temp files on the executor — and exactly IHDR's
+    * channel count of bands is read, because the reader adds an alpha
+    * band when a `tRNS` chunk is present. Measured against the former
+    * hand inflater + unfilter decoder over 1–4 channels, widths
+    * 1/2/5/17, heights 1/3/8 and all five filter types: identical
+    * pixels; the reader throws wherever that decoder rejected
+    * (truncated deflate stream, filter type 7, short stream). Features
+    * through [[imageFeatures]] (PNG pixel order is RGB, top-down). None
+    * on any of those violations — the caller falls back to the labeled
+    * stub, so a hostile payload degrades instead of killing the stage. */
   def decodePng(docId: Long, p: Array[Byte]): Option[MediaFeatures] = {
     if (p.length < 8 + 25) return None
     var off = 8L // past the 8-byte signature (already sniffed)
     var w = 0; var h = 0; var bitDepth = 0; var colorType = -1
     var interlace = -1; var ihdrOk = false; var ended = false
-    val idat = new java.io.ByteArrayOutputStream()
+    var idatBytes = 0L
+    var idatRun = 0 // 0 before the IDAT run, 1 inside it, 2 past it
     while (!ended && off + 8 <= p.length) {
       val o = off.toInt
-      val len = i32be(p, o)
-      if (len < 0) return None
-      // the whole chunk, CRC included, must fit (Long math: a hostile
-      // len near Int.MaxValue must not wrap the cursor)
-      if (off + 8L + len + 4L > p.length) return None
+      val len = be32(p, o)
+      // the whole chunk, CRC included, must fit (`len` is unsigned Long
+      // math: a hostile length near 2^32 must not wrap the cursor)
+      if (len + 12L > p.length - off) return None
       new String(p, o + 4, 4, "US-ASCII") match {
         case "IHDR" =>
-          if (len != 13) return None
-          w = i32be(p, o + 8); h = i32be(p, o + 12)
+          // the JDK reader takes the FIRST chunk as IHDR and skips any
+          // later one, so the gate must check that same header: IHDR
+          // comes first, and a second one is rejected
+          if (len != 13 || off != 8) return None
+          w = be32(p, o + 8).toInt; h = be32(p, o + 12).toInt
           bitDepth = p(o + 16) & 0xff; colorType = p(o + 17) & 0xff
           interlace = p(o + 20) & 0xff
           ihdrOk = true
-        case "IDAT" => idat.write(p, o + 8, len)
-        case "IEND" => ended = true
-        case _      => ()
+        case "IDAT" =>
+          // the reader's IDAT stream ends at the first other chunk, so
+          // a split run (IDAT, tEXt, IDAT) is rejected, as the PNG spec
+          // requires consecutive IDATs
+          if (idatRun == 2) return None
+          idatRun = 1; idatBytes += len
+        case typ =>
+          if (idatRun == 1) idatRun = 2
+          if (typ == "IEND") ended = true
       }
       off += 8L + len + 4L
     }
-    if (!ihdrOk || idat.size == 0) return None
+    if (!ihdrOk || idatBytes == 0) return None
     val channels = colorType match {
       case 0 => 1; case 2 => 3; case 4 => 2; case 6 => 4
       case _ => return None
     }
     if (bitDepth != 8 || interlace != 0 || w <= 0 || h <= 0) return None
-    val rowBytesL = w.toLong * channels
-    val expectedL = (rowBytesL + 1L) * h // +1 filter byte per scanline
-    if (expectedL > (1L << 26)) return None // 64 MiB inflation cap
-    val raw = new Array[Byte](expectedL.toInt)
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(idat.toByteArray)
-      var got = 0
-      while (got < raw.length && !inf.finished()) {
-        val n =
-          try inf.inflate(raw, got, raw.length - got)
-          catch { case _: java.util.zip.DataFormatException => return None }
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary()))
-          return None // truncated/odd stream: structural corruption
-        got += n
+    // +1 filter byte per scanline: the 64 MiB inflation cap
+    if ((w.toLong * channels + 1L) * h > (1L << 26)) return None
+    val reader = javax.imageio.ImageIO.getImageReadersByFormatName("png").next()
+    val in = new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(p))
+    val px = try {
+      reader.setInput(in, true, true)
+      val raster = reader.read(0).getRaster
+      // an 8-bit PNG comes back as pixel-interleaved bytes in one bank
+      // (RGB(A) stored as (A)BGR: the band offsets map the order); copy
+      // the first `channels` bands out in R, G, B, A order
+      val sm = raster.getSampleModel match {
+        case sm: java.awt.image.PixelInterleavedSampleModel => sm
+        case _ => return None
       }
-      if (got < raw.length) return None
-    } finally inf.end()
-    // reverse the per-row filter, writing unfiltered pixel bytes to px
-    val rowBytes = rowBytesL.toInt
-    val px = new Array[Byte](rowBytes * h)
-    var row = 0
-    while (row < h) {
-      val ft = raw(row * (rowBytes + 1)) & 0xff
-      if (ft > 4) return None
-      val src = row * (rowBytes + 1) + 1
-      val dst = row * rowBytes
-      var i = 0
-      while (i < rowBytes) {
-        val x = raw(src + i) & 0xff
-        val a = if (i >= channels) px(dst + i - channels) & 0xff else 0
-        val b = if (row > 0) px(dst - rowBytes + i) & 0xff else 0
-        val c =
-          if (row > 0 && i >= channels) px(dst - rowBytes + i - channels) & 0xff
-          else 0
-        val v = ft match {
-          case 0 => x
-          case 1 => x + a
-          case 2 => x + b
-          case 3 => x + ((a + b) >> 1)
-          case _ => // Paeth predictor
-            val pp = a + b - c
-            val pa = math.abs(pp - a)
-            val pb = math.abs(pp - b)
-            val pc = math.abs(pp - c)
-            x + (if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c)
+      val data = raster.getDataBuffer
+        .asInstanceOf[java.awt.image.DataBufferByte].getData
+      val (stride, step, offs) =
+        (sm.getScanlineStride, sm.getPixelStride, sm.getBandOffsets)
+      val out = new Array[Byte](w * h * channels)
+      var o = 0
+      var y = 0
+      while (y < h) {
+        var s = y * stride
+        var x = 0
+        while (x < w) {
+          var c = 0
+          while (c < channels) { out(o + c) = data(s + offs(c)); c += 1 }
+          s += step; o += channels; x += 1
         }
-        px(dst + i) = (v & 0xff).toByte
-        i += 1
+        y += 1
       }
-      row += 1
-    }
-    val (histo, sum) = byteHisto(px)
-    val thumb = lumaThumb(w, h, (sx, sy) => {
-      val base = sy * rowBytes + sx * channels
-      if (channels <= 2) px(base) & 0xff // gray / gray+alpha
-      else luma601(px(base) & 0xff, px(base + 1) & 0xff, px(base + 2) & 0xff)
-    })
-    Some(MediaFeatures(docId, "png", p.length, meanByteOf(p), p.take(4),
-      histo, thumb, 1, w, h, channels, 0,
-      if (px.length == 0) 0.0 else sum.toDouble / px.length))
+      out
+    } catch {
+      case scala.util.control.NonFatal(_) => return None
+    } finally { reader.dispose(); in.close() }
+    Some(imageFeatures(docId, "png", p, Seq(px), w, h, channels,
+      nFrames = 1, sampleRate = 0))
   }
 
   /** REAL GIF decode — the LZW variant GIF uses is ~80 lines of
-    * self-contained bit math, so like PNG this needs no codec library:
-    * header + logical screen descriptor + global color table parse,
-    * then the FIRST image frame's LZW stream is decoded (variable-width
-    * codes LSB-first across data sub-blocks, clear/EOI handling, 12-bit
-    * cap) and mapped through the palette to RGB. Later frames are
+    * self-contained bit math, so this needs no codec library: header +
+    * logical screen descriptor + global color table parse, then the
+    * FIRST image frame's LZW stream is decoded (variable-width codes
+    * LSB-first across data sub-blocks, clear/EOI handling, 12-bit cap)
+    * and mapped through the palette to RGB. Later frames are
     * COUNTED (descriptor walk) but not decoded — n_frames is real,
     * pixel stats come from frame 1, the thumbnail convention every
     * video/animation pipeline uses. Supports the dominant profile:
     * global color table, non-interlaced; None on interlaced frames,
     * local color tables, missing GCT, LZW violations, or truncation —
-    * stub fallback, never a task kill. */
+    * stub fallback, never a task kill. Stays hand-written: the JDK's
+    * `javax.imageio` GIF reader decodes an LZW code beyond the table
+    * and zero-fills a frame with too few pixels (both measured), where
+    * [[lzwDecode]] reports `gif_corrupt`. The palette-mapped RGB frame
+    * goes through [[imageFeatures]]. */
   def decodeGif(docId: Long, p: Array[Byte]): Option[MediaFeatures] = {
     if (p.length < 13) return None
     val w = u16(p, 6)
@@ -678,31 +661,17 @@ object Multimodal {
       }
     }
     if (firstPx == null) return None
-    // palette-map to RGB and run the PNG-style stats
-    val histo = new Array[Long](16)
-    var sum = 0L
+    // palette-map frame 1 to RGB
+    val rgb = new Array[Byte](firstPx.length * 3)
     var i = 0
     while (i < firstPx.length) {
       val idx = firstPx(i) & 0xff
       if (idx >= gctSize) return None
-      var c = 0
-      while (c < 3) {
-        val b = p(gct + 3 * idx + c) & 0xff
-        histo(b >> 4) += 1
-        sum += b
-        c += 1
-      }
+      System.arraycopy(p, gct + 3 * idx, rgb, 3 * i, 3)
       i += 1
     }
-    val thumb = lumaThumb(fw, fh, (sx, sy) => {
-      val idx = firstPx(sy * fw + sx) & 0xff
-      luma601(p(gct + 3 * idx) & 0xff, p(gct + 3 * idx + 1) & 0xff,
-        p(gct + 3 * idx + 2) & 0xff)
-    })
-    val n = firstPx.length.toLong * 3
-    Some(MediaFeatures(docId, "gif", p.length, meanByteOf(p), p.take(4),
-      histo, thumb, nFrames, fw, fh, 3, 0,
-      if (n == 0) 0.0 else sum.toDouble / n))
+    Some(imageFeatures(docId, "gif", p, Seq(rgb), fw, fh, 3, nFrames,
+      sampleRate = 0))
   }
 
   /** GIF-flavor LZW: variable-width codes, LSB-first bit order, clear
@@ -804,8 +773,16 @@ object Multimodal {
     * profile-bounded to 8-bit 4:4:4/grayscale; anything fancier
     * (arithmetic coding, subsampling, restart intervals) returns None
     * and the router stubs it as `jpeg_corrupt` — the honest "could not
-    * decode" label. Features mirror the PNG path: stats over decoded
-    * channel bytes, 4x4 Rec.601 luminance thumbnail. */
+    * decode" label. Features through [[imageFeatures]], like every
+    * other image path. Stays hand-written: the JDK's `javax.imageio`
+    * JPEG reader rounds differently — on q34's synthetic payloads -12
+    * (baseline) and -28 (progressive) it differed from [[Jpeg]] on 256
+    * of 384 pixel bytes, by at most 1 and 2 — so q34's frozen literals
+    * would move. */
+  def decodeJpeg(docId: Long, p: Array[Byte]): Option[MediaFeatures] =
+    Jpeg.decode(p).map(d => imageFeatures(docId, "jpeg", p, Seq(d.rgb),
+      d.width, d.height, d.channels, nFrames = 1, sampleRate = 0))
+
   /** Test seam: raw decoded pixels, so the suite can assert the
     * progressive and baseline encodings of identical coefficients
     * decode byte-identically (container-level fields like n_bytes and
@@ -813,21 +790,6 @@ object Multimodal {
   private[graft] def decodeJpegPixels(
       p: Array[Byte]): Option[(Int, Int, Int, Seq[Byte])] =
     Jpeg.decode(p).map(d => (d.width, d.height, d.channels, d.rgb.toSeq))
-
-  def decodeJpeg(docId: Long, p: Array[Byte]): Option[MediaFeatures] = {
-    Jpeg.decode(p).map { d =>
-      val (histo, sum) = byteHisto(d.rgb)
-      val thumb = lumaThumb(d.width, d.height, (sx, sy) => {
-        val base = (sy * d.width + sx) * d.channels
-        if (d.channels == 1) d.rgb(base) & 0xff
-        else luma601(d.rgb(base) & 0xff, d.rgb(base + 1) & 0xff,
-          d.rgb(base + 2) & 0xff)
-      })
-      MediaFeatures(docId, "jpeg", p.length, meanByteOf(p), p.take(4),
-        histo, thumb, 1, d.width, d.height, d.channels, 0,
-        if (d.rgb.length == 0) 0.0 else sum.toDouble / d.rgb.length)
-    }
-  }
 
   /** REAL ISO-BMFF (mp4) METADATA decode — container structure only,
     * no codec: a strict box walk (big-endian 32-bit size + fourcc;
@@ -844,10 +806,6 @@ object Multimodal {
     * [[decodeWebmMeta]] for the other containers' metadata walks). */
   def decodeMp4Meta(docId: Long, p: Array[Byte]): Option[MediaFeatures] = {
     if (p.length < 16) return None
-    def be32(off: Long): Long =
-      ((p(off.toInt) & 0xffL) << 24) | ((p(off.toInt + 1) & 0xffL) << 16) |
-        ((p(off.toInt + 2) & 0xffL) << 8) | (p(off.toInt + 3) & 0xffL)
-    def be64(off: Long): Long = (be32(off) << 32) | be32(off + 4)
     def fourcc(off: Long): String = {
       val c = new Array[Char](4)
       var i = 0
@@ -864,14 +822,14 @@ object Multimodal {
       var off = start
       while (off < end) {
         if (off + 8 > end) return None
-        val sz0 = be32(off)
+        val sz0 = be32(p, off)
         val t = fourcc(off)
         if (t == "????") return None
         var hdr = 8L
         val sz: Long =
           if (sz0 == 1L) {
             if (off + 16 > end) return None
-            hdr = 16L; be64(off + 8)
+            hdr = 16L; be64(p, off + 8)
           } else if (sz0 == 0L) end - off
           else sz0
         // `sz > end - off`, NOT `off + sz > end`: a hostile 64-bit
@@ -892,10 +850,10 @@ object Multimodal {
     val mvVer = p(mvS.toInt) & 0xff
     val (tsOff, durLen) = if (mvVer == 1) (20L, 8) else (12L, 4)
     if (mvS + tsOff + 4 + durLen > mvE) return None
-    val timescale = be32(mvS + tsOff)
+    val timescale = be32(p, mvS + tsOff)
     if (timescale <= 0L || timescale > Int.MaxValue) return None
     val durRaw =
-      if (durLen == 8) be64(mvS + tsOff + 4) else be32(mvS + tsOff + 4)
+      if (durLen == 8) be64(p, mvS + tsOff + 4) else be32(p, mvS + tsOff + 4)
     // the all-ones "duration unknown" sentinel (and a hostile negative
     // v1 value) reads as 0, not as a nonsense clock
     val duration =
@@ -912,8 +870,8 @@ object Multimodal {
             val wOff = if (v == 1) 88L else 76L
             if (hs + wOff + 8 > he) None
             else {
-              val w = (be32(hs + wOff) >> 16).toInt
-              val h = (be32(hs + wOff + 4) >> 16).toInt
+              val w = (be32(p, hs + wOff) >> 16).toInt
+              val h = (be32(p, hs + wOff + 4) >> 16).toInt
               if (w > 0 && h > 0) Some((w, h)) else None
             }
           }
@@ -929,8 +887,6 @@ object Multimodal {
     // DC mean, histo16 = amplitude histogram, thumb = 16-segment
     // mean-|amplitude| envelope. Codec audio ('mp4a' etc.) falls
     // through to the metadata tier unchanged.
-    def be16(off: Long): Int =
-      ((p(off.toInt) & 0xff) << 8) | (p(off.toInt + 1) & 0xff)
     def findBox(kids: List[(String, Long, Long)], t: String) =
       kids.find(_._1 == t)
     val pcm = traks.iterator.flatMap { case (_, ts, te) =>
@@ -942,7 +898,7 @@ object Multimodal {
         stsd <- findBox(kids, "stsd")
         stsz <- findBox(kids, "stsz")
         stco <- findBox(kids, "stco")
-        out <- decodeMp4Pcm(p, stsd, stsz, stco, be16)
+        out <- decodeMp4Pcm(p, stsd, stsz, stco)
       } yield out).iterator
     }.buffered.headOption
     val base = stubFeatures(docId, p, "mp4").copy(
@@ -961,21 +917,19 @@ object Multimodal {
   }
 
   /** The PCM tier of [[decodeMp4Meta]]: parse the first stsd entry as
-    * an uncompressed sound description and run WAV-style sample math
-    * over the single stco chunk. Returns (channels, rate, frames,
-    * meanSignal, histo16, envelopeThumb); None when the entry is not
-    * supported PCM or the layout is out of profile. `stsd`/`stsz`/
+    * an uncompressed sound description and run [[pcmFeatures]] (the
+    * WAV decoder's sample math) over the single stco chunk. Returns
+    * (channels, rate, frames, meanSignal, histo16, envelopeThumb); None
+    * when the entry is not supported PCM or the layout is out of
+    * profile. `stsd`/`stsz`/
     * `stco` are (fourcc, payloadStart, payloadEnd) triples. */
   private def decodeMp4Pcm(p: Array[Byte],
       stsd: (String, Long, Long), stsz: (String, Long, Long),
-      stco: (String, Long, Long), be16: Long => Int)
+      stco: (String, Long, Long))
       : Option[(Int, Int, Int, Double, Array[Long], Array[Byte])] = {
-    def be32(off: Long): Long =
-      ((p(off.toInt) & 0xffL) << 24) | ((p(off.toInt + 1) & 0xffL) << 16) |
-        ((p(off.toInt + 2) & 0xffL) << 8) | (p(off.toInt + 3) & 0xffL)
     val (_, sdS, sdE) = stsd
     if (sdE - sdS < 8 + 36) return None
-    if (be32(sdS + 4) < 1) return None // entry_count
+    if (be32(p, sdS + 4) < 1) return None // entry_count
     val e = sdS + 8 // first sample entry
     val fmt = new String(p, e.toInt + 4, 4, "US-ASCII")
     val bits = fmt match {
@@ -984,17 +938,17 @@ object Multimodal {
       case _ => return None // codec audio: metadata tier handles it
     }
     // v0 sound description: channels/sampleSize/compression/rate
-    val channels = be16(e + 24)
-    val declaredBits = be16(e + 26)
-    val compression = be16(e + 28)
-    val rate = (be32(e + 32) >> 16).toInt // 16.16 fixed
+    val channels = be16(p, e + 24)
+    val declaredBits = be16(p, e + 26)
+    val compression = be16(p, e + 28)
+    val rate = (be32(p, e + 32) >> 16).toInt // 16.16 fixed
     if (channels <= 0 || channels > 8 || rate <= 0 ||
       compression != 0 || declaredBits != bits) return None
     // stsz: uniform size, or per-sample table summed
     val (_, szS, szE) = stsz
     if (szE - szS < 12) return None
-    val uniform = be32(szS + 4)
-    val nSamplesDeclared = be32(szS + 8)
+    val uniform = be32(p, szS + 4)
+    val nSamplesDeclared = be32(p, szS + 8)
     if (nSamplesDeclared <= 0 || nSamplesDeclared > Int.MaxValue) return None
     val totalBytes: Long =
       if (uniform > 0) uniform * nSamplesDeclared
@@ -1002,49 +956,21 @@ object Multimodal {
         if (szE - szS < 12L + 4L * nSamplesDeclared) return None
         var acc = 0L
         var i = 0L
-        while (i < nSamplesDeclared) { acc += be32(szS + 12 + 4 * i); i += 1 }
+        while (i < nSamplesDeclared) { acc += be32(p, szS + 12 + 4 * i); i += 1 }
         acc
       }
     // single-chunk profile: all samples contiguous at one file offset
     val (_, coS, coE) = stco
-    if (coE - coS < 12 || be32(coS + 4) != 1L) return None
-    val chunkOff = be32(coS + 8)
+    if (coE - coS < 12 || be32(p, coS + 4) != 1L) return None
+    val chunkOff = be32(p, coS + 8)
     val bytesPerSample = bits / 8
     if (totalBytes <= 0 || totalBytes % bytesPerSample != 0 ||
       chunkOff < 0 || chunkOff + totalBytes > p.length) return None
     val nSamples = (totalBytes / bytesPerSample).toInt
-    val base = chunkOff.toInt
-    def sample(j: Int): Int = fmt match {
-      case "sowt" => (p(base + 2 * j + 1) << 8) | (p(base + 2 * j) & 0xff)
-      case "twos" => (p(base + 2 * j) << 8) | (p(base + 2 * j + 1) & 0xff)
-      case _ => (p(base + j) & 0xff) - 128 // raw 8-bit is unsigned
-    }
-    val histo = new Array[Long](16)
-    var sum = 0L
-    var j = 0
-    while (j < nSamples) {
-      val v = sample(j)
-      sum += v
-      val u = if (bits == 8) (v + 128) << 8 else v + 32768
-      histo(u >> 12) += 1
-      j += 1
-    }
-    val thumb = new Array[Byte](16)
-    var t = 0
-    while (t < 16) {
-      val s0 = (t.toLong * nSamples / 16).toInt
-      val s1 = ((t + 1).toLong * nSamples / 16).toInt
-      var acc = 0L
-      var k = s0
-      while (k < s1) { acc += math.abs(sample(k)); k += 1 }
-      val m = if (s1 > s0) acc / (s1 - s0) else 0L
-      thumb(t) =
-        (if (bits == 8) math.min(255L, m << 1)
-         else math.min(255L, m >> 7)).toByte
-      t += 1
-    }
-    Some((channels, rate, nSamples / channels,
-      if (nSamples == 0) 0.0 else sum.toDouble / nSamples, histo, thumb))
+    // sowt: 16-bit little-endian, twos: big-endian, raw: 8-bit unsigned
+    val (histo, thumb, mean) = pcmFeatures(pcmSamples(p, chunkOff.toInt,
+      nSamples, bits, bigEndian = fmt == "twos"), bits)
+    Some((channels, rate, nSamples / channels, mean, histo, thumb))
   }
 
   /** REAL Ogg container-metadata decode — the page walk, no codec:
@@ -1060,15 +986,7 @@ object Multimodal {
     * raw). Sample DECODE stays stubbed (codec-bound). */
   def decodeOggMeta(docId: Long, p: Array[Byte]): Option[MediaFeatures] = {
     if (p.length < 28) return None
-    def le64(off: Long): Long = {
-      var v = 0L; var i = 7
-      while (i >= 0) { v = (v << 8) | (p(off.toInt + i) & 0xffL); i -= 1 }
-      v
-    }
-    def le32(off: Long): Long =
-      (p(off.toInt) & 0xffL) | ((p(off.toInt + 1) & 0xffL) << 8) |
-        ((p(off.toInt + 2) & 0xffL) << 16) | ((p(off.toInt + 3) & 0xffL) << 24)
-    val serials = scala.collection.mutable.Set.empty[Long]
+    val serials = scala.collection.mutable.Set.empty[Int]
     var maxGranule = 0L
     var pages = 0
     var off = 0L
@@ -1079,8 +997,8 @@ object Multimodal {
       if (p(off.toInt + 4) != 0) return None // stream structure version
       val hdrType = p(off.toInt + 5) & 0xff
       if (pages == 0 && (hdrType & 0x02) == 0) return None // first page: BOS
-      val granule = le64(off + 6)
-      val serial = le32(off + 14)
+      val granule = le64(p, off.toInt + 6)
+      val serial = i32(p, off.toInt + 14)
       val nSegs = p(off.toInt + 26) & 0xff
       if (off + 27 + nSegs > p.length) return None
       var body = 0L
@@ -1192,25 +1110,19 @@ object Multimodal {
       mean_signal = durTicks * tsScale.toDouble / 1e9))
   }
 
-  /** STUB features for the formats that genuinely need an external
-    * codec: frame/sample DECODE for mp4/webm/ogg — their container
-    * metadata is real, see [[decodeMp4Meta]]/[[decodeWebmMeta]]/
-    * [[decodeOggMeta]]: deterministic whole-payload byte stats +
-    * 16-bin byte histogram + strided pseudo-thumbnail + chunked
-    * pseudo-frame count. The signature — bytes in, fixed-width features
-    * out, no per-row session state — is the contract a distributed
-    * decode needs; [[decodeBmp]]/[[decodeWav]] are the proof the seam
-    * takes real decoders without touching the plan. */
+  /** STUB features: whole-payload byte stats ([[byteHisto]]) + strided
+    * pseudo-thumbnail + chunked pseudo-frame count. They label payloads
+    * no decoder claims (unknown formats, the documents' text bytes), the
+    * `<format>_corrupt` fallback of every decoder, and the byte-level
+    * fields of the mp4/ogg/webm metadata walks, whose frame/sample
+    * DECODE needs an external codec. The signature — bytes in,
+    * fixed-width features out, no per-row session state — is the
+    * contract a distributed decode needs; the nine real decoders behind
+    * [[decode]] are the proof the seam takes them without touching the
+    * plan. */
   def stubFeatures(docId: Long, p: Array[Byte], format: String): MediaFeatures = {
     val histo = new Array[Long](16)
-    var sum = 0L
-    var i = 0
-    while (i < p.length) {
-      val b = p(i) & 0xff
-      histo(b >> 4) += 1
-      sum += b
-      i += 1
-    }
+    val sum = byteHisto(p, histo)
     // strided pseudo-thumbnail + chunked pseudo-frame count
     val thumb =
       if (p.isEmpty) new Array[Byte](16)
@@ -1223,12 +1135,13 @@ object Multimodal {
   }
 
   /** Decode router: real decoders where the container allows it, the
-    * labeled stub elsewhere. Payloads that sniff as bmp/wav but fail
-    * structural validation fall back to the stub under a '_corrupt'
-    * format label — visible in the output, never a task failure. Null
-    * payloads (null source column) decode as EMPTY media (zeros), which
-    * keeps the task alive; note this differs from q33's null-safe
-    * built-ins, which would yield NULL metadata for the same row. */
+    * labeled stub elsewhere. A payload that sniffs as one of the nine
+    * decoded containers but fails its structural validation falls back
+    * to the stub under a '<format>_corrupt' label — visible in the
+    * output, never a task failure. Null payloads (null source column)
+    * decode as EMPTY media (zeros), which keeps the task alive; note
+    * this differs from q33's null-safe built-ins, which would yield NULL
+    * metadata for the same row. */
   def decode(docId: Long, payloadOrNull: Array[Byte]): MediaFeatures = {
     import scala.util.control.NonFatal
     val p =
@@ -1272,30 +1185,24 @@ object Multimodal {
 
   /** Deterministic real-container payloads unioned into q34's input so
     * the registry run itself exercises the REAL decode paths (not just
-    * the suite): two BMPs (gradient + flat), two WAVs (sine-ish ramp +
-    * silence), one corrupt of each. Built from pure header math — no
-    * fixtures, no randomness — under negative doc_ids so they can never
-    * collide with the documents table. */
+    * the suite): at least one good payload per decoder and tier (BMP,
+    * WAV, PNG, GIF, baseline and progressive JPEG, mp4 metadata and
+    * PCM, ogg, webm, AVI raw-DIB / MJPEG / metadata) and a corrupt one
+    * per container. Built from pure header math — no fixtures, no
+    * randomness — under negative doc_ids so they can never collide
+    * with the documents table. */
   private[graft] def syntheticMediaPayloads: Seq[(Long, Array[Byte])] = {
     import java.nio.{ByteBuffer, ByteOrder}
     def bmp24(width: Int, height: Int, pix: (Int, Int) => (Int, Int, Int)): Array[Byte] = {
-      val rowSize = ((24 * width + 31) / 32) * 4
-      val dataSize = rowSize * height
-      val buf = ByteBuffer.allocate(54 + dataSize).order(ByteOrder.LITTLE_ENDIAN)
+      val rows = dibRows(width, height, pix)
+      val buf = ByteBuffer.allocate(54).order(ByteOrder.LITTLE_ENDIAN)
       buf.put('B'.toByte).put('M'.toByte)
-      buf.putInt(54 + dataSize).putInt(0).putInt(54)
+      buf.putInt(54 + rows.length).putInt(0).putInt(54)
       buf.putInt(40).putInt(width).putInt(height)
       buf.putShort(1).putShort(24)
-      buf.putInt(0).putInt(dataSize)
+      buf.putInt(0).putInt(rows.length)
       buf.putInt(2835).putInt(2835).putInt(0).putInt(0)
-      for (row <- 0 until height; y = height - 1 - row) { // stored bottom-up
-        for (x <- 0 until width) {
-          val (r, g, b) = pix(x, y)
-          buf.put(b.toByte).put(g.toByte).put(r.toByte)
-        }
-        for (_ <- 0 until rowSize - width * 3) buf.put(0.toByte)
-      }
-      buf.array()
+      buf.array() ++ rows
     }
     def wav16(sampleRate: Int, channels: Int, samples: Array[Short]): Array[Byte] = {
       val dataLen = samples.length * 2
@@ -1367,27 +1274,32 @@ object Multimodal {
 
   /** Deterministic minimal AVI builder (tests + synthetics): RIFF/AVI
     * with hdrl(avih + strl(strh 'vids' + strf BITMAPINFOHEADER 24-bpp))
-    * and movi('00db' raw bottom-up BGR DIB frames). `compression` != 0
-    * models a codec-bound stream (metadata decodes, pixels don't). */
+    * and movi('00db' raw bottom-up BGR DIB frames, at least one).
+    * `compression` != 0 models a codec-bound stream (metadata decodes,
+    * pixels don't). */
   private[graft] def aviOf(width: Int, height: Int, usPerFrame: Int,
       frames: Seq[(Int, Int) => (Int, Int, Int)],
       compression: Int = 0): Array[Byte] = {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val rowSize = ((24 * width + 31) / 32) * 4
-    def frameBytes(pix: (Int, Int) => (Int, Int, Int)): Array[Byte] = {
-      val b = ByteBuffer.allocate(rowSize * height)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      for (row <- 0 until height; y = height - 1 - row) { // bottom-up
-        for (x <- 0 until width) {
-          val (r, g, bl) = pix(x, y)
-          b.put(bl.toByte).put(g.toByte).put(r.toByte)
-        }
-        for (_ <- 0 until rowSize - width * 3) b.put(0.toByte)
-      }
-      b.array()
-    }
+    val dibs = frames.map(dibRows(width, height, _))
     aviContainer(width, height, usPerFrame, "DIB ", compression,
-      rowSize * height, frames.map(f => ("00db", frameBytes(f))))
+      dibs.head.length, dibs.map(("00db", _)))
+  }
+
+  /** The one DIB frame writer (BMP and AVI builders): 24-bpp BGR rows
+    * stored bottom-up, each zero-padded to 4 bytes; `pix(x, y)` =
+    * (r, g, b) in image coordinates (y = 0 is the top row). */
+  private def dibRows(width: Int, height: Int,
+      pix: (Int, Int) => (Int, Int, Int)): Array[Byte] = {
+    val rowSize = ((24 * width + 31) / 32) * 4
+    val b = java.nio.ByteBuffer.allocate(rowSize * height)
+    for (row <- 0 until height; y = height - 1 - row) {
+      b.position(row * rowSize)
+      for (x <- 0 until width) {
+        val (r, g, bl) = pix(x, y)
+        b.put(bl.toByte).put(g.toByte).put(r.toByte)
+      }
+    }
+    b.array()
   }
 
   /** 'MJPG' as the little-endian int BITMAPINFOHEADER.biCompression
@@ -1512,14 +1424,6 @@ object Multimodal {
   private[graft] def mp4Of(timescale: Int, durationTs: Int,
       tracks: Seq[(Int, Int)]): Array[Byte] = {
     import java.nio.ByteBuffer
-    def box(t: String, body: Array[Byte]): Array[Byte] = {
-      val b = ByteBuffer.allocate(8 + body.length)
-      b.putInt(8 + body.length).put(t.getBytes("US-ASCII")).put(body)
-      b.array()
-    }
-    val ftyp = box("ftyp",
-      "isom".getBytes("US-ASCII") ++ Array[Byte](0, 0, 2, 0) ++
-        "isomiso2".getBytes("US-ASCII"))
     val mvhd = {
       val b = ByteBuffer.allocate(100)
       b.putInt(0)                 // version 0 + flags
@@ -1550,8 +1454,20 @@ object Multimodal {
     val moov = box("moov",
       box("mvhd", mvhd) ++ traks.foldLeft(Array.emptyByteArray)(_ ++ _))
     val mdat = box("mdat", Array.tabulate(32)(i => (i * 7).toByte))
-    ftyp ++ moov ++ mdat
+    ftypBox ++ moov ++ mdat
   }
+
+  /** The one ISO-BMFF box writer (mp4 builders): big-endian 32-bit size,
+    * fourcc, body. */
+  private def box(t: String, body: Array[Byte]): Array[Byte] = {
+    val b = java.nio.ByteBuffer.allocate(8 + body.length)
+    b.putInt(8 + body.length).put(t.getBytes("US-ASCII")).put(body)
+    b.array()
+  }
+
+  private def ftypBox: Array[Byte] = box("ftyp",
+    "isom".getBytes("US-ASCII") ++ Array[Byte](0, 0, 2, 0) ++
+      "isomiso2".getBytes("US-ASCII"))
 
   /** Deterministic PCM-in-mp4 builder (tests + synthetics): ftyp, mdat
     * holding the raw samples (placed SECOND so the stco offset is a
@@ -1561,11 +1477,6 @@ object Multimodal {
   private[graft] def mp4PcmOf(fmt: String, rate: Int, channels: Int,
       samples16: Array[Short]): Array[Byte] = {
     import java.nio.ByteBuffer
-    def box(t: String, body: Array[Byte]): Array[Byte] = {
-      val b = ByteBuffer.allocate(8 + body.length)
-      b.putInt(8 + body.length).put(t.getBytes("US-ASCII")).put(body)
-      b.array()
-    }
     val bits = if (fmt == "raw ") 8 else 16
     val sampleBytes: Array[Byte] = fmt match {
       case "sowt" => samples16.flatMap(s =>
@@ -1574,9 +1485,7 @@ object Multimodal {
         Array(((s >> 8) & 0xff).toByte, (s & 0xff).toByte))
       case _ => samples16.map(s => ((s >> 8) + 128).toByte) // 8-bit unsigned
     }
-    val ftyp = box("ftyp",
-      "isom".getBytes("US-ASCII") ++ Array[Byte](0, 0, 2, 0) ++
-        "isomiso2".getBytes("US-ASCII"))
+    val ftyp = ftypBox
     val mdat = box("mdat", sampleBytes)
     val dataOff = ftyp.length + 8 // samples start right after mdat header
     val mvhd = {
@@ -1609,40 +1518,22 @@ object Multimodal {
     ftyp ++ mdat ++ moov
   }
 
-  /** Deterministic baseline-JPEG encoder (tests + synthetics): real
-    * SOI/DQT/SOF0/DHT/SOS structure with flat-1 quant tables, minimal
-    * canonical Huffman tables, and DC-only 8x8 blocks — each block one
-    * constant (Y, Cb, Cr) from `blockYCbCr(bx, by)`. DC-only with q=1
-    * makes the decode EXACT (IDCT of a lone DC is a flat block), so
-    * tests can assert pixel values with no tolerance. */
-  private[graft] def jpegOf(width: Int, height: Int,
-      blockYCbCr: (Int, Int) => (Int, Int, Int),
-      // one optional AC coefficient (zigzag index 1..63, value ±1) on
-      // the FIRST block's Y channel — drives the decoder's run-length /
-      // ZRL / coefficient paths, not just EOB
-      acSpike: Option[(Int, Int)] = None): Array[Byte] = {
-    require(width % 8 == 0 && height % 8 == 0, "block-aligned fixtures")
+  /** The one JPEG writer behind both encoders: marker segments, and
+    * entropy bits MSB-first with FF00 stuffing, padded with 1s per T.81
+    * at each scan's end. `header` writes what both encoders share: SOI,
+    * a flat-1 quant table, the SOF (`sof` = 0xc0 baseline, 0xc2
+    * progressive; three 4:4:4 components on table 0) and DC table 0 —
+    * twelve 4-bit codes for categories 0..11, so a category's code is
+    * its own value. */
+  private final class JpegOut {
     val out = new java.io.ByteArrayOutputStream()
+    private var acc = 0
+    private var nBits = 0
     def m(marker: Int, body: Array[Byte]): Unit = {
       out.write(0xff); out.write(marker)
       out.write((body.length + 2) >> 8); out.write((body.length + 2) & 0xff)
       out.write(body, 0, body.length)
     }
-    out.write(0xff); out.write(0xd8) // SOI
-    m(0xdb, Array[Byte](0) ++ Array.fill(64)(1.toByte)) // DQT id 0, all 1s
-    m(0xc0, Array[Byte](8, // SOF0: precision
-      (height >> 8).toByte, (height & 0xff).toByte,
-      (width >> 8).toByte, (width & 0xff).toByte, 3,
-      1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0))
-    // DC table 0: twelve 4-bit codes for categories 0..11
-    m(0xc4, Array[Byte](0x00, 0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0) ++
-      Array.tabulate(12)(_.toByte))
-    // AC table 0, canonical: EOB='0', (0,1)='10', ZRL='110', (1,1)='1110'
-    m(0xc4, Array[Byte](0x10, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-      0x00, 0x01, 0xF0.toByte, 0x11))
-    m(0xda, Array[Byte](3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0)) // SOS
-    // entropy data: MSB-first with FF00 stuffing
-    var acc = 0; var nBits = 0
     def putBits(v: Int, n: Int): Unit = {
       var i = n - 1
       while (i >= 0) {
@@ -1656,6 +1547,47 @@ object Multimodal {
         i -= 1
       }
     }
+    def pad(): Unit = while (nBits != 0) putBits(1, 1)
+    def header(sof: Int, width: Int, height: Int): Unit = {
+      out.write(0xff); out.write(0xd8) // SOI
+      m(0xdb, Array[Byte](0) ++ Array.fill(64)(1.toByte)) // DQT id 0, all 1s
+      m(sof, Array[Byte](8, // precision
+        (height >> 8).toByte, (height & 0xff).toByte,
+        (width >> 8).toByte, (width & 0xff).toByte, 3,
+        1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0))
+      m(0xc4, Array[Byte](0x00, 0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0) ++
+        Array.tabulate(12)(_.toByte))
+    }
+    def dcDiff(diff: Int): Unit = {
+      val t = 32 - Integer.numberOfLeadingZeros(math.abs(diff)) // category
+      putBits(t, 4)
+      if (t > 0) putBits(if (diff >= 0) diff else diff + (1 << t) - 1, t)
+    }
+    def end(): Array[Byte] = {
+      out.write(0xff); out.write(0xd9) // EOI
+      out.toByteArray
+    }
+  }
+
+  /** Deterministic baseline-JPEG encoder (tests + synthetics): real
+    * SOI/DQT/SOF0/DHT/SOS structure with flat-1 quant tables, minimal
+    * canonical Huffman tables, and DC-only 8x8 blocks — each block one
+    * constant (Y, Cb, Cr) from `blockYCbCr(bx, by)`. DC-only with q=1
+    * makes the decode EXACT (IDCT of a lone DC is a flat block), so
+    * tests can assert pixel values with no tolerance. */
+  private[graft] def jpegOf(width: Int, height: Int,
+      blockYCbCr: (Int, Int) => (Int, Int, Int),
+      // one optional AC coefficient (zigzag index 1..63, value ±1) on
+      // the FIRST block's Y channel — drives the decoder's run-length /
+      // ZRL / coefficient paths, not just EOB
+      acSpike: Option[(Int, Int)] = None): Array[Byte] = {
+    require(width % 8 == 0 && height % 8 == 0, "block-aligned fixtures")
+    val w = new JpegOut
+    w.header(0xc0, width, height) // SOF0
+    // AC table 0, canonical: EOB='0', (0,1)='10', ZRL='110', (1,1)='1110'
+    w.m(0xc4, Array[Byte](0x10, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
+      0x00, 0x01, 0xF0.toByte, 0x11))
+    w.m(0xda, Array[Byte](3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0)) // SOS
     val pred = new Array[Int](3)
     var firstBlock = true
     for (by <- 0 until height / 8; bx <- 0 until width / 8) {
@@ -1663,32 +1595,26 @@ object Multimodal {
       val dcs = Array(yv, cb, cr)
       for (c <- 0 until 3) {
         val dc = 8 * (dcs(c) - 128)
-        val diff = dc - pred(c)
+        w.dcDiff(dc - pred(c))
         pred(c) = dc
-        val t = 32 - Integer.numberOfLeadingZeros(math.abs(diff)) // category
-        putBits(t, 4) // DC category code == its own value (canonical)
-        if (t > 0) putBits(if (diff >= 0) diff else diff + (1 << t) - 1, t)
         acSpike match {
           case Some((k, v)) if c == 0 && firstBlock =>
             var run = k - 1
-            while (run >= 16) { putBits(6, 3); run -= 16 } // ZRL '110'
-            if (run == 0) putBits(2, 2) // (0,1) = '10'
+            while (run >= 16) { w.putBits(6, 3); run -= 16 } // ZRL '110'
+            if (run == 0) w.putBits(2, 2) // (0,1) = '10'
             else { // (1,1) = '1110'; only run lengths 0/1 mod 16 supported
               require(run == 1, "fixture spike supports runs 0/1 mod 16")
-              putBits(0xe, 4)
+              w.putBits(0xe, 4)
             }
-            putBits(if (v >= 0) 1 else 0, 1) // size-1 coefficient bits
-            if (k < 63) putBits(0, 1)        // EOB for the rest
-          case _ => putBits(0, 1) // AC: EOB
+            w.putBits(if (v >= 0) 1 else 0, 1) // size-1 coefficient bits
+            if (k < 63) w.putBits(0, 1)        // EOB for the rest
+          case _ => w.putBits(0, 1) // AC: EOB
         }
       }
       firstBlock = false
     }
-    if (nBits > 0) { // pad with 1s per T.81
-      while (nBits != 0) putBits(1, 1)
-    }
-    out.write(0xff); out.write(0xd9) // EOI
-    out.toByteArray
+    w.pad()
+    w.end()
   }
 
   /** Deterministic PROGRESSIVE JPEG encoder (tests + synthetics): the
@@ -1712,45 +1638,16 @@ object Multimodal {
       // always zero and refinement would otherwise be a no-op)
       dcPlus: Int = 0): Array[Byte] = {
     require(width % 8 == 0 && height % 8 == 0, "block-aligned fixtures")
-    val out = new java.io.ByteArrayOutputStream()
-    def m(marker: Int, body: Array[Byte]): Unit = {
-      out.write(0xff); out.write(marker)
-      out.write((body.length + 2) >> 8); out.write((body.length + 2) & 0xff)
-      out.write(body, 0, body.length)
-    }
-    out.write(0xff); out.write(0xd8) // SOI
-    m(0xdb, Array[Byte](0) ++ Array.fill(64)(1.toByte)) // DQT id 0, all 1s
-    m(0xc2, Array[Byte](8, // SOF2: progressive
-      (height >> 8).toByte, (height & 0xff).toByte,
-      (width >> 8).toByte, (width & 0xff).toByte, 3,
-      1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0))
-    // DC table 0: twelve 4-bit codes for categories 0..11 (as baseline)
-    m(0xc4, Array[Byte](0x00, 0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0) ++
-      Array.tabulate(12)(_.toByte))
+    val w = new JpegOut
+    w.header(0xc2, width, height) // SOF2: progressive
     // AC table 0, canonical lengths 1..5: EOB0='0', (0,1)='10',
     // ZRL='110', EOB1='1110', (1,1)='11110'
-    m(0xc4, Array[Byte](0x10, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
+    w.m(0xc4, Array[Byte](0x10, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
       0x00, 0x01, 0xF0.toByte, 0x10, 0x11))
-    // per-scan entropy writer (bit buffer resets at scan boundaries)
-    var acc = 0; var nBits = 0
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1)
-        nBits += 1
-        if (nBits == 8) {
-          out.write(acc & 0xff)
-          if ((acc & 0xff) == 0xff) out.write(0x00)
-          acc = 0; nBits = 0
-        }
-        i -= 1
-      }
-    }
-    def pad(): Unit = while (nBits != 0) putBits(1, 1)
     val huffAC = Map(0x00 -> (0, 1), 0x01 -> (2, 2), 0xF0 -> (6, 3),
       0x10 -> (0xe, 4), 0x11 -> (0x1e, 5)) // symbol -> (code, bits)
     def putAC(sym: Int): Unit = {
-      val (c, n) = huffAC(sym); putBits(c, n)
+      val (c, n) = huffAC(sym); w.putBits(c, n)
     }
     // EOB-run chunks: cover n consecutive end-of-bands with the table's
     // EOB0 (1 block) / EOB1+ext (2 or 3 blocks) symbols
@@ -1758,8 +1655,8 @@ object Multimodal {
       var n = n0
       while (n > 0) {
         if (n == 1) { putAC(0x00); n = 0 }
-        else if (n == 2) { putAC(0x10); putBits(0, 1); n = 0 }
-        else { putAC(0x10); putBits(1, 1); n -= 3 }
+        else if (n == 2) { putAC(0x10); w.putBits(0, 1); n = 0 }
+        else { putAC(0x10); w.putBits(1, 1); n -= 3 }
       }
     }
     val bxs = width / 8; val bys = height / 8
@@ -1770,49 +1667,45 @@ object Multimodal {
         (if (c == 0 && bx == 0 && by == 0) dcPlus else 0)
     }
     // --- scan 1: DC first, interleaved, Al=1 (predict in the >>1 domain)
-    m(0xda, Array[Byte](3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 0, 0x01))
+    w.m(0xda, Array[Byte](3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 0, 0x01))
     val pred = new Array[Int](3)
     for (by <- 0 until bys; bx <- 0 until bxs; c <- 0 until 3) {
       val dcAl = dcOf(c, bx, by) >> 1 // arithmetic shift: two's complement
-      val diff = dcAl - pred(c)
+      w.dcDiff(dcAl - pred(c))
       pred(c) = dcAl
-      val t = 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-      putBits(t, 4)
-      if (t > 0) putBits(if (diff >= 0) diff else diff + (1 << t) - 1, t)
     }
-    pad()
+    w.pad()
     // --- scan 2: DC refinement, one raw bit (bit 0 of the DC) per block
-    m(0xda, Array[Byte](3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 0, 0x10))
+    w.m(0xda, Array[Byte](3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 0, 0x10))
     for (by <- 0 until bys; bx <- 0 until bxs; c <- 0 until 3)
-      putBits(dcOf(c, bx, by) & 1, 1)
-    pad()
+      w.putBits(dcOf(c, bx, by) & 1, 1)
+    w.pad()
     // --- scans 3-5: AC first per component, band 1..63, Al=1: the ±1
     // spike vanishes at this precision (1 >> 1 == 0) so every block is
     // an end-of-band — pure EOB-run chunks
     for (cid <- 1 to 3) {
-      m(0xda, Array[Byte](1, cid.toByte, 0x00, 1, 63, 0x01))
+      w.m(0xda, Array[Byte](1, cid.toByte, 0x00, 1, 63, 0x01))
       putEobRun(nBlocks)
-      pad()
+      w.pad()
     }
     // --- scans 6-8: AC refinement, Ah=1, Al=0: history is all-zero, so
     // the spike arrives as a newly-nonzero ±1 after its zero run
     for (cid <- 1 to 3) {
-      m(0xda, Array[Byte](1, cid.toByte, 0x00, 1, 63, 0x10))
+      w.m(0xda, Array[Byte](1, cid.toByte, 0x00, 1, 63, 0x10))
       acSpike match {
         case Some((k, v)) if cid == 1 =>
           var run = k - 1
           while (run >= 16) { putAC(0xF0); run -= 16 } // ZRL
           require(run == 0 || run == 1, "fixture spike supports runs 0/1 mod 16")
           putAC(if (run == 0) 0x01 else 0x11)
-          putBits(if (v >= 0) 1 else 0, 1) // sign of the ±1 insertion
+          w.putBits(if (v >= 0) 1 else 0, 1) // sign of the ±1 insertion
           putEobRun(nBlocks) // covers this block's tail + the rest
         case _ =>
           putEobRun(nBlocks)
       }
-      pad()
+      w.pad()
     }
-    out.write(0xff); out.write(0xd9) // EOI
-    out.toByteArray
+    w.end()
   }
 
   /** Deterministic GIF encoder (tests + synthetics): real GIF89a
@@ -1945,8 +1838,9 @@ object Multimodal {
   }
 
   /** q34 — feature extraction through the typed partition-batched path
-    * (the `mapPartitions` seam where the decode router runs: real
-    * BMP/WAV decoders, labeled stub for codec-bound formats). The input
+    * (the `mapPartitions` seam where the decode router [[decode]] runs:
+    * real decoders for the nine containers it sniffs, the labeled stub
+    * for everything else and for corrupt payloads). The input
     * unions [[syntheticMediaPayloads]] with the documents table so the
     * driver-run plan exercises real decode, corrupt fallback, AND the
     * stub router in one pass. Output is flattened to SQL types so

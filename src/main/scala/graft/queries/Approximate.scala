@@ -294,9 +294,9 @@ object Approximate {
     },
     oracle = Some("""
       WITH l AS (SELECT l_returnflag AS flag, l_extendedprice AS v
-                 FROM lineitem),
+                 FROM lineitem WHERE l_extendedprice IS NOT NULL),
       s AS (SELECT flag, min(v) AS mn, max(v) AS mx,
-              CAST(count(*) AS BIGINT) AS n FROM l GROUP BY flag),
+              CAST(count(v) AS BIGINT) AS n FROM l GROUP BY flag),
       b AS (SELECT l.flag,
               CASE WHEN s.mx = s.mn THEN 0
                    ELSE LEAST(255, CAST(floor((l.v - s.mn) * 256

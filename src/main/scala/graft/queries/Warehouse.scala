@@ -752,11 +752,12 @@ object Warehouse {
           CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS pos
         FROM lineitem),
       s AS (SELECT min(score_cents) AS mn, max(score_cents) AS mx,
-              CAST(count(*) AS BIGINT) AS n FROM scored),
+              CAST(count(score_cents) AS BIGINT) AS n FROM scored
+            WHERE score_cents IS NOT NULL),
       b AS (SELECT CASE WHEN s.mx = s.mn THEN 0
                    ELSE LEAST(255, ((score_cents - s.mn) * 256)
                      // (s.mx - s.mn)) END AS bin
-            FROM scored CROSS JOIN s),
+            FROM scored CROSS JOIN s WHERE score_cents IS NOT NULL),
       h AS (SELECT bin, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY 1),
       cum AS (SELECT bin,
                 CAST(sum(c) OVER (ORDER BY bin) AS BIGINT) AS cum

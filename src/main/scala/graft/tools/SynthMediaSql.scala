@@ -7,12 +7,14 @@ import graft.ext.Multimodal
   * each result as a DuckDB VALUES tuple in q34's output projection.
   * The printed literals are PASTED (frozen) into q34's oracle — a
   * decoder regression then fails the driver hash gate instead of
-  * silently shifting both sides. */
+  * silently shifting both sides; MultimodalSpec asserts that every
+  * row [[rows]] renders still appears verbatim in the oracle. */
 object SynthMediaSql {
-  def main(args: Array[String]): Unit = {
+  /** One VALUES tuple per synthetic payload, in payload order. */
+  def rows: Seq[String] = {
     def hexOf(b: Array[Byte]): String =
       b.map(x => f"${x & 0xff}%02X").mkString
-    val rows = Multimodal.syntheticMediaPayloads.map { case (id, p) =>
+    Multimodal.syntheticMediaPayloads.map { case (id, p) =>
       val f = Multimodal.decode(id, p)
       // Double.toString is shortest-roundtrip; DuckDB parses the literal
       // back to the identical IEEE double
@@ -32,6 +34,9 @@ object SynthMediaSql {
         s"${f.mean_signal})"
       ).mkString(", ")
     }
+  }
+
+  def main(args: Array[String]): Unit = {
     println("      VALUES")
     println(rows.map("        " + _).mkString(",\n"))
   }

@@ -183,6 +183,30 @@ class MultimodalSpec extends AnyFunSuite {
     assert(t.slice(0, 4).forall(_ == 255) && t.slice(4, 16).forall(_ == 0))
   }
 
+  test("AVI raw-DIB with a negative biHeight reads its frames top-down") {
+    val (w, h) = (8, 4)
+    def pix(x: Int, y: Int): (Int, Int, Int) = (x * 30, y * 60, 128 + y)
+    val bottomUp = Multimodal.aviOf(w, h, 40000, Seq(pix))
+    // aviOf stores rows bottom-up; feeding it the vertically flipped
+    // image stores pix's rows top-down, which biHeight = -h declares
+    val flipped = Multimodal.aviOf(w, h, 40000, Seq((x, y) => pix(x, h - 1 - y)))
+    val topDown = flipped.clone()
+    val strf = topDown.indices.find(i => i + 4 <= topDown.length &&
+      new String(topDown, i, 4, "US-ASCII") == "strf").get
+    // BITMAPINFOHEADER.biHeight sits 8 bytes into strf's payload
+    ByteBuffer.wrap(topDown).order(ByteOrder.LITTLE_ENDIAN).putInt(strf + 16, -h)
+    val want = Multimodal.decode(1L, bottomUp)
+    val got = Multimodal.decode(1L, topDown)
+    assert(got.format == "avi" && got.channels == 3 &&
+      got.width == w && got.height == h)
+    assert(got.thumb.toSeq == want.thumb.toSeq)
+    assert(got.histo16.toSeq == want.histo16.toSeq)
+    assert(got.mean_signal == want.mean_signal)
+    // the fixture is not vertically symmetric: read bottom-up, the same
+    // stored rows give a different thumbnail
+    assert(Multimodal.decode(1L, flipped).thumb.toSeq != want.thumb.toSeq)
+  }
+
   test("AVI codec-compressed stream decodes container metadata, not pixels") {
     val payload = Multimodal.aviOf(320, 240, 33333,
       Seq((_, _) => (0, 0, 0)), compression = 1)
@@ -366,6 +390,96 @@ class MultimodalSpec extends AnyFunSuite {
     hostile(8) = 0x7f.toByte; hostile(9) = 0xff.toByte
     hostile(10) = 0xff.toByte; hostile(11) = 0xff.toByte
     assert(Multimodal.decode(1L, hostile).format == "png_corrupt")
+  }
+
+  test("PNG via javax.imageio: tRNS adds no band; gray+alpha, 1-px and odd widths under every filter") {
+    // features computed straight from the pixel function: channel-byte
+    // mean and histogram, 4x4 thumb of the gray band (1-2 channels) or
+    // integer Rec.601 luma (3-4 channels)
+    def expected(w: Int, h: Int, ch: Int, pix: (Int, Int, Int) => Int) = {
+      val bytes = for (y <- 0 until h; x <- 0 until w; c <- 0 until ch)
+        yield pix(x, y, c) & 0xff
+      val histo = new Array[Long](16)
+      bytes.foreach(b => histo(b >> 4) += 1)
+      val thumb = for (ty <- 0 until 4; tx <- 0 until 4) yield {
+        val (x, y) = (tx * w / 4, ty * h / 4)
+        def v(c: Int) = pix(x, y, c) & 0xff
+        (if (ch <= 2) v(0) else (77 * v(0) + 150 * v(1) + 29 * v(2)) >> 8).toByte
+      }
+      (bytes.sum.toDouble / bytes.length, histo.toSeq, thumb)
+    }
+    def check(p: Array[Byte], w: Int, h: Int, ch: Int,
+        pix: (Int, Int, Int) => Int, clue: String): Unit = {
+      val f = Multimodal.decode(1L, p)
+      assert(f.format == "png" && (f.width, f.height, f.channels) == ((w, h, ch)),
+        s"$clue: ${f.format} ${f.width}x${f.height}x${f.channels}")
+      assert((f.mean_signal, f.histo16.toSeq, f.thumb.toSeq) ==
+        expected(w, h, ch, pix), clue)
+    }
+    def pix(x: Int, y: Int, c: Int): Int = (x * 53 + y * 97 + c * 71 + 11) % 256
+    for (ch <- 1 to 4; (w, h) <- Seq((1, 1), (1, 4), (3, 2), (5, 3), (17, 8));
+         filters <- (0 to 4).map(ft => Array.fill(h)(ft)) :+
+           Array.tabulate(h)(_ % 5))
+      check(Multimodal.pngOf(w, h, ch, filters, pix), w, h, ch, pix,
+        s"${w}x${h}x$ch filters ${filters.toSeq}")
+    // a tRNS chunk (gray: one 16-bit sample; RGB: three) right after
+    // IHDR makes the JDK reader add an alpha band; the decode must keep
+    // IHDR's channel count and the same stats
+    def withTrns(png: Array[Byte], body: Array[Byte]): Array[Byte] = {
+      val crc = new java.util.zip.CRC32()
+      crc.update("tRNS".getBytes("US-ASCII")); crc.update(body)
+      val chunk = ByteBuffer.allocate(12 + body.length).putInt(body.length)
+        .put("tRNS".getBytes("US-ASCII")).put(body)
+        .putInt(crc.getValue.toInt).array()
+      png.take(33) ++ chunk ++ png.drop(33) // 8 signature + 25 IHDR
+    }
+    for ((ch, trns) <- Seq(1 -> Array[Byte](0, 64), 3 -> Array[Byte](0, 64, 0, 1, 0, 2))) {
+      val plain = Multimodal.pngOf(5, 3, ch, Array(0, 1, 4), pix)
+      check(plain, 5, 3, ch, pix, s"plain $ch")
+      check(withTrns(plain, trns), 5, 3, ch, pix, s"tRNS $ch")
+    }
+  }
+
+  test("PNG gate checks the header the JDK reader decodes: IHDR first and only once, one IDAT run") {
+    def chunk(id: String, body: Array[Byte]): Array[Byte] = {
+      val crc = new java.util.zip.CRC32()
+      crc.update(id.getBytes("US-ASCII")); crc.update(body)
+      ByteBuffer.allocate(12 + body.length).putInt(body.length)
+        .put(id.getBytes("US-ASCII")).put(body)
+        .putInt(crc.getValue.toInt).array()
+    }
+    def ihdr(w: Int, h: Int, colorType: Int): Array[Byte] = chunk("IHDR",
+      ByteBuffer.allocate(13).putInt(w).putInt(h)
+        .put(Array[Byte](8, colorType.toByte, 0, 0, 0)).array())
+    def pix(x: Int, y: Int, c: Int): Int = x * 40 + y * 10 + c
+    val rgb = Multimodal.pngOf(4, 4, 3, Array.fill(4)(0), pix)
+    val (sig, ihdrRgb) = (rgb.take(8), rgb.slice(8, 33))
+    val idatLen = ByteBuffer.wrap(rgb, 33, 4).getInt
+    val (idat, iend) = (rgb.slice(33, 45 + idatLen), rgb.drop(45 + idatLen))
+    val zdata = rgb.slice(41, 41 + idatLen)
+    val text = chunk("tEXt", "k\u0000v".getBytes("US-ASCII"))
+    def fmt(p: Array[Byte]) = Multimodal.decode(1L, p).format
+    assert(fmt(rgb) == "png")
+    // a header over the 64 MiB cap spliced ahead of the real one: the
+    // reader would size its image from the first, so the second IHDR
+    // must not pass the cap on the first's behalf
+    assert(fmt(sig ++ ihdr(4100, 4100, 6) ++ rgb.drop(8)) == "png_corrupt")
+    // a later gray IHDR after RGB pixels would report one channel of
+    // the R band; the reader ignores it, so the gate rejects it
+    val lateGray = sig ++ ihdrRgb ++ idat ++ ihdr(4, 4, 0) ++ iend
+    assert(fmt(lateGray) == "png_corrupt")
+    // IHDR must be the first chunk
+    assert(fmt(sig ++ text ++ ihdrRgb ++ idat ++ iend) == "png_corrupt")
+    // the deflate stream split over two consecutive IDATs decodes as
+    // one; split by another chunk it is rejected
+    val (z1, z2) = zdata.splitAt(zdata.length / 2)
+    val split = Multimodal.decode(1L,
+      sig ++ ihdrRgb ++ chunk("IDAT", z1) ++ chunk("IDAT", z2) ++ iend)
+    val whole = Multimodal.decode(1L, rgb)
+    assert((split.format, split.mean_signal, split.histo16.toSeq, split.thumb.toSeq) ==
+      (("png", whole.mean_signal, whole.histo16.toSeq, whole.thumb.toSeq)))
+    assert(fmt(sig ++ ihdrRgb ++ chunk("IDAT", z1) ++ text ++
+      chunk("IDAT", z2) ++ iend) == "png_corrupt")
   }
 
   test("GIF decode: palette-mapped pixel stats, frame count, LZW clears") {
@@ -573,6 +687,13 @@ class MultimodalSpec extends AnyFunSuite {
       .subsetOf(formats), s"formats seen: $formats")
     // documents' text bytes still route through the labeled stub
     assert(formats.contains("unknown"))
+  }
+
+  test("q34's frozen oracle literals match what the decoders render today") {
+    val oracle = Multimodal.q34.oracle.get
+    val rows = tools.SynthMediaSql.rows
+    assert(rows.size == Multimodal.syntheticMediaPayloads.size)
+    rows.foreach(r => assert(oracle.contains(r), s"not in q34's oracle: $r"))
   }
 
   test("mp4 box walk: mvhd timescale/duration, trak count, tkhd dims") {

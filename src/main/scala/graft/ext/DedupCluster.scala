@@ -27,7 +27,8 @@ import graft.{Q, Tables}
   * deterministic canonical id (oracle-checkable via a recursive CTE).
   * Each round's labels are staged (lineage barrier) so plans don't grow
   * exponentially, and superseded rounds' staging dirs are deleted
-  * eagerly, not at JVM exit.
+  * eagerly, not at JVM exit ([[components]], the core q145's entity
+  * resolution shares).
   */
 object DedupCluster {
 
@@ -75,7 +76,10 @@ object DedupCluster {
     * rounds, how many engaged the pointer-doubling hop, and the
     * changed-label count per round (oldest first). */
   final case class ClusterStats(rounds: Int, hopRounds: Int,
-      changed: List[Long])
+      changed: List[Long]) {
+    /** The last round moved no label: the fixpoint was reached. */
+    def converged: Boolean = changed.lastOption.contains(0L)
+  }
 
   /** (doc_id, cluster_id) for every doc; cluster_id = min doc_id in the
     * doc's connected component (singletons cluster with themselves). */
@@ -90,79 +94,79 @@ object DedupCluster {
       maxRounds: Int = 20,
       exactNearPairs: Boolean = false): (DataFrame, ClusterStats) = {
     val (edgePlan, edgeCleanup) = edges(docs, threshold, exactNearPairs)
-    val (e, ePath) = graft.operators.Stage.materializeWithPath(
-      edgePlan, "dedup-edges")
+    val e = graft.operators.Stage.materialize(edgePlan, "dedup-edges")
     // edges are on disk — the banded generator's staged intermediates
     // (shingles, signatures) can go now
     edgeCleanup()
-    // round-0 labels are a trivial column-pruned projection of the
-    // source — no lineage to barrier yet, so staging it would be a
-    // pure wasted write; the empty path skips the (nonexistent) drop
-    var labels = docs.select(col("doc_id"), col("doc_id").as("cluster_id"))
-    var labelsPath = ""
-    var round = 0
+    val (labels, stats) = components(e, docs.select(col("doc_id")), maxRounds)
+    graft.operators.Stage.release(e)
+    // never return silently-wrong labels; with adaptive doubling this
+    // needs diameter ≫ 2^(maxRounds/2) — not a dedup graph
+    require(stats.converged,
+      s"dedup clustering did not converge within $maxRounds rounds " +
+        s"(${stats.changed.lastOption.getOrElse(-1L)} labels still changing) — " +
+        "component diameter too large; raise maxRounds")
+    (labels, stats)
+  }
+
+  /** The connected-components core of dedup clustering (q49, q52, q60,
+    * q148) and entity resolution (q145): the adaptive loop of the object
+    * doc over STAGED symmetric `(ea, eb)` edges (the caller's), one
+    * label per `nodes.doc_id`. Returns the staged `(doc_id, cluster_id)`
+    * labels, the caller's to keep, and [[ClusterStats]]; non-convergence
+    * is reported (`converged`), not thrown. */
+  private[graft] def components(e: DataFrame, nodes: DataFrame,
+      maxRounds: Int): (DataFrame, ClusterStats) = {
+    // round-0 labels are a pruned projection — nothing to barrier yet
+    val init = nodes.select(col("doc_id"), col("doc_id").as("cluster_id"))
     var hopRounds = 0
     // changed-count history, newest first, drives the adaptive hop below
     var hist = List.empty[Long]
-    while (hist.headOption.forall(_ > 0) && round < maxRounds) {
-      val nbrMin = e.join(labels, col("ea") === col("doc_id"))
-        .groupBy(col("eb")).agg(min(col("cluster_id")).as("nbr_min"))
-      val stepped = labels.join(nbrMin, col("doc_id") === col("eb"), "left")
-        .select(col("doc_id"), col("cluster_id").as("prev_id"),
-          least(col("cluster_id"),
-            coalesce(col("nbr_min"), col("cluster_id"))).as("mid_id"))
-      // Pointer doubling: follow the stepped label through the PREVIOUS
-      // round's label table (mid_id is always a doc_id, so the join hits)
-      // — contracts label paths ~2x per round, the O(log d) ingredient.
-      // ADAPTIVE: the hop join only pays off on high-diameter graphs
-      // (crawl-chain duplicates), whose signature is a changed-count that
-      // fails to halve round-over-round. Near-clique dedup graphs (the
-      // common case) collapse geometrically under the neighbor step
-      // alone, so they skip the extra join entirely; convergence is
-      // certified by the neighbor step (stable min over symmetric edges
-      // ⇒ all labels in a component equal its min id), which the hop
-      // cannot perturb.
-      val useHop = hist.size >= 2 && hist.head * 2 > hist(1)
-      if (useHop) hopRounds += 1
-      val hopped =
-        if (!useHop) stepped.withColumn("cluster_id", col("mid_id"))
-        else {
-          val hop = labels.select(col("doc_id").as("hop_doc"),
-            col("cluster_id").as("hop_cluster"))
-          stepped.join(hop, col("mid_id") === col("hop_doc"), "left")
-            .select(col("doc_id"), col("prev_id"),
-              least(col("mid_id"),
-                coalesce(col("hop_cluster"), col("mid_id"))).as("cluster_id"))
-        }
-      // convergence metric rides the WRITE job via observe(): no second
-      // pass over the staged bytes, and prev_id never hits disk
-      val obs = org.apache.spark.sql.Observation(s"dedup-round-$round")
-      val (next, nextPath) = graft.operators.Stage.materializeWithPath(
+    var obs: org.apache.spark.sql.Observation = null
+    val fx = graft.operators.Stage.iterate(init, "cc-labels-", maxRounds) {
+      (labels, round) =>
+        val nbrMin = e.join(labels, col("ea") === col("doc_id"))
+          .groupBy(col("eb")).agg(min(col("cluster_id")).as("nbr_min"))
+        val stepped = labels.join(nbrMin, col("doc_id") === col("eb"), "left")
+          .select(col("doc_id"), col("cluster_id").as("prev_id"),
+            least(col("cluster_id"),
+              coalesce(col("nbr_min"), col("cluster_id"))).as("mid_id"))
+        // Pointer doubling: follow the stepped label through the PREVIOUS
+        // round's label table (mid_id is always a doc_id, so the join hits)
+        // — contracts label paths ~2x per round, the O(log d) ingredient.
+        // ADAPTIVE: the hop join only pays off on high-diameter graphs
+        // (crawl-chain duplicates), whose signature is a changed-count that
+        // fails to halve round-over-round. Near-clique dedup graphs (the
+        // common case) collapse geometrically under the neighbor step
+        // alone, so they skip the extra join entirely; convergence is
+        // certified by the neighbor step (stable min over symmetric edges
+        // ⇒ all labels in a component equal its min id), which the hop
+        // cannot perturb.
+        val useHop = hist.size >= 2 && hist.head * 2 > hist(1)
+        if (useHop) hopRounds += 1
+        val hopped =
+          if (!useHop) stepped.withColumn("cluster_id", col("mid_id"))
+          else {
+            val hop = labels.select(col("doc_id").as("hop_doc"),
+              col("cluster_id").as("hop_cluster"))
+            stepped.join(hop, col("mid_id") === col("hop_doc"), "left")
+              .select(col("doc_id"), col("prev_id"),
+                least(col("mid_id"),
+                  coalesce(col("hop_cluster"), col("mid_id"))).as("cluster_id"))
+          }
+        // convergence metric rides the WRITE job via observe(): no second
+        // pass over the staged bytes, and prev_id never hits disk
+        obs = org.apache.spark.sql.Observation(s"cc-round-$round")
         hopped
           .observe(obs, coalesce(sum(when(
             col("cluster_id") =!= col("prev_id"), 1L)
             .otherwise(0L)), lit(0L)).as("changed"))
-          .select(col("doc_id"), col("cluster_id")),
-        s"dedup-labels-$round")
+          .select(col("doc_id"), col("cluster_id"))
+    } { (_, _) =>
       hist = obs.get("changed").asInstanceOf[Long] :: hist
-      // next is fully written — the superseded round's dir can go now
-      // (round 0's labels were an unstaged projection: nothing to drop)
-      if (labelsPath.nonEmpty) graft.operators.Stage.drop(next, labelsPath)
-      labels = next.select(col("doc_id"), col("cluster_id"))
-      labelsPath = nextPath
-      round += 1
+      hist.head == 0L
     }
-    // never return silently-wrong labels: a component that is still
-    // changing at maxRounds must fail loudly. With adaptive doubling a
-    // slow-decaying graph enables the hop within two rounds, so this
-    // needs diameter ≫ 2^(maxRounds/2) — a graph that is not a dedup
-    // graph.
-    require(hist.headOption.contains(0L),
-      s"dedup clustering did not converge within $maxRounds rounds " +
-        s"(${hist.headOption.getOrElse(-1L)} labels still changing) — " +
-        "component diameter too large; raise maxRounds")
-    graft.operators.Stage.drop(labels, ePath)
-    (labels, ClusterStats(round, hopRounds, hist.reverse))
+    (fx.state, ClusterStats(fx.rounds, hopRounds, hist.reverse))
   }
 
   /** True when the JVM is an oracle-gated correctness run

@@ -29,7 +29,7 @@ object MinHashDedup {
     * signature table. Staged (not persisted) because a self-join consumes
     * it — see [[graft.operators.Stage]]. */
   private def sketch(sh: DataFrame, numTables: Int,
-      hint: String): (MinHashLSHModel, DataFrame, String) = {
+      hint: String): (MinHashLSHModel, DataFrame) = {
     val tf = new HashingTF()
       .setInputCol("shingles").setOutputCol("features")
       .setBinary(true).setNumFeatures(1 << 18)
@@ -38,9 +38,9 @@ object MinHashDedup {
       .setInputCol("features").setOutputCol("hashes")
       .setNumHashTables(numTables).setSeed(42L)
     val model = mh.fit(feat)
-    val (hashed, path) = graft.operators.Stage.materializeWithPath(
+    val hashed = graft.operators.Stage.materialize(
       model.transform(feat).select("doc_id", "features", "hashes"), hint)
-    (model, hashed, path)
+    (model, hashed)
   }
 
   /** Sub-quadratic drop-in for [[graft.queries.TextOps.jaccardPairs]]:
@@ -120,11 +120,11 @@ object MinHashDedup {
       numTables: Int = 8, bandWidth: Int = 2): (DataFrame, () => Unit) = {
     val spark = docs.sparkSession
     graft.functions.TextFunctions.registerMinHash(spark)
-    val (sh, shPath) = graft.operators.Stage.materializeWithPath(
+    val sh = graft.operators.Stage.materialize(
       shingled(docs), "banded-shingles")
     // staged signature table: doc_id + (numTables·bandWidth) longs per
     // doc — a fraction of the ML variant's TF vectors + hash-vector UDTs
-    val (sig, sigPath) = graft.operators.Stage.materializeWithPath(
+    val sig = graft.operators.Stage.materialize(
       sh.select(col("doc_id"),
         call_function("minhash_k", col("shingles"),
           lit(numTables * bandWidth)).as("sig")),
@@ -158,10 +158,7 @@ object MinHashDedup {
         (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard"))
-    (pairs, () => {
-      graft.operators.Stage.drop(sh, shPath)
-      graft.operators.Stage.drop(sh, sigPath)
-    })
+    (pairs, () => Seq(sh, sig).foreach(graft.operators.Stage.release))
   }
 
   /** Spark ML MinHashLSH variant of the q30 pipeline (HashingTF binary
@@ -177,7 +174,7 @@ object MinHashDedup {
     // 6 hash tables: p(candidate | J=0.5) = 1-(1-0.5)^6 ≈ 98% — the
     // recall/cost knee; the fixtures' planted near-dups (J≈0.97) are
     // recalled with probability ~1.
-    val (model, hashed, _) = sketch(
+    val (model, hashed) = sketch(
       shingled(docs).drop("source"), numTables = 6, "minhash")
     model.approxSimilarityJoin(hashed, hashed, threshold, "jaccard_dist")
       .select(

@@ -6,7 +6,8 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Materialization barrier for multi-use intermediates (sketches,
   * signature tables) that feed self-joins: writes the DataFrame once to
@@ -24,23 +25,35 @@ import org.apache.spark.sql.DataFrame
   * `<spark.sql.warehouse.dir>/_graft_stage` — shared storage on a real
   * cluster, a local directory in local mode — and is overridable with
   * the session conf `graft.stage.dir` (e.g. an HDFS/S3 scratch path).
-  * Every staged directory is deleted through the Hadoop FileSystem API
-  * on JVM shutdown; each call gets a fresh unique subdirectory, so
-  * concurrent queries and concurrent JVMs never collide.
+  * Each staged frame gets one fresh unique directory directly under the
+  * root, so concurrent queries and concurrent JVMs never collide.
+  *
+  * Lifetime: whoever stages a frame releases it ([[release]]) once
+  * nothing reads it; a frame handed back to a caller (a query result, a
+  * session artifact) is not released. [[iterate]] applies the rule to a
+  * fixpoint loop. Every directory still registered is deleted through
+  * the Hadoop FileSystem API on JVM shutdown.
   */
 object Stage {
 
   private val jvmId = UUID.randomUUID().toString.take(8)
   private val counter = new AtomicLong()
+  /** Live staged directories, qualified as a file scan reports them. */
   private val staged = mutable.Set.empty[String]
+  private val bucketedTables = mutable.Set.empty[(SparkSession, String)]
   @volatile private var hookInstalled = false
 
-  private def stagingRoot(spark: org.apache.spark.sql.SparkSession): String =
+  private def stagingRoot(spark: SparkSession): String =
     spark.conf.getOption("graft.stage.dir").getOrElse {
       spark.conf.get("spark.sql.warehouse.dir") + "/_graft_stage"
     }
 
-  private def installHook(spark: org.apache.spark.sql.SparkSession): Unit =
+  private def qualified(spark: SparkSession, dir: String): Path = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+  }
+
+  private def installHook(spark: SparkSession): Unit =
     synchronized {
     if (!hookInstalled) {
       hookInstalled = true
@@ -80,33 +93,25 @@ object Stage {
     * round-trips its Catalyst schema (including ML vector UDTs) through
     * the parquet footer metadata, so the staged frame is
     * schema-identical to the input. */
-  def materialize(df: DataFrame, hint: String = "stage"): DataFrame =
-    materializeWithPath(df, hint)._1
-
-  /** Like [[materialize]], but also returns the staged directory so
-    * iterative callers (e.g. the clustering loop, which stages labels
-    * every round) can [[drop]] superseded rounds eagerly instead of
-    * accumulating directories until JVM shutdown. */
-  def materializeWithPath(df: DataFrame,
-      hint: String = "stage"): (DataFrame, String) = {
+  def materialize(df: DataFrame, hint: String = "stage"): DataFrame = {
     val path = allocDir(df.sparkSession, hint)
     df.write.mode("overwrite").parquet(path)
-    (df.sparkSession.read.parquet(path), path)
+    df.sparkSession.read.parquet(path)
   }
 
   /** Allocate a fresh managed directory under the staging root WITHOUT
     * writing it — for sinks that land bytes through their own writer
-    * (e.g. the q149 Z-order layout). The path rides the same shutdown
-    * cleanup as every staged parquet directory, so ONE hygiene
-    * mechanism owns all staged bytes (round-11 verdict item 5: the
-    * layout previously hand-rolled its own temp dir + deletion hook). */
-  def allocDir(spark: org.apache.spark.sql.SparkSession,
-      hint: String): String = {
+    * (e.g. the q149 Z-order layout); [[dropDir]] deletes it early. */
+  def allocDir(spark: SparkSession, hint: String): String = {
     val path =
       s"${stagingRoot(spark)}/$hint-$jvmId-${counter.incrementAndGet()}"
-    installHook(spark)
-    staged.synchronized(staged += path): Unit
+    register(spark, path)
     path
+  }
+
+  private def register(spark: SparkSession, path: String): Unit = {
+    installHook(spark)
+    staged.synchronized(staged += qualified(spark, path).toString): Unit
   }
 
   /** Like [[materialize]], but stages through a BUCKETED table
@@ -118,18 +123,17 @@ object Stage {
     * the plain-parquet [[materialize]]'s cluster-scale sibling: parquet
     * staging loses the partitioning on read; a bucketed table keeps it.
     *
-    * Catalog hygiene: the table name is JVM-unique; the shutdown hook
-    * both drops the catalog entry (best-effort — the session may already
-    * be stopped) and deletes the staged bytes (the existing path hook).
+    * Catalog hygiene: the table name is JVM-unique; [[release]] and the
+    * shutdown hook both drop the catalog entry (the hook best-effort —
+    * the session may already be stopped) and delete the staged bytes.
     */
   def materializeBucketed(df: DataFrame, hint: String, key: String,
       buckets: Int): DataFrame = {
+    val spark = df.sparkSession
     val name =
       s"graft_${hint.replace('-', '_')}_${jvmId}_${counter.incrementAndGet()}"
-    val path = s"${stagingRoot(df.sparkSession)}/$name"
-    installHook(df.sparkSession)
-    staged.synchronized(staged += path): Unit
-    val spark = df.sparkSession
+    val path = s"${stagingRoot(spark)}/$name"
+    register(spark, path)
     bucketedTables.synchronized(bucketedTables += ((spark, name))): Unit
     df.write.mode("overwrite")
       .bucketBy(buckets, key).sortBy(key)
@@ -138,60 +142,84 @@ object Stage {
     spark.table(name)
   }
 
-  private val bucketedTables =
-    mutable.Set.empty[(org.apache.spark.sql.SparkSession, String)]
+  /** Delete and unregister the ONE staged directory `df` scans (a frame
+    * from [[materialize]] or [[materializeBucketed]], or a plan over one),
+    * dropping a bucketed table's catalog entry too; the caller asserts
+    * nothing live still reads it. Any other frame (a fixture read, a
+    * local relation, two stages, a released one) is refused with an
+    * IllegalArgumentException, deleting nothing. Delete failures are
+    * logged, never thrown: cleanup must not fail finished work. */
+  def release(df: DataFrame): Unit = {
+    val spark = df.sparkSession
+    val leaves = df.queryExecution.analyzed.collectLeaves()
+    val scanned = leaves.flatMap {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
+        case r => Seq(r.toString)
+      }
+      case leaf => Seq(leaf.nodeName)
+    }.distinct
+    val dir = scanned match {
+      case Seq(d) if staged.synchronized(staged.remove(d)) => d
+      case _ => throw new IllegalArgumentException(
+        s"Stage.release: the frame scans ${scanned.mkString(", ")}, " +
+          "not exactly one live staged directory")
+    }
+    leaves.collect { case l: LogicalRelation => l.catalogTable }.flatten
+      .map(_.identifier.table).distinct.foreach { name =>
+        if (bucketedTables.synchronized(bucketedTables.remove((spark, name))))
+          try spark.sql(s"DROP TABLE IF EXISTS $name"): Unit
+          catch { case e: Throwable =>
+            System.err.println(s"[graft.Stage] failed to drop table $name: $e")
+          }
+      }
+    delete(spark, dir)
+  }
 
-  /** Eagerly delete a staged directory returned by
-    * [[materializeWithPath]]. The caller asserts no live DataFrame still
-    * scans it. Failures are logged, never thrown (cleanup must not fail
-    * the query that finished its real work). */
-  def drop(df: DataFrame, path: String): Unit =
-    dropDir(df.sparkSession, path)
-
-  /** [[drop]] for a directory handed out by [[allocDir]] — same
+  /** [[release]] for a directory handed out by [[allocDir]] — same
     * unregister-and-delete, no DataFrame needed (the caller landed
     * bytes through its own writer, e.g. shard compaction scratch). */
-  def dropDir(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    staged.synchronized(staged -= path): Unit
+  def dropDir(spark: SparkSession, path: String): Unit = {
+    val dir = qualified(spark, path).toString
+    staged.synchronized(staged -= dir): Unit
+    delete(spark, dir)
+  }
+
+  private def delete(spark: SparkSession, dir: String): Unit =
     try {
-      val p = new Path(path)
+      val p = new Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(p, true): Unit
     } catch { case e: Throwable =>
-      System.err.println(s"[graft.Stage] failed to delete staged dir $path: $e")
+      System.err.println(s"[graft.Stage] failed to delete staged dir $dir: $e")
     }
-  }
 
-  /** Eagerly drop a bucketed table staged by [[materializeBucketed]]
-    * (catalog entry + bytes + the retained (session, name) tuple) —
-    * the [[drop]] counterpart for long-lived sessions that stage
-    * bucketed adjacencies repeatedly (e.g. the PageRank copartition
-    * crossover loop); without it every call accumulates an edge-sized
-    * directory until the JVM shutdown hook. The caller asserts no
-    * live plan still scans the table. The table's NAME is returned by
-    * `materializeBucketed` via `spark.table(name)`'s logical plan, or
-    * simply remembered by the caller. */
-  def dropBucketed(spark: org.apache.spark.sql.SparkSession,
-      name: String): Unit = {
-    bucketedTables.synchronized(
-      bucketedTables -= ((spark, name))): Unit
-    val path = try {
-      val ident = spark.sessionState.sqlParser.parseTableIdentifier(name)
-      Some(spark.sessionState.catalog.getTableMetadata(ident)
-        .location.toString)
-    } catch { case _: Throwable => None }
-    try spark.sql(s"DROP TABLE IF EXISTS $name"): Unit
-    catch { case _: Throwable => () }
-    path.foreach { loc =>
-      staged.synchronized(staged -= loc): Unit
-      try {
-        val p = new Path(loc)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true): Unit
-      } catch { case e: Throwable =>
-        System.err.println(s"[graft.Stage] failed to delete bucketed $loc: $e")
-      }
+  /** Outcome of [[iterate]]: the final state, the rounds run, and
+    * whether `done` fired (false = stopped at `maxRounds`). */
+  final case class Fixpoint(state: DataFrame, rounds: Int, converged: Boolean)
+
+  /** The staged-round loop of the single-state iterative operators.
+    * Round r stages `step(state, r)` as `<hint><r>` and asks
+    * `done(previous, next)`; then the previous round is released, so at
+    * most two rounds are live. `init` is never staged or released (it
+    * stays with the caller); the final state is the caller's. The loop
+    * stops when `done` fires or after `maxRounds`; what a non-converged
+    * run means (fail, warn, or a fixed round count) is the caller's
+    * call. `step` and `done` may share per-round state through their
+    * closures, e.g. an `Observation` that rides the round's write. */
+  def iterate(init: DataFrame, hint: String, maxRounds: Int)(
+      step: (DataFrame, Int) => DataFrame)(
+      done: (DataFrame, DataFrame) => Boolean): Fixpoint = {
+    var state = init
+    var rounds = 0
+    var converged = false
+    while (!converged && rounds < maxRounds) {
+      rounds += 1
+      val next = materialize(step(state, rounds), s"$hint$rounds")
+      converged = done(state, next)
+      if (state ne init) release(state)
+      state = next
     }
+    Fixpoint(state, rounds, converged)
   }
 }

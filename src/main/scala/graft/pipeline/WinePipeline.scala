@@ -115,14 +115,16 @@ object WinePipeline {
 
   final case class Result(rowsLoaded: Long, validationReport: DataFrame)
 
+  /** The warehouse table a JDBC load lands in (reference `:199`). */
+  private val jdbcTable = "wine_data"
+
   /** Run the whole pipeline: JSON in → parquet warehouse out (JDBC via
     * `jdbcUrl`). `append=true` replicates the reference's re-run
-    * duplication (`:199`); default is the safe overwrite. */
+    * duplication (`:199`); default is the safe overwrite. A JDBC load
+    * lands in `wine_data` with the [[warehouseColumnTypes]] DDL. */
   def run(spark: SparkSession, jsonPath: String, warehousePath: String,
       append: Boolean = false, jdbcUrl: Option[String] = None,
-      jdbcTable: String = "wine_data",
-      cleanupStagingDir: Option[String] = None,
-      jdbcColumnTypes: String = warehouseColumnTypes): Result = {
+      cleanupStagingDir: Option[String] = None): Result = {
     val transformed = transform(extract(spark, jsonPath))
     // Validation is a side observation on the same data — evaluated, never
     // gating (wine_etl_kaggle.py:100). Cache so validate+load share a scan,
@@ -139,7 +141,7 @@ object WinePipeline {
       jdbcUrl match {
         case Some(url) =>
           graft.sinks.Sinks.jdbcWrite(
-            transformed, url, jdbcTable, jdbcColumnTypes, mode)
+            transformed, url, jdbcTable, warehouseColumnTypes, mode)
         case None =>
           graft.sinks.Sinks.writeParquet(transformed, warehousePath, mode)
       }

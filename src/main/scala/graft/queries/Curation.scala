@@ -47,6 +47,27 @@ object Curation {
         explode(graft.functions.TextFunctions.shinglesExpr("toks", 8))
           .as("s"))
 
+  /** q98's four cascade predicates as a per-doc keep — lang allowlist,
+    * 20–2,000 tokens, repetition (p3) and boilerplate (p4) — over the
+    * non-null-text docs `withText`; `boil` is the boilerplate verdict
+    * (doc_id, keep), whose hot set each pipeline derives from its own
+    * statistic. Returns the survivors' (doc_id, source, text). */
+  private def qualityCascade(withText: DataFrame,
+      boil: DataFrame): DataFrame = {
+    val rep = PipelineOps.repetitionStats(withText)
+      .select(col("doc_id"), col("keep").as("p3"))
+    withText
+      .withColumn("n_toks", size(split(col("text"), " ")))
+      .join(rep, Seq("doc_id"), "left")
+      .join(boil.select(col("doc_id"), col("keep").as("p4")),
+        Seq("doc_id"), "left")
+      .filter(col("lang").isin("de", "en", "es", "fr", "zh") &&
+        col("n_toks") >= 20 && col("n_toks") <= 2000 &&
+        coalesce(col("p3"), lit(false)) &&
+        coalesce(col("p4"), lit(false)))
+      .select(col("doc_id"), col("source"), col("text"))
+  }
+
   /** The composed pipeline over any (doc_id, source, lang, n_chars,
     * text) frame. Returns the packed-sequence table (doc_id, source,
     * n_toks, start_off, pack_id) of the curated subset. */
@@ -64,7 +85,7 @@ object Curation {
       case None => graft.ext.DedupCluster
         .canonicalDocs(docs, exactNearPairs = exactNearPairs)
     }).select(col("canon_doc_id").as("doc_id"))
-    val (d1, d1Path) = Stage.materializeWithPath(
+    val d1 = Stage.materialize(
       docs.join(canon, Seq("doc_id"), "left_semi")
         .select(col("doc_id"), col("source"), col("lang"),
           col("n_chars"), col("text")),
@@ -72,27 +93,14 @@ object Curation {
     // 2) q98's cascade predicates as a per-doc keep (q98 reports the
     // funnel; the pipeline keeps the docs that survive all four)
     val withText = d1.filter(col("text").isNotNull)
-    val rep = PipelineOps.repetitionStats(withText)
-      .select(col("doc_id"), col("keep").as("p3"))
-    val boil = CorpusOps.boilerplateScore(withText)
-      .select(col("doc_id"), col("keep").as("p4"))
-    val (d2, d2Path) = Stage.materializeWithPath(
-      withText
-        .withColumn("n_toks", size(split(col("text"), " ")))
-        .join(rep, Seq("doc_id"), "left")
-        .join(boil, Seq("doc_id"), "left")
-        .filter(col("lang").isin("de", "en", "es", "fr", "zh") &&
-          col("n_toks") >= 20 && col("n_toks") <= 2000 &&
-          coalesce(col("p3"), lit(false)) &&
-          coalesce(col("p4"), lit(false)))
-        .select(col("doc_id"), col("source"), col("text")),
+    val d2 = Stage.materialize(
+      qualityCascade(withText, CorpusOps.boilerplateScore(withText)),
       "cur-cascade")
     // d2 has landed, and nothing downstream reads the dedup barrier
     // (decon's benchmark side reads the ORIGINAL corpus): drop it
-    // eagerly — the iterative operators' discipline, so repeated
-    // invocations don't accumulate corpus-sized directories until
-    // shutdown (round-11 ADVICE)
-    Stage.drop(d1, d1Path)
+    // eagerly, so repeated invocations don't accumulate corpus-sized
+    // directories until shutdown
+    Stage.release(d1)
     // 3) decontamination: benchmark shingles from the ORIGINAL corpus
     // (fixed eval suite), candidates = cascade survivors; bench docs
     // themselves leave the training pool here (q55's output domain)
@@ -101,12 +109,12 @@ object Curation {
     val contaminated = shingles8(d2.filter(col("doc_id") % 97 =!= 0))
       .join(broadcast(benchSh), "s")
       .select(col("doc_id")).distinct()
-    val (d3, d3Path) = Stage.materializeWithPath(
+    val d3 = Stage.materialize(
       d2.filter(col("doc_id") % 97 =!= 0)
         .join(contaminated, Seq("doc_id"), "left_anti"),
       "cur-decon")
-    Stage.drop(d2, d2Path) // decon landed: the cascade barrier is spent
-    val _ = d3Path // the RESULT scans d3 — it lives until JVM cleanup
+    Stage.release(d2) // decon landed: the cascade barrier is spent
+    // the RESULT scans d3 — it lives until JVM cleanup
     // 4) temperature mix over the clean pool; 5) pack the selection
     val selected = DataMix.sourceMix(d3).select(col("doc_id"))
     PipelineOps.packSequences(d3.join(selected, Seq("doc_id"), "left_semi"))
@@ -189,32 +197,19 @@ object Curation {
     val fresh = PipelineOps.dedupAgainst(batch, corpus, 0.5,
         restrictCorpus = true)
       .filter(col("verdict") === "new").select(col("doc_id"))
-    val (d1, d1Path) = Stage.materializeWithPath(
+    val d1 = Stage.materialize(
       batch.join(fresh, Seq("doc_id"), "left_semi")
         .select(col("doc_id"), col("source"), col("lang"),
           col("n_chars"), col("text")),
       "inc-dedup")
     // 2) cascade: per-doc predicates; hot set from the CORPUS
     val withText = d1.filter(col("text").isNotNull)
-    val rep = PipelineOps.repetitionStats(withText)
-      .select(col("doc_id"), col("keep").as("p3"))
     val boil = CorpusOps.boilerplateScoreAgainst(withText,
       CorpusOps.hotShinglesOf(
         corpus.filter(col("text").isNotNull)
           .select(col("doc_id"), col("text"))))
-      .select(col("doc_id"), col("keep").as("p4"))
-    val (d2, d2Path) = Stage.materializeWithPath(
-      withText
-        .withColumn("n_toks", size(split(col("text"), " ")))
-        .join(rep, Seq("doc_id"), "left")
-        .join(boil, Seq("doc_id"), "left")
-        .filter(col("lang").isin("de", "en", "es", "fr", "zh") &&
-          col("n_toks") >= 20 && col("n_toks") <= 2000 &&
-          coalesce(col("p3"), lit(false)) &&
-          coalesce(col("p4"), lit(false)))
-        .select(col("doc_id"), col("source"), col("text")),
-      "inc-cascade")
-    Stage.drop(d1, d1Path)
+    val d2 = Stage.materialize(qualityCascade(withText, boil), "inc-cascade")
+    Stage.release(d1)
     // 3) decontamination vs the fixed eval suite; bench docs arriving
     // in the batch leave the training pool here (q148's output domain)
     val benchSh = shingles8(benchDocs).select(col("s")).distinct()
@@ -222,10 +217,9 @@ object Curation {
     val contaminated = shingles8(cand)
       .join(broadcast(benchSh), "s")
       .select(col("doc_id")).distinct()
-    val (d3, d3Path) = Stage.materializeWithPath(
+    val d3 = Stage.materialize(
       cand.join(contaminated, Seq("doc_id"), "left_anti"), "inc-decon")
-    Stage.drop(d2, d2Path)
-    val _ = d3Path // the result scans d3 — it lives until JVM cleanup
+    Stage.release(d2) // the result scans d3 — it lives until JVM cleanup
     // 4) pack APPEND continuing the lake's offsets
     packAppend(d3, corpus, priorPacks)
   }

@@ -624,53 +624,52 @@ object GraphOps {
     * set + one semi-join to filter edges — both equi-keyed, both
     * map-side combined; the edge set only SHRINKS round over round.
     * All integers — no float knife edges. */
-  def kCore(baskets: DataFrame, k: Int = 3, rounds: Int = 6): DataFrame =
-    kCoreFrom(graft.operators.Stage.materializeWithPath(
-      coEdges(baskets), "kcore-e0"), ownsE0 = true, k, rounds)
+  def kCore(baskets: DataFrame, k: Int = 3, rounds: Int = 6): DataFrame = {
+    // the result scans the last peel round, never e0
+    require(rounds >= 1, "k-core needs at least one peeling round")
+    val e0 = graft.operators.Stage.materialize(coEdges(baskets), "kcore-e0")
+    try kCoreFrom(e0, k, rounds) finally graft.operators.Stage.release(e0)
+  }
 
-  /** Peeling over an already-staged round-0 edge set; `ownsE0 = false`
-    * when e0 is a session-shared artifact that must outlive the call
-    * (the registry path — round 1 then skips the eager drop). */
-  private def kCoreFrom(e0: (DataFrame, String), ownsE0: Boolean,
-      k: Int = 3, rounds: Int = 6): DataFrame = {
+  /** Peeling over an already-staged round-0 edge set, which stays with
+    * the caller (a session-shared artifact on the registry path). The
+    * result is a plan over the last peel round's staged edges. */
+  private def kCoreFrom(e0: DataFrame, k: Int = 3,
+      rounds: Int = 6): DataFrame = {
     // each round references the surviving edge set THREE times (degree
     // agg + two semi-joins), so the edges MUST be staged per round —
     // an unmaterialized lineage re-derives the base 3^rounds times
     // (the q101/q49 staging barrier; DuckDB's MATERIALIZED CTEs are
-    // the oracle-side mirror). Superseded rounds drop eagerly.
-    var edges = e0
+    // the oracle-side mirror).
+    //
     // convergence detector (round-10): the bounded loop peels `rounds`
     // times; if the edge set was still shrinking in the LAST round, the
     // fixpoint was not reached and the result is a superset of the true
     // k-core (the final deg>=k filter does not re-peel). Per-round edge
     // counts are parquet-metadata reads off the staged tables — cheap —
     // and a non-converged run is loudly detectable instead of silent.
-    var prevCount = edges._1.count()
+    var prevCount = e0.count()
     var lastShrank = false
-    for (r <- 1 to rounds) {
-      val keep = degreesOf(edges._1).filter(col("deg") >= k)
-        .select(col("node"))
-      val next = graft.operators.Stage.materializeWithPath(
-        edges._1
+    val peeled = graft.operators.Stage.iterate(e0, "kcore-e", rounds) {
+      (edges, _) =>
+        val keep = degreesOf(edges).filter(col("deg") >= k)
+          .select(col("node"))
+        edges
           .join(keep.select(col("node").as("pa")), Seq("pa"), "left_semi")
           .join(keep.select(col("node").as("pb")), Seq("pb"), "left_semi")
-          .select(col("pa"), col("pb")),
-        s"kcore-e$r")
-      if (r > 1 || ownsE0) graft.operators.Stage.drop(edges._1, edges._2)
-      edges = next
-      val c = edges._1.count()
+          .select(col("pa"), col("pb"))
+    } { (_, next) =>
+      val c = next.count()
       lastShrank = c != prevCount
       prevCount = c
+      false // a fixed round count: the oracle replays exactly `rounds`
     }
     if (lastShrank)
       System.err.println(s"[kcore] WARNING: edge set still shrinking after " +
         s"$rounds rounds (fixpoint NOT reached) — the output is a superset " +
         s"of the true $k-core; raise `rounds`")
-    val out = degreesOf(edges._1).filter(col("deg") >= k)
+    degreesOf(peeled.state).filter(col("deg") >= k)
       .select(col("node").as("part_id"), col("deg").as("core_deg"))
-    // the final agg reads the staged parquet lazily; hand the caller a
-    // plan over the LAST stage only (dropped at JVM exit like q49's)
-    out
   }
 
   /** q133 — 3-core of the co-purchase graph after 6 peeling rounds.
@@ -683,9 +682,12 @@ object GraphOps {
     run = { (spark, dir) =>
       graft.operators.SessionCache.memoOn(spark, dir,
         s"kcore-converged|$dir|k=3|rounds=6") {
-        graft.operators.Stage.materialize(
-          kCoreFrom((coEdgesFor(spark, dir), ""), ownsE0 = false),
-          "kcore-core")
+        // land the node-sized core, then retire the last peel round
+        // it was computed from
+        val peeled = kCoreFrom(coEdgesFor(spark, dir))
+        val core = graft.operators.Stage.materialize(peeled, "kcore-core")
+        graft.operators.Stage.release(peeled)
+        core
       }
     },
     oracle = Some {
@@ -717,10 +719,10 @@ object GraphOps {
     * of every [[coEdges]] pair, STAGED once (the q101/q133 barrier):
     * the iterative ops below reference the edge set every round, and an
     * unmaterialized lineage would re-run the basket self-join per
-    * round. Returns (frame, stagePath). */
-  private def undirectedEdges(baskets: DataFrame): (DataFrame, String) = {
+    * round. The caller releases it. */
+  private def undirectedEdges(baskets: DataFrame): DataFrame = {
     val e = coEdges(baskets)
-    graft.operators.Stage.materializeWithPath(
+    graft.operators.Stage.materialize(
       e.select(col("pa").as("src"), col("pb").as("dst"))
         .unionAll(e.select(col("pb").as("src"), col("pa").as("dst"))),
       "ugraph-edges")
@@ -751,67 +753,58 @@ object GraphOps {
     * post-convergence rounds are no-ops, so the fixpoint is
     * round-count-independent and the hash gate holds at any SF. */
   def bfsHops(baskets: DataFrame, maxRounds: Int = 16): DataFrame = {
-    val (edges, edgesPath) = undirectedEdges(baskets)
-    bfsHopsFrom(edges,
-      () => graft.operators.Stage.drop(edges, edgesPath), maxRounds)
+    val edges = undirectedEdges(baskets)
+    try bfsHopsFrom(edges, maxRounds)
+    finally graft.operators.Stage.release(edges)
   }
 
-  /** Traversal over an already-staged undirected edge stream;
-    * `dropEdges` runs when the traversal no longer needs the stream
-    * (a no-op for session-shared artifacts). */
-  private def bfsHopsFrom(edges: DataFrame, dropEdges: () => Unit,
-      maxRounds: Int): DataFrame = {
+  /** Traversal over an already-staged undirected edge stream, which
+    * stays with the caller. Two states per round (visited + frontier),
+    * so the loop is its own rather than [[graft.operators.Stage.iterate]];
+    * the result scans only the final visited table. */
+  private def bfsHopsFrom(edges: DataFrame, maxRounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // seed = min node id — one 1-row driver collect (bounded-collect
     // contract), mirrored by the oracle's min() CTE.
     val seedRow = edges.agg(min(col("src"))).collect()(0)
-    if (seedRow.isNullAt(0)) { // empty graph → empty traversal
-      dropEdges()
+    if (seedRow.isNullAt(0)) // empty graph → empty traversal
       return Seq.empty[(Long, Long)].toDF("part_id", "hop")
-    }
     val seed = seedRow.getLong(0)
-    var visited = graft.operators.Stage.materializeWithPath(
+    var visited = graft.operators.Stage.materialize(
       Seq((seed, 0)).toDF("node", "hop"), "bfs-v0")
-    var frontier = visited._1.select(col("node"))
-    // round 1's frontier is a projection of v0 (no separate dir); from
-    // round 2 on it is the previous round's staged f_{i-1}, droppable
-    // as soon as the round that consumed it has its outputs on disk
-    var frontierPath = ""
+    // round 1's frontier is a projection of v0 (no directory of its
+    // own); from round 2 on it is the previous round's staged f_{i-1},
+    // released as soon as the round that consumed it has its outputs
+    // on disk
+    var frontier = visited.select(col("node"))
     var grew = true
     var i = 1
     while (i <= maxRounds && grew) {
-      val next = graft.operators.Stage.materializeWithPath(
+      val next = graft.operators.Stage.materialize(
         edges.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
           .select(col("dst").as("node")).distinct()
-          .join(visited._1, Seq("node"), "left_anti"),
+          .join(visited, Seq("node"), "left_anti"),
         s"bfs-f$i")
-      grew = next._1.limit(1).count() > 0
-      val nv =
-        if (grew) {
-          val staged = graft.operators.Stage.materializeWithPath(
-            visited._1.unionAll(next._1.withColumn("hop", lit(i))),
-            s"bfs-v$i")
-          graft.operators.Stage.drop(visited._1, visited._2)
-          staged
-        } else visited // empty frontier adds nothing — converged
-      // f_{i-1} fed both writes above and nothing further reads it —
-      // drop eagerly (round-10 ADVICE: frontiers accumulated to hook)
-      if (frontierPath.nonEmpty) graft.operators.Stage.drop(frontier, frontierPath)
-      visited = nv
-      frontier = next._1.select(col("node"))
-      frontierPath = next._2
+      grew = next.limit(1).count() > 0
+      if (grew) { // an empty frontier adds nothing — converged
+        val nv = graft.operators.Stage.materialize(
+          visited.unionAll(next.withColumn("hop", lit(i))), s"bfs-v$i")
+        graft.operators.Stage.release(visited)
+        visited = nv
+      }
+      if (i > 1) graft.operators.Stage.release(frontier)
+      frontier = next
       i += 1
     }
     if (grew)
       System.err.println(s"[bfs] WARNING: frontier still non-empty after " +
         s"$maxRounds rounds — nodes beyond $maxRounds hops are NOT in the " +
         "output; raise `maxRounds` to traverse further")
-    // the last frontier is folded into v_rounds; only the visited
-    // table must outlive the call
-    if (frontierPath.nonEmpty) graft.operators.Stage.drop(frontier, frontierPath)
-    dropEdges()
-    visited._1.select(col("node").as("part_id"),
+    // the last frontier is folded into the visited table, the only
+    // stage that outlives the call
+    if (i > 1) graft.operators.Stage.release(frontier)
+    visited.select(col("node").as("part_id"),
       col("hop").cast("long").as("hop"))
   }
 
@@ -828,7 +821,7 @@ object GraphOps {
       // node-sized scan (the q169 build/probe seam)
       graft.operators.SessionCache.memoOn(spark, dir,
         s"bfs-converged|$dir|cap=16") {
-        bfsHopsFrom(ugraphFor(spark, dir), () => (), maxRounds = 16)
+        bfsHopsFrom(ugraphFor(spark, dir), maxRounds = 16)
       }
     },
     oracle = Some {
@@ -888,25 +881,24 @@ object GraphOps {
       .select(col("node"), (-col("best.nl")).as("label"))
 
   def labelProp(baskets: DataFrame, rounds: Int = 4): DataFrame = {
-    val (edges, edgesPath) = undirectedEdges(baskets)
-    labelPropFrom(edges,
-      () => graft.operators.Stage.drop(edges, edgesPath), rounds)
+    // the round-0 labels are a plan over the edges, so the result only
+    // outlives the edge stream once at least one round is staged
+    require(rounds >= 1, "label propagation needs at least one round")
+    val edges = undirectedEdges(baskets)
+    try labelPropFrom(edges, rounds)
+    finally graft.operators.Stage.release(edges)
   }
 
-  private def labelPropFrom(edges: DataFrame, dropEdges: () => Unit,
-      rounds: Int): DataFrame = {
-    var labels = graft.operators.Stage.materializeWithPath(
-      edges.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("label")),
-      "lpa-l0")
-    for (i <- 1 to rounds) {
-      val nl = graft.operators.Stage.materializeWithPath(
-        lpaRound(edges, labels._1), s"lpa-l$i")
-      graft.operators.Stage.drop(labels._1, labels._2)
-      labels = nl
-    }
-    dropEdges()
-    labels._1.select(col("node").as("part_id"), col("label").as("community"))
+  /** LPA over an already-staged undirected edge stream, which stays
+    * with the caller; the result scans only the final label round. */
+  private def labelPropFrom(edges: DataFrame, rounds: Int): DataFrame = {
+    // every node starts labeled with its own id — an unstaged
+    // projection the first round reads once
+    val l0 = edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label"))
+    graft.operators.Stage.iterate(l0, "lpa-l", rounds)(
+        (labels, _) => lpaRound(edges, labels))((_, _) => false)
+      .state.select(col("node").as("part_id"), col("label").as("community"))
   }
 
   /** q141 — 4-round label-propagation communities on the co-purchase
@@ -918,7 +910,7 @@ object GraphOps {
       // projection so a warm pass is one node-sized scan
       graft.operators.SessionCache.memoOn(spark, dir,
         s"lpa-converged|$dir|rounds=4") {
-        labelPropFrom(ugraphFor(spark, dir), () => (), rounds = 4)
+        labelPropFrom(ugraphFor(spark, dir), rounds = 4)
       }
     },
     oracle = Some {
@@ -988,45 +980,38 @@ object GraphOps {
     * rounds, where post-convergence rounds are no-ops, so the hash
     * gate certifies the same fixpoint at any SF. */
   def weightedPaths(baskets: DataFrame, maxRounds: Int = 16): DataFrame = {
-    val (edges, edgesPath) = graft.operators.Stage.materializeWithPath(
+    val edges = graft.operators.Stage.materialize(
       weightedEdgeStream(baskets), "sssp-edges")
-    weightedPathsFrom(edges,
-      () => graft.operators.Stage.drop(edges, edgesPath), maxRounds)
+    try weightedPathsFrom(edges, maxRounds)
+    finally graft.operators.Stage.release(edges)
   }
 
-  private def weightedPathsFrom(edges: DataFrame, dropEdges: () => Unit,
+  /** Relaxation over an already-staged weighted edge stream, which
+    * stays with the caller; the result scans only the final distance
+    * round. */
+  private def weightedPathsFrom(edges: DataFrame,
       maxRounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val seedRow = edges.agg(min(col("src"))).collect()(0)
-    if (seedRow.isNullAt(0)) {
-      dropEdges()
+    if (seedRow.isNullAt(0))
       return Seq.empty[(Long, Long)].toDF("part_id", "dist")
-    }
-    var dist = graft.operators.Stage.materializeWithPath(
-      Seq((seedRow.getLong(0), 0L)).toDF("node", "dist"), "sssp-d0")
-    var improved = true
-    var i = 1
-    while (i <= maxRounds && improved) {
-      val nd = graft.operators.Stage.materializeWithPath(
-        dist._1
+    val d0 = Seq((seedRow.getLong(0), 0L)).toDF("node", "dist")
+    val relaxed = graft.operators.Stage.iterate(d0, "sssp-d", maxRounds) {
+      (dist, _) =>
+        dist
           .unionAll(edges
-            .join(dist._1.withColumnRenamed("node", "src"), Seq("src"))
+            .join(dist.withColumnRenamed("node", "src"), Seq("src"))
             .select(col("dst").as("node"), (col("dist") + col("w")).as("dist")))
-          .groupBy(col("node")).agg(min(col("dist")).as("dist")),
-        s"sssp-d$i")
-      improved = nd._1.join(dist._1, Seq("node", "dist"), "left_anti")
-        .limit(1).count() > 0
-      graft.operators.Stage.drop(dist._1, dist._2)
-      dist = nd
-      i += 1
+          .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+    } { (dist, nd) =>
+      nd.join(dist, Seq("node", "dist"), "left_anti").limit(1).count() == 0
     }
-    if (improved)
+    if (!relaxed.converged)
       System.err.println(s"[sssp] WARNING: distances still improving after " +
         s"$maxRounds rounds — paths longer than $maxRounds edges are NOT " +
         "final; raise `maxRounds`")
-    dropEdges()
-    dist._1.select(col("node").as("part_id"), col("dist"))
+    relaxed.state.select(col("node").as("part_id"), col("dist"))
   }
 
   /** q143 — rarity-weighted shortest distances from the minimum part
@@ -1039,7 +1024,7 @@ object GraphOps {
       // memoize the projection so a warm pass is one node-sized scan
       graft.operators.SessionCache.memoOn(spark, dir,
         s"sssp-converged|$dir|cap=16") {
-        weightedPathsFrom(wgraphFor(spark, dir), () => (), maxRounds = 16)
+        weightedPathsFrom(wgraphFor(spark, dir), maxRounds = 16)
       }
     },
     oracle = Some {
@@ -1098,33 +1083,35 @@ object GraphOps {
       iters: Int): (DataFrame, DataFrame) = {
     require(iters >= 1,
       "hits needs at least 1 iteration: hub scores only exist after round 1")
-    val (edges, edgesPath) = graft.operators.Stage.materializeWithPath(
+    val edges = graft.operators.Stage.materialize(
       pairs.select(col("part"), col("supp")).distinct(), "hits-edges")
     // each raw half-round table is referenced TWICE (its own max, the
-    // normalize) and feeds the next round's join — STAGED per round
-    // with eager drops (the q133 per-round-state lesson; an unstaged
-    // chain re-derives the edge join 2^rounds times)
+    // normalize) and feeds the next round's join — STAGED per round,
+    // the previous round's pair released once the new pair is on disk
+    // (the q133 per-round-state lesson; an unstaged chain re-derives the
+    // edge join 2^rounds times). Two coupled states per round, so the
+    // loop is its own rather than Stage.iterate.
     var auth = edges.select(col("part")).distinct()
       .withColumn("score", lit(1000000L))
     var hub: DataFrame = null
-    var spent: Seq[String] = Nil
+    var spent: Seq[DataFrame] = Nil
     for (_ <- 1 to iters) {
-      val (hRaw, hp) = graft.operators.Stage.materializeWithPath(
+      val hRaw = graft.operators.Stage.materialize(
         edges.join(auth, Seq("part"))
           .groupBy(col("supp")).agg(sum(col("score")).as("raw")),
         "hits-h")
       hub = hRaw.crossJoin(broadcast(hRaw.agg(max(col("raw")).as("mx"))))
         .select(col("supp"),
           expr("(CAST(raw AS DECIMAL(38,0)) * 1000000) DIV mx").as("score"))
-      val (aRaw, ap) = graft.operators.Stage.materializeWithPath(
+      val aRaw = graft.operators.Stage.materialize(
         edges.join(hub, Seq("supp"))
           .groupBy(col("part")).agg(sum(col("score")).as("raw")),
         "hits-a")
       auth = aRaw.crossJoin(broadcast(aRaw.agg(max(col("raw")).as("mx"))))
         .select(col("part"),
           expr("(CAST(raw AS DECIMAL(38,0)) * 1000000) DIV mx").as("score"))
-      spent.foreach(p => graft.operators.Stage.drop(edges, p))
-      spent = Seq(hp, ap)
+      spent.foreach(graft.operators.Stage.release)
+      spent = Seq(hRaw, aRaw)
     }
     // land the FINAL normalized tables (entity-sized — one small write
     // each) so a probe is a parquet scan, not a re-run of the max
@@ -1132,8 +1119,7 @@ object GraphOps {
     // stages and the edge set — nothing else reads them
     val aFinal = graft.operators.Stage.materialize(auth, "hits-auth")
     val hFinal = graft.operators.Stage.materialize(hub, "hits-hub")
-    spent.foreach(p => graft.operators.Stage.drop(edges, p))
-    graft.operators.Stage.drop(edges, edgesPath)
+    (spent :+ edges).foreach(graft.operators.Stage.release)
     (aFinal, hFinal)
   }
 

@@ -323,16 +323,17 @@ object Mining {
     * rule). Output: one row per entity — id (min member), member
     * count, representative doc.
     *
-    * The CC loop is plain synchronous min-label propagation over the
-    * staged symmetric link set — one node-sized equi-join + left join
-    * per round, staged with eager drops, run to CONVERGENCE (the
-    * changed-count rides the stage write via observe() — one action
-    * per round, bounded by maxRounds) so the labels equal the oracle's
-    * recursive-CTE transitive closure; budget exhaustion FAILS (a
-    * split-entity answer is never served). Fuzzy-link
-    * components are shallow (block-bounded stars and short chains), so
-    * rounds ≈ component diameter stays single-digit — the q49
-    * pointer-doubling machinery would be overkill here.
+    * The CC loop is [[graft.ext.DedupCluster.components]], the core q49
+    * clusters with: min-label propagation over the staged symmetric link
+    * set, one node-sized equi-join + left join per round, plus a
+    * pointer-doubling hop that engages only when the changed-count stops
+    * halving. Shallow components (block-bounded stars) never pay the
+    * hop; a chain of near-copies (each record one edit from the next)
+    * contracts in O(log diameter) rounds instead of one round per link.
+    * The loop runs to CONVERGENCE (the changed-count rides the stage
+    * write via observe() — one action per round, bounded by maxRounds),
+    * so the labels equal the oracle's recursive-CTE transitive closure;
+    * budget exhaustion FAILS (a split-entity answer is never served).
     *
     * Scale shape: candidate links are block-bounded (q80), the loop
     * state is node-sized, survivorship is one partitioned rank window
@@ -341,49 +342,20 @@ object Mining {
       maxRounds: Int = 12): DataFrame = {
     val links = CorpusOps.fuzzyMatch(docs, maxDist)
       .select(col("doc_a").as("ea"), col("doc_b").as("eb"))
-    val (edges, edgesPath) = graft.operators.Stage.materializeWithPath(
+    val edges = graft.operators.Stage.materialize(
       links.unionAll(links.select(col("eb").as("ea"), col("ea").as("eb"))),
       "er-edges")
-    // round-0 labels are a pruned projection — no lineage to barrier
-    var labels = docs.select(col("doc_id"), col("doc_id").as("ent"))
-    var labelsPath = ""
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      round += 1
-      val nbrMin = edges.join(labels, col("ea") === col("doc_id"))
-        .groupBy(col("eb")).agg(min(col("ent")).as("nbr_min"))
-      // convergence metric rides the stage WRITE via observe() (the
-      // q49/DedupCluster recipe): one Spark action per round, where the
-      // round-10 shape paid a second full pass (an anti-join count over
-      // the just-staged labels) purely to test for motion
-      val obs = org.apache.spark.sql.Observation(s"er-round-$round")
-      val next = graft.operators.Stage.materializeWithPath(
-        labels.join(nbrMin, col("doc_id") === col("eb"), "left")
-          .select(col("doc_id"), col("ent").as("prev_ent"),
-            least(col("ent"), coalesce(col("nbr_min"), col("ent")))
-              .as("ent"))
-          .observe(obs, coalesce(sum(when(
-            col("ent") =!= col("prev_ent"), 1L).otherwise(0L)), lit(0L))
-            .as("changed"))
-          .select(col("doc_id"), col("ent")),
-        s"er-l$round")
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
-      if (labelsPath.nonEmpty)
-        graft.operators.Stage.drop(labels, labelsPath)
-      labels = next._1
-      labelsPath = next._2
-    }
+    val (cc, stats) = graft.ext.DedupCluster.components(
+      edges, docs.select(col("doc_id")), maxRounds)
+    graft.operators.Stage.release(edges)
     // never serve split entities silently: a component still moving at
-    // maxRounds must fail loudly (round-10 ADVICE — warn-only meant a
-    // scale run could return labels diverging from transitive closure).
-    // Fuzzy-link components are block-bounded stars/short chains, so
-    // hitting this requires diameter > maxRounds — not a dedup graph.
-    require(converged,
+    // maxRounds must fail loudly (warn-only meant a scale run could
+    // return labels diverging from transitive closure)
+    require(stats.converged,
       s"[entity-resolve] labels still moving after $maxRounds rounds — " +
         "components wider than the budget would be served SPLIT; raise " +
         "`maxRounds`")
-    graft.operators.Stage.drop(edges, edgesPath)
+    val labels = cc.select(col("doc_id"), col("cluster_id").as("ent"))
     val sized = labels.groupBy(col("ent")).agg(count(lit(1)).as("n_docs"))
     val byCompleteness = Window.partitionBy(col("ent"))
       .orderBy(col("n_chars").desc_nulls_last, col("doc_id").asc)

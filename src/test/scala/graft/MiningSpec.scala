@@ -207,6 +207,20 @@ class MiningSpec extends AnyFunSuite {
     assert(got.keySet == Set(1L, 2L))
   }
 
+  test("entityResolve merges a 29-record chain longer than its round budget") {
+    // record i = "alph" + "x"*i + "a"*(28-i): 32 chars, one edit from
+    // its neighbours and two from anything further, so at maxDist 1
+    // only neighbours link — diameter 28, far beyond the 12-round
+    // budget of plain min-label propagation. Pointer doubling contracts
+    // the chain in O(log 28) rounds.
+    val docs = (0 until 29).map { i =>
+      (i.toLong, "s1", "alph" + "x" * i + "a" * (28 - i), 32L)
+    }.toDF("doc_id", "source", "text", "n_chars")
+    val got = Mining.entityResolve(docs, maxDist = 1)
+      .as[(Long, Long, Long)].collect()
+    assert(got.toSeq == Seq((0L, 29L, 0L)), got.mkString(", "))
+  }
+
   // ---- q146 sequential patterns ----
 
   test("seqPatterns counts first-occurrence order and drops ties") {

@@ -119,7 +119,7 @@ object MinHashDedup {
   private[ext] def bandedJaccardPairsRaw(docs: DataFrame, threshold: Double,
       numTables: Int = 8, bandWidth: Int = 2): (DataFrame, () => Unit) = {
     val spark = docs.sparkSession
-    graft.functions.TextFunctions.registerMinHash(spark)
+    graft.GraftExtensions.install(spark)
     val sh = graft.operators.Stage.materialize(
       shingled(docs), "banded-shingles")
     // staged signature table: doc_id + (numTables·bandWidth) longs per

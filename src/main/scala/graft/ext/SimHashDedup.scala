@@ -47,7 +47,7 @@ object SimHashDedup {
   val q31: Q = Q(
     "q31_dedup_simhash",
     run = { (spark, dir) =>
-      graft.functions.TextFunctions.registerSimHashMd5(spark)
+      graft.GraftExtensions.install(spark)
       // staged once to temp parquet: the signature table feeds the band
       // self-join (both sides) plus the final join. A persist() here
       // would leak cached blocks to non-Bench callers; staging gives the

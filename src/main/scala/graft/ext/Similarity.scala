@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
-import graft.functions.VectorFunctions
+import graft.functions.VectorFunctions._
 
 /** Approximate nearest-neighbor scale path (SURVEY.md §2.D): sign-LSH
   * (random-hyperplane) bucketing over the embedding column.
@@ -63,7 +63,7 @@ object Similarity {
   /** Bucket id: B sign bits packed into an int. */
   private def bucketOf(emb: Column, planes: Seq[Column]): Column =
     planes.zipWithIndex.map { case (h, i) =>
-      when(VectorFunctions.dotF(emb, h) > 0, lit(1 << i)).otherwise(lit(0))
+      when(dotF(emb, h) > 0, lit(1 << i)).otherwise(lit(0))
     }.reduce(_ + _)
 
   /** Embedding dimensionality, sampled from the first row (one tiny
@@ -102,17 +102,14 @@ object Similarity {
     * `dim` defaults to the dimensionality of the data (first row). */
   def lshTopK(embeddings: DataFrame, k: Int = 5, nQueries: Int = 10,
       dim: Int = -1): DataFrame = {
-    val spark = embeddings.sparkSession
-    VectorFunctions.registerVecDot(spark)
     val dOpt = if (dim > 0) Some(dim) else dimOf(embeddings, "embedding")
     if (dOpt.isEmpty) return emptyTopK(embeddings)
     val planes = hyperplanes(dOpt.get, Bits)
     // undecodable (null) embeddings are skipped, not bucketed: a null
     // dot product would otherwise silently land every null row in
     // bucket 0 with null cosines downstream
-    val e = embeddings.filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", sqrt(expr("vec_dot_f(embedding, embedding)")))
+    val e = withNorm(embeddings.filter(col("embedding").isNotNull)
+        .select(col("vec_id"), col("embedding")))
       .withColumn("bucket", bucketOf(col("embedding"), planes))
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"),
@@ -123,14 +120,11 @@ object Similarity {
       .withColumn("probe_bucket",
         expr("cast(qbucket as int) ^ cast(probe as int)"))
       .drop("probe")
-    e.join(broadcast(q), col("bucket") === col("probe_bucket") &&
+    topKByCosine(e.join(broadcast(q), col("bucket") === col("probe_bucket") &&
         col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"),
-        (expr("vec_dot_f(embedding, qemb)") / (col("nrm") * col("qnrm")))
-          .as("cos_sim"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid"))))
-      .filter(col("rnk") <= k)
+        cosineF(col("embedding"), col("qemb"), col("nrm"), col("qnrm"))
+          .as("cos_sim")), "qid", "nid", k)
   }
 
   /** Sub-quadratic embedding near-dup: the scale path for q32's
@@ -150,8 +144,6 @@ object Similarity {
     */
   def neardupLsh(embeddings: DataFrame, threshold: Double = ndThreshold,
       bits: Int = ndBits, tables: Int = ndTables): DataFrame = {
-    val spark = embeddings.sparkSession
-    VectorFunctions.registerVecDot(spark)
     val dOpt = dimOf(embeddings, "embedding")
     // all-null/empty at plan-build time: schema-correct empty pairs
     if (dOpt.isEmpty)
@@ -162,9 +154,8 @@ object Similarity {
     // bucket keys for all tables in ONE codegen projection; staged to
     // temp parquet (not persisted) because three joins consume it
     val e = graft.operators.Stage.materialize(
-      embeddings.filter(col("embedding").isNotNull)
-        .select(col("vec_id"), col("label"), col("embedding"))
-        .withColumn("nrm", sqrt(expr("vec_dot_f(embedding, embedding)")))
+      withNorm(embeddings.filter(col("embedding").isNotNull)
+          .select(col("vec_id"), col("label"), col("embedding")))
         .withColumn("buckets", array((0 until tables).map { t =>
           bucketOf(col("embedding"), hyperplanes(d, bits, salt = 1000 + t))
         }: _*)),
@@ -189,7 +180,7 @@ object Similarity {
       col("nrm").as("nrm_b"))
     cand.join(a, Seq("id_a")).join(b, Seq("id_b"))
       .select(col("id_a"), col("id_b"), col("label"),
-        (expr("vec_dot_f(emb_a, emb_b)") / (col("nrm_a") * col("nrm_b")))
+        cosineF(col("emb_a"), col("emb_b"), col("nrm_a"), col("nrm_b"))
           .as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
   }
@@ -237,8 +228,6 @@ object Similarity {
     * build; callers short-circuit to their schema-correct empty). */
   def ivfBuild(embeddings: DataFrame, nCells: Int = 16,
       maxFitRows: Long = 100000L): Option[IvfIndex] = {
-    val spark = embeddings.sparkSession
-    VectorFunctions.registerVecDot(spark)
     require(maxFitRows >= nCells,
       s"ivf: maxFitRows ($maxFitRows) must cover nCells ($nCells)")
     // undecodable (null) rows are skipped, never bucketed
@@ -266,10 +255,9 @@ object Similarity {
       .select(col("center_id").as("pcell"), col("centroid"))
     // assignment: the zero-exchange CenterAssign fold over every vector
     val assigned = graft.operators.Stage.materialize(
-      graft.queries.CenterAssign.withNearest(base,
+      withNorm(graft.queries.CenterAssign.withNearest(base,
           centroids.select(col("pcell").as("center_id"), col("centroid")))
-        .select(col("vec_id"), col("embedding"), col("cluster").as("cell"))
-        .withColumn("nrm", sqrt(expr("vec_dot_f(embedding, embedding)"))),
+        .select(col("vec_id"), col("embedding"), col("cluster").as("cell"))),
       "ivf-index")
     Some(IvfIndex(assigned, centroids))
   }
@@ -285,7 +273,9 @@ object Similarity {
 
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): IvfIndex = {
-    VectorFunctions.registerVecDot(spark)
+    // ivfQuery's cosine needs vec_dot_f, and a loaded index never
+    // passes through withNorm
+    graft.GraftExtensions.install(spark)
     IvfIndex(spark.read.parquet(s"$dir/assigned"),
       spark.read.parquet(s"$dir/centroids"))
   }
@@ -306,22 +296,16 @@ object Similarity {
     // |c|²−2·q·c float shortcut, equivalent ranking but a different
     // rounding path than the SQL replay)
     val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("pdist", expr(
-        "aggregate(zip_with(qemb, centroid, (v, m) ->" +
-          " (CAST(v AS DOUBLE) - m) * (CAST(v AS DOUBLE) - m))," +
-          " CAST(0 AS DOUBLE), (acc, x) -> acc + x)"))
+      .withColumn("pdist", sqL2("qemb", "centroid"))
       .withColumn("prnk", row_number().over(
         Window.partitionBy("qid").orderBy(col("pdist"), col("pcell"))))
       .filter(col("prnk") <= nProbe)
       .select(col("qid"), col("qemb"), col("qnrm"), col("pcell"))
-    assigned.join(broadcast(probes),
+    topKByCosine(assigned.join(broadcast(probes),
         col("cell") === col("pcell") && col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"),
-        (expr("vec_dot_f(embedding, qemb)") / (col("nrm") * col("qnrm")))
-          .as("cos_sim"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid"))))
-      .filter(col("rnk") <= k)
+        cosineF(col("embedding"), col("qemb"), col("nrm"), col("qnrm"))
+          .as("cos_sim")), "qid", "nid", k)
   }
 
   /** Cold-path convenience: build + query in one call (a cold build
@@ -368,15 +352,13 @@ object Similarity {
     * touch), staged batch-sized. Probing the appended index
     * ([[ivfQuery]]) is identical code — the index is just rows. */
   def ivfAppend(index: IvfIndex, batch: DataFrame): IvfIndex = {
-    VectorFunctions.registerVecDot(batch.sparkSession)
     val add = graft.operators.Stage.materialize(
-      graft.queries.CenterAssign.withNearest(
+      withNorm(graft.queries.CenterAssign.withNearest(
           batch.filter(col("embedding").isNotNull)
             .select(col("vec_id"), col("embedding")),
           index.centroids.select(col("pcell").as("center_id"),
             col("centroid")))
-        .select(col("vec_id"), col("embedding"), col("cluster").as("cell"))
-        .withColumn("nrm", sqrt(expr("vec_dot_f(embedding, embedding)"))),
+        .select(col("vec_id"), col("embedding"), col("cluster").as("cell"))),
       "ivf-append")
     IvfIndex(index.assigned.unionByName(add), index.centroids)
   }

@@ -45,75 +45,14 @@ object TextFunctions {
     expr(s"aggregate($toksCol, 0L, (h, t) -> " +
       "pmod(h * 1000003L + pmod(xxhash64(t), 2147483647L), 2147483647L))")
 
-  /** 64-bit SimHash: codegen'd Catalyst expression (the scale path; see
-    * [[SimHash64]]) registered as SQL function `simhash64`. Values are
-    * identical to [[simhash64Hof]] on the SAME token array (same xxhash64
-    * seed-42 per token, one vote per element) — callers choose whether to
-    * array_distinct first; neither implementation dedupes internally. */
-  def registerSimHash(spark: org.apache.spark.sql.SparkSession): Unit = {
-    // no-op when already registered (GraftExtensions sessions) — see
-    // VectorFunctions.registerVecDot for rationale
-    val reg = spark.sessionState.functionRegistry
-    val ident = new org.apache.spark.sql.catalyst.FunctionIdentifier("simhash64")
-    if (!reg.functionExists(ident))
-      reg.createOrReplaceTempFunction("simhash64", simHashBuilder, "built-in")
-  }
-
-  /** Single arity-checked builder shared by the temp-function path and
-    * GraftExtensions' injectFunction path. */
-  val simHashBuilder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression = { exprs =>
-    require(exprs.length == 1,
-      s"simhash64 expects 1 argument, got ${exprs.length}")
-    SimHash64(exprs.head)
-  }
-
-  /** md5-family SimHash signature (codegen'd — see [[SimHashMd5]])
-    * registered as SQL function `simhash_md5(tokens)`. */
-  def registerSimHashMd5(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val ident =
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("simhash_md5")
-    if (!reg.functionExists(ident))
-      reg.createOrReplaceTempFunction("simhash_md5", simHashMd5Builder,
-        "built-in")
-  }
-
-  /** Arity-checked builder shared by the temp-function path and
-    * GraftExtensions. */
-  val simHashMd5Builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression = { exprs =>
-    require(exprs.length == 1,
-      s"simhash_md5 expects 1 argument, got ${exprs.length}")
-    SimHashMd5(exprs.head)
-  }
-
-  /** k-minhash signature (codegen'd — see [[MinHashK]]) registered as
-    * SQL function `minhash_k(shingles, k)`. */
-  def registerMinHash(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val ident = new org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_k")
-    if (!reg.functionExists(ident))
-      reg.createOrReplaceTempFunction("minhash_k", minHashBuilder, "built-in")
-  }
-
-  /** Arity/foldability-checked builder shared by the temp-function path
-    * and GraftExtensions. */
-  val minHashBuilder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression = { exprs =>
-    require(exprs.length == 2,
-      s"minhash_k expects 2 arguments (shingles, k), got ${exprs.length}")
-    require(exprs(1).foldable, "minhash_k: k must be a literal")
-    MinHashK(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue())
-  }
-
   /** 64-bit SimHash over the tokens of `toksCol` (a named array<string>
     * column): per-token xxhash64, ±1 vote per bit, sign → bit. One vote
     * PER ELEMENT — pass array_distinct(toks) for set semantics. Entirely
     * in one projection via higher-order folds — no explode, no shuffle;
     * at 100 TB this is embarrassingly parallel per row. Reference
     * (interpreted) formulation; [[SimHash64]] is the codegen'd equivalent
-    * used by the queries. */
+    * used by the queries (SQL function `simhash64`, see
+    * [[graft.GraftExtensions.functions]]). */
   def simhash64Hof(toksCol: String): Column = expr(
     s"""aggregate(
           zip_with(

@@ -1,17 +1,27 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Dense-vector math over `array<float>` embedding columns, built from
-  * codegen'd higher-order functions (SURVEY.md §2.D) — no UDFs, no
-  * serialization boundary.
+/** Dense-vector math over `array<float>` embedding columns (SURVEY.md
+  * §2.D) — the one module that owns the oracle-pinned vector arithmetic.
   *
-  * Determinism: floats are widened to double BEFORE any arithmetic, and
-  * `aggregate` folds element-by-element in index order — the same
-  * sequential order DuckDB's list_sum uses, so cosine values are
-  * bit-identical to the oracle.
+  * Two formulations of the same values:
+  *  - the KERNEL every query uses: the codegen'd [[VecDotFloat]]
+  *    (`vec_dot_f`, [[dotF]]) plus the norm, cosine, squared-L2 and
+  *    cosine top-k built on it;
+  *  - the higher-order-function REFERENCE ([[vecToDouble]], [[dot]],
+  *    [[norm]], [[cosine]]): plain Spark expressions, kept so tests can
+  *    compare the fast path against them.
+  *
+  * Determinism (the DuckDB oracle's list_sum recipe, bit for bit):
+  * floats are widened to double BEFORE any arithmetic; every fold
+  * accumulates element by element in index order; a norm is computed
+  * ONCE per row and reused; cosine is `dot / (‖a‖ · ‖b‖)` in that operand
+  * order; top-k ranks by `cos_sim` desc with a unique neighbour-id
+  * tie-break.
   */
 object VectorFunctions {
 
@@ -30,33 +40,51 @@ object VectorFunctions {
     * (dot / (sqrt(ssA) * sqrt(ssB))) so every IEEE op matches. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Codegen'd float-array dot product (see [[VecDotFloat]]): the scale
-    * path — same values as [[dot]] over [[vecToDouble]]'d inputs, ~an
-    * order of magnitude faster (stays in whole-stage codegen). Exposed
-    * through the session's function registry so no private Column
-    * constructors are needed. */
-  def registerVecDot(spark: org.apache.spark.sql.SparkSession): Unit = {
-    // no-op when already registered (e.g. the session was built with
-    // spark.sql.extensions=graft.GraftExtensions — the preferred front
-    // door): re-registering would spam "replaced a previously registered
-    // function" warnings on every query invocation
-    val reg = spark.sessionState.functionRegistry
-    val ident = new org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot_f")
-    if (!reg.functionExists(ident))
-      reg.createOrReplaceTempFunction("vec_dot_f", vecDotBuilder, "built-in")
-  }
-
-  /** Single arity-checked builder shared by the temp-function path and
-    * GraftExtensions' injectFunction path. */
-  val vecDotBuilder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression = { exprs =>
-    require(exprs.length == 2,
-      s"vec_dot_f expects 2 arguments, got ${exprs.length}")
-    VecDotFloat(exprs.head, exprs(1))
-  }
-
-  /** Column form of the codegen'd dot product (requires registerVecDot
-    * on the session; inputs must be array<float>). */
+  /** Codegen'd float-array dot product (see [[VecDotFloat]]): same values
+    * as [[dot]] over [[vecToDouble]]'d inputs, ~an order of magnitude
+    * faster (stays in whole-stage codegen). Resolved through the
+    * session's function registry when the Column is first used, so the
+    * session must carry `vec_dot_f`: [[withNorm]] installs it on
+    * sessions built without GraftExtensions. */
   def dotF(a: Column, b: Column): Column =
     call_function("vec_dot_f", a, b)
+
+  /** Euclidean norm over the codegen'd dot: `sqrt(vec_dot_f(v, v))`. */
+  def normF(v: Column): Column = sqrt(dotF(v, v))
+
+  /** Cosine over PRECOMPUTED norms: `vec_dot_f(a, b) / (normA * normB)`,
+    * the oracle's operand order. */
+  def cosineF(a: Column, b: Column, normA: Column, normB: Column): Column =
+    dotF(a, b) / (normA * normB)
+
+  /** SQL text of the full-vector squared-L2 fold between an array<float>
+    * `v` and an array<double> (or float, widened by coercion) `m`:
+    * float→double widening first, then one index-ordered double sum —
+    * DuckDB's `list_sum(list_transform(list_zip(v::DOUBLE[], m),
+    * x -> (x[1]-x[2])*(x[1]-x[2])))`. SQL text so it also nests inside
+    * higher-order lambdas (CenterAssign's per-center scoring). */
+  def sqL2Sql(v: String, m: String): String =
+    s"aggregate(zip_with($v, $m," +
+      " (v, m) -> (CAST(v AS DOUBLE) - m) * (CAST(v AS DOUBLE) - m))," +
+      " CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
+
+  /** Column form of [[sqL2Sql]] over two named columns. */
+  def sqL2(v: String, m: String): Column = expr(sqL2Sql(v, m))
+
+  /** `df` plus `nrm` = [[normF]] of its `embedding` column — the per-row
+    * norm every cosine downstream reuses. Installs `vec_dot_f` on `df`'s
+    * session when it was built without GraftExtensions. */
+  def withNorm(df: DataFrame): DataFrame = {
+    graft.GraftExtensions.install(df.sparkSession)
+    df.withColumn("nrm", normF(col("embedding")))
+  }
+
+  /** The cosine ranking step: per `by` group, keep the top `k` rows of
+    * `scored` by `cos_sim` desc, then `nid` asc (a unique tie-break, so
+    * both engines pick the same rows), numbering them in `rank`. */
+  def topKByCosine(scored: DataFrame, by: String, nid: String, k: Int,
+      rank: String = "rnk"): DataFrame =
+    scored.withColumn(rank, row_number().over(
+        Window.partitionBy(col(by)).orderBy(col("cos_sim").desc, col(nid).asc)))
+      .filter(col(rank) <= k)
 }

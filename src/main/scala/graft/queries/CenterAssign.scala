@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.VectorFunctions
 
 /** Shared nearest-center assignment (q126 Lloyd k-means, q111 SemDeDup).
   *
@@ -40,9 +41,7 @@ object CenterAssign {
   private val scoredExpr =
     "transform(cents, c -> named_struct(" +
       "'cluster', c.center_id," +
-      "'dist_sq', aggregate(zip_with(embedding, c.centroid," +
-      " (v, m) -> (CAST(v AS DOUBLE) - m) * (CAST(v AS DOUBLE) - m))," +
-      " CAST(0 AS DOUBLE), (acc, x) -> acc + x)))"
+      s"'dist_sq', ${VectorFunctions.sqL2Sql("embedding", "c.centroid")}))"
 
   // first strict minimum; init = element 0 (self-compare is a no-op)
   private val bestExpr =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.functions.VectorFunctions
 
 /** Product quantization ANN (SURVEY.md §2.8, round-10): Jégou, Douze &
   * Schmid 2011, "Product Quantization for Nearest Neighbor Search" —
@@ -399,10 +400,7 @@ object PQuant {
         .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
       val probes = q.crossJoin(broadcast(coarse
           .select(col("center_id").as("pcell"), col("centroid").as("ccent"))))
-        .withColumn("pdist", expr(
-          "aggregate(zip_with(qemb, ccent, (v, m) ->" +
-            " (CAST(v AS DOUBLE) - m) * (CAST(v AS DOUBLE) - m))," +
-            " CAST(0 AS DOUBLE), (acc, x) -> acc + x)"))
+        .withColumn("pdist", VectorFunctions.sqL2("qemb", "ccent"))
         .withColumn("prnk", row_number().over(
           Window.partitionBy("qid").orderBy(col("pdist").asc, col("pcell").asc)))
         .filter(col("prnk") <= nProbe)
@@ -517,11 +515,8 @@ object PQuant {
         col("embedding").as("nemb"))
       short.join(broadcast(qraw), Seq("qid"))
         .join(nraw, Seq("nid"))
-        .select(col("qid"), col("nid"), expr(
-          "aggregate(zip_with(nemb, qemb, (v, m) ->" +
-            " (CAST(v AS DOUBLE) - CAST(m AS DOUBLE)) *" +
-            " (CAST(v AS DOUBLE) - CAST(m AS DOUBLE)))," +
-            " CAST(0 AS DOUBLE), (acc, x) -> acc + x)").as("dist_sq"))
+        .select(col("qid"), col("nid"),
+          VectorFunctions.sqL2("nemb", "qemb").as("dist_sq"))
         .withColumn("rnk", row_number().over(
           Window.partitionBy("qid")
             .orderBy(col("dist_sq").asc, col("nid").asc)))

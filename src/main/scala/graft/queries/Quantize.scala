@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
-import graft.functions.VectorFunctions
+import graft.functions.VectorFunctions._
 
 /** Embedding compression + diversity selection (SURVEY.md §2.8,
   * round-9): the two vector-side operators a 100 TB curation pipeline
@@ -136,17 +136,15 @@ object Quantize {
   private[graft] def mmrCandidateQuery(
       spark: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
-    VectorFunctions.registerVecDot(spark)
-    val e = Tables.embeddings(spark, dir)
+    val e = withNorm(Tables.embeddings(spark, dir)
       .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", sqrt(expr("vec_dot_f(embedding, embedding)")))
+      .select(col("vec_id"), col("embedding")))
     val q = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("qemb"), col("nrm").as("qnrm"))
     e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
       .select(col("vec_id"), col("embedding"), col("nrm"),
-        round(expr("vec_dot_f(embedding, qemb)")
-          / (col("nrm") * col("qnrm")) * lit(1e6)).cast("long").as("rel"))
+        round(cosineF(col("embedding"), col("qemb"), col("nrm"), col("qnrm"))
+          * lit(1e6)).cast("long").as("rel"))
       .orderBy(col("rel").desc, col("vec_id").asc).limit(nCand)
   }
 
@@ -161,8 +159,8 @@ object Quantize {
       val sims = cands.crossJoin(broadcast(other))
         .filter(col("vec_id") =!= col("b_id"))
         .select(col("vec_id").as("a_id"), col("b_id"),
-          round(expr("vec_dot_f(embedding, bemb)")
-            / (col("nrm") * col("bnrm")) * lit(1e6)).cast("long").as("sim"))
+          round(cosineF(col("embedding"), col("bemb"), col("nrm"), col("bnrm"))
+            * lit(1e6)).cast("long").as("sim"))
         .as[(Long, Long, Long)].collect()
         .map { case (a, b, s) => (a, b) -> s }.toMap
       val pool = cands.select(col("vec_id"), col("rel"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 import graft.{Q, Tables}
-import graft.functions.VectorFunctions
+import graft.functions.VectorFunctions._
 
 /** Retrieval-style scoring over the corpus (SURVEY.md §2.8, round-8
   * additions): BM25 term-relevance ranking and k-NN pseudo-labeling —
@@ -175,24 +175,18 @@ object Retrieval {
     * rows. At 100 TB this is a broadcast-scan plus two narrow windows —
     * the same plan q25/q89 carry. */
   def knnClassify(embeddings: DataFrame, k: Int = 5): DataFrame = {
-    VectorFunctions.registerVecDot(embeddings.sparkSession)
-    val e = embeddings
+    val e = withNorm(embeddings
       .filter(col("embedding").isNotNull && col("label").isNotNull)
-      .select(col("vec_id"), col("label"), col("embedding"))
-      .withColumn("nrm", sqrt(expr("vec_dot_f(embedding, embedding)")))
+      .select(col("vec_id"), col("label"), col("embedding")))
     val seed = e.filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("sid"), col("label").as("slabel"),
         col("embedding").as("semb"), col("nrm").as("snrm"))
     val test = e.filter(col("vec_id") % 10 =!= 0)
-    val nn = test.crossJoin(broadcast(seed))
+    val nn = topKByCosine(test.crossJoin(broadcast(seed))
       .select(col("vec_id"), col("label").as("true_label"), col("sid"),
         col("slabel"),
-        (expr("vec_dot_f(embedding, semb)") / (col("nrm") * col("snrm")))
-          .as("cos_sim"))
-      .withColumn("nrnk", row_number().over(
-        Window.partitionBy(col("vec_id"))
-          .orderBy(col("cos_sim").desc, col("sid").asc)))
-      .filter(col("nrnk") <= k)
+        cosineF(col("embedding"), col("semb"), col("nrm"), col("snrm"))
+          .as("cos_sim")), "vec_id", "sid", k, rank = "nrnk")
     nn.groupBy(col("vec_id"), col("true_label"), col("slabel"))
       .agg(count(lit(1)).as("n_votes"))
       .withColumn("vrnk", row_number().over(
@@ -251,26 +245,20 @@ object Retrieval {
     * swaps to the q48 IVF index, same downstream contract. */
   def bitextMine(embeddings: DataFrame, docs: DataFrame,
       hub: String = "en"): DataFrame = {
-    VectorFunctions.registerVecDot(embeddings.sparkSession)
-    val e = embeddings
+    val e = withNorm(embeddings
       .filter(col("embedding").isNotNull)
       .join(docs.select(col("doc_id").as("vec_id"), col("lang")), Seq("vec_id"))
       .filter(col("lang").isNotNull)
-      .select(col("vec_id"), col("lang"), col("embedding"))
-      .withColumn("nrm", sqrt(expr("vec_dot_f(embedding, embedding)")))
+      .select(col("vec_id"), col("lang"), col("embedding")))
     val tgt = e.filter(col("lang") === hub)
       .select(col("vec_id").as("tid"), col("embedding").as("temb"),
         col("nrm").as("tnrm"))
     val src = e.filter(col("lang") =!= hub)
-    val ranked = src.crossJoin(broadcast(tgt))
+    val ranked = topKByCosine(src.crossJoin(broadcast(tgt))
       .select(col("vec_id").as("src_id"), col("lang").as("src_lang"),
         col("tid"),
-        (expr("vec_dot_f(embedding, temb)") / (col("nrm") * col("tnrm")))
-          .as("cos_sim"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("src_id"))
-          .orderBy(col("cos_sim").desc, col("tid").asc)))
-      .filter(col("rnk") <= 2)
+        cosineF(col("embedding"), col("temb"), col("nrm"), col("tnrm"))
+          .as("cos_sim")), "src_id", "tid", 2)
     ranked
       .withColumn("cos2", lead(col("cos_sim"), 1).over(
         Window.partitionBy(col("src_id"))
@@ -704,12 +692,10 @@ object Retrieval {
   def hybridRetrieve(docs: DataFrame, embeddings: DataFrame,
       nQueries: Int = 8, armK: Int = 20, topK: Int = 10,
       tfPre: Option[DataFrame] = None): DataFrame = {
-    VectorFunctions.registerVecDot(docs.sparkSession)
     val d = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"))
-    val e = embeddings.filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", sqrt(expr("vec_dot_f(embedding, embedding)")))
+    val e = withNorm(embeddings.filter(col("embedding").isNotNull)
+      .select(col("vec_id"), col("embedding")))
     // query set: docs with both modalities, id < nQueries
     val qids = d.filter(col("doc_id") < nQueries)
       .join(e.select(col("vec_id").as("doc_id")), Seq("doc_id"), "left_semi")
@@ -745,15 +731,11 @@ object Retrieval {
     // ---- vector arm (q25's broadcast-scan cosine) ----
     val vq = e.join(broadcast(qids), e("vec_id") === qids("qid"))
       .select(col("qid"), col("embedding").as("qemb"), col("nrm").as("qnrm"))
-    val vec = e.crossJoin(broadcast(vq))
+    val vec = topKByCosine(e.crossJoin(broadcast(vq))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("doc_id"),
-        (expr("vec_dot_f(embedding, qemb)") / (col("nrm") * col("qnrm")))
-          .as("cos_sim"))
-      .withColumn("vec_rnk", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("cos_sim").desc, col("doc_id").asc)))
-      .filter(col("vec_rnk") <= armK)
+        cosineF(col("embedding"), col("qemb"), col("nrm"), col("qnrm"))
+          .as("cos_sim")), "qid", "doc_id", armK, rank = "vec_rnk")
       .select(col("qid"), col("doc_id"), col("vec_rnk"))
 
     // ---- reciprocal-rank fusion ----

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
-import graft.functions.VectorFunctions
+import graft.functions.VectorFunctions._
 
 /** Embedding similarity over `array<float>` columns (SURVEY.md §2.D):
   * brute-force cosine top-k (the exactness baseline the LSH/IVF variants
@@ -25,24 +25,19 @@ object VectorOps {
   val q25: Q = Q(
     "q25_similarity_topk",
     run = { (spark, dir) =>
-      VectorFunctions.registerVecDot(spark)
       // null (undecodable) embeddings are excluded on BOTH engine and
       // oracle sides — declared semantics, not engine-specific null
       // ordering inside the rank window
-      val e = Tables.embeddings(spark, dir)
+      val e = withNorm(Tables.embeddings(spark, dir)
         .filter(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding"))
-        .withColumn("nrm", sqrt(expr("vec_dot_f(embedding, embedding)")))
+        .select(col("vec_id"), col("embedding")))
       val q = e.select(col("vec_id").as("qid"), col("embedding").as("qemb"),
         col("nrm").as("qnrm")).filter(col("qid") < 10)
-      e.crossJoin(broadcast(q))
+      topKByCosine(e.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("nid"),
-          (expr("vec_dot_f(embedding, qemb)") / (col("nrm") * col("qnrm")))
-            .as("cos_sim"))
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid"))))
-        .filter(col("rnk") <= 5)
+          cosineF(col("embedding"), col("qemb"), col("nrm"), col("qnrm"))
+            .as("cos_sim")), "qid", "nid", 5)
     },
     oracle = Some("""
       WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
@@ -63,18 +58,16 @@ object VectorOps {
   val q32: Q = Q(
     "q32_embedding_neardup",
     run = { (spark, dir) =>
-      VectorFunctions.registerVecDot(spark)
-      val e = Tables.embeddings(spark, dir)
+      val e = withNorm(Tables.embeddings(spark, dir)
         .filter(col("embedding").isNotNull)
-        .select(col("vec_id"), col("label"), col("embedding"))
-        .withColumn("nrm", sqrt(expr("vec_dot_f(embedding, embedding)")))
+        .select(col("vec_id"), col("label"), col("embedding")))
       val a = e.select(col("vec_id").as("id_a"), col("label"),
         col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
       val b = e.select(col("vec_id").as("id_b"), col("label").as("label_b"),
         col("embedding").as("emb_b"), col("nrm").as("nrm_b"))
       a.join(b, col("label") === col("label_b") && col("id_a") < col("id_b"))
         .select(col("id_a"), col("id_b"), col("label"),
-          (expr("vec_dot_f(emb_a, emb_b)") / (col("nrm_a") * col("nrm_b")))
+          cosineF(col("emb_a"), col("emb_b"), col("nrm_a"), col("nrm_b"))
             .as("cos_sim"))
         .filter(col("cos_sim") >= 0.35)
     },
@@ -136,23 +129,18 @@ object VectorOps {
   /** Core of q89 over any (vec_id, label, embedding) frame. */
   def hardNegatives(embeddings: org.apache.spark.sql.DataFrame,
       k: Int = 3, nQueries: Int = 10): org.apache.spark.sql.DataFrame = {
-    VectorFunctions.registerVecDot(embeddings.sparkSession)
-    val e = embeddings
+    val e = withNorm(embeddings
       .filter(col("embedding").isNotNull && col("label").isNotNull)
-      .select(col("vec_id"), col("label"), col("embedding"))
-      .withColumn("nrm", sqrt(expr("vec_dot_f(embedding, embedding)")))
+      .select(col("vec_id"), col("label"), col("embedding")))
     val q = e.select(col("vec_id").as("qid"), col("label").as("qlabel"),
       col("embedding").as("qemb"), col("nrm").as("qnrm"))
       .filter(col("qid") < nQueries)
-    e.crossJoin(broadcast(q))
+    topKByCosine(e.crossJoin(broadcast(q))
       .filter(col("label") =!= col("qlabel"))
       .select(col("qid"), col("vec_id").as("nid"),
         col("label").as("neg_label"),
-        (expr("vec_dot_f(embedding, qemb)") / (col("nrm") * col("qnrm")))
-          .as("cos_sim"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("nid"))))
-      .filter(col("rnk") <= k)
+        cosineF(col("embedding"), col("qemb"), col("nrm"), col("qnrm"))
+          .as("cos_sim")), "qid", "nid", k)
   }
 
   val q89: Q = Q(
@@ -209,10 +197,7 @@ object VectorOps {
       .agg(expr("transform(array_sort(collect_list(struct(pos, mean_v)))," +
         " s -> s.mean_v)").as("centroid"))
     e.join(broadcast(cent), Seq("label"))
-      .withColumn("dist_sq", expr(
-        "aggregate(zip_with(embedding, centroid," +
-          " (v, m) -> (CAST(v AS DOUBLE) - m) * (CAST(v AS DOUBLE) - m))," +
-          " CAST(0 AS DOUBLE), (acc, x) -> acc + x)"))
+      .withColumn("dist_sq", sqL2("embedding", "centroid"))
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("label"))
           .orderBy(col("dist_sq").desc, col("vec_id").asc)))
@@ -278,10 +263,8 @@ object VectorOps {
   def semDedup(vectors: org.apache.spark.sql.DataFrame,
       centers: org.apache.spark.sql.DataFrame,
       tau: Double = 0.35): org.apache.spark.sql.DataFrame = {
-    VectorFunctions.registerVecDot(vectors.sparkSession)
-    val e = vectors.filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", sqrt(expr("vec_dot_f(embedding, embedding)")))
+    val e = withNorm(vectors.filter(col("embedding").isNotNull)
+      .select(col("vec_id"), col("embedding")))
     val assigned = CenterAssign.withNearest(e, centers)
       .select(col("vec_id"), col("cluster"), col("dist_sq"),
         col("embedding"), col("nrm"))
@@ -294,7 +277,7 @@ object VectorOps {
     val removed = assigned.join(sup,
         col("cluster") === col("s_cluster") &&
           col("s_rank") < col("rep_rank") &&
-          (expr("vec_dot_f(embedding, s_emb)") / (col("nrm") * col("s_nrm")))
+          cosineF(col("embedding"), col("s_emb"), col("nrm"), col("s_nrm"))
             >= tau,
         "left_semi")
       .select(col("vec_id").as("r_id"))
@@ -397,11 +380,11 @@ object VectorOps {
   val q218: Q = Q(
     "q218_embedding_audit",
     run = { (spark, dir) =>
-      VectorFunctions.registerVecDot(spark)
+      graft.GraftExtensions.install(spark)
       Tables.embeddings(spark, dir)
         .select(col("label"),
           when(col("embedding").isNull, lit(null))
-            .otherwise(expr("CAST(vec_dot_f(embedding, embedding) AS DOUBLE)"))
+            .otherwise(dotF(col("embedding"), col("embedding")).cast("double"))
             .as("sq"))
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n_vecs"),

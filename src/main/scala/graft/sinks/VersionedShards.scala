@@ -413,10 +413,13 @@ object VersionedShards {
     * shards whose winner ADDS conflict (`readShards`: None for a blind
     * plan — append, compact, optimize; [[AnyShard]] for delete and
     * restore, which read the whole snapshot). A winner that removed
-    * one of `removes` conflicts with every plan. */
+    * one of `removes` conflicts with every plan, and so does one that
+    * removed a file of `keeps` — the live files the committed snapshot
+    * must still hold (restore's target set). */
   private[graft] final case class Plan(
       removes: Seq[(Int, String)] = Nil,
       readds: Seq[(Int, String)] = Nil,
+      keeps: Seq[(Int, String)] = Nil,
       rows: Option[DataFrame] = None,
       parts: Int = 1,
       order: Seq[String] = Nil,
@@ -533,8 +536,9 @@ object VersionedShards {
   /** Read-set validation: did any winner — a version committed in
     * (vRead, vTry) — change state this plan depended on? Two conflict
     * classes, both decided from LOG METADATA only (never a data read):
-    * a winner REMOVED one of our victim files (it rewrote rows we also
-    * rewrote), or a winner ADDED files in a shard the plan read
+    * a winner REMOVED one of our victim or kept files (it rewrote rows
+    * we also rewrote, or dropped a file our snapshot must hold), or a
+    * winner ADDED files in a shard the plan read
     * (`readShards`): those files may hold rows the plan should have
     * seen. A blind plan with nothing to remove skips the winners'
     * manifests entirely — any free slot is serializable for it. Stops
@@ -542,7 +546,7 @@ object VersionedShards {
   private def conflicts(spark: SparkSession, dir: String, p: Plan,
       vRead: Int, vTry: Int): Boolean =
     (p.removes.nonEmpty || p.readShards.nonEmpty) && {
-      val victims = p.removes.map(_._2).toSet
+      val victims = (p.removes ++ p.keeps).map(_._2).toSet
       val read = p.readShards.getOrElse((_: Int) => false)
       // resolve names first, read the content of ONLY the (vRead, vTry)
       // window's winners
@@ -844,25 +848,31 @@ object VersionedShards {
     * history stays intact, every old snapshot keeps reading, and the
     * rollback is itself a version you can diff against or roll back
     * FROM — the table-format restore semantics (Delta RESTORE /
-    * Iceberg rollback). The plan reads the whole current snapshot, so
-    * any winner's add forces a replan. Re-added files must still exist
+    * Iceberg rollback). The plan reads the whole current snapshot and
+    * keeps the whole target set, so any winner's add, or its removal of
+    * any target file, forces a replan. Re-added files must still exist
     * on disk — a vacuum past `v` already reclaimed them, so the restore
     * REFUSES loudly rather than committing a snapshot that cannot be
     * read. Returns the new version. */
   def restoreTo(spark: SparkSession, dir: String, v: Int): Int =
-    commit(spark, dir) { vRead =>
-      require(v >= 0 && v <= vRead, s"restore target v$v outside [0, $vRead]")
-      val want = liveFiles(spark, dir, v).toSet
-      val have = liveFiles(spark, dir, vRead).toSet
-      val (fs, _) = hfs(spark, dir)
-      (want -- have).foreach { case (_, p) =>
-        require(fs.exists(new org.apache.hadoop.fs.Path(resolve(dir, p))),
-          s"restore to v$v needs vacuumed file $p — past the retention " +
-            "horizon")
-      }
-      Some(Plan(removes = (have -- want).toSeq.sortBy(_._2),
-        readds = (want -- have).toSeq.sortBy(_._2), readShards = AnyShard))
+    commit(spark, dir)(restorePlan(spark, dir, v))
+
+  /** [[restoreTo]]'s plan at `vRead`. */
+  private[graft] def restorePlan(spark: SparkSession, dir: String, v: Int)(
+      vRead: Int): Option[Plan] = {
+    require(v >= 0 && v <= vRead, s"restore target v$v outside [0, $vRead]")
+    val want = liveFiles(spark, dir, v).toSet
+    val have = liveFiles(spark, dir, vRead).toSet
+    val (fs, _) = hfs(spark, dir)
+    (want -- have).foreach { case (_, p) =>
+      require(fs.exists(new org.apache.hadoop.fs.Path(resolve(dir, p))),
+        s"restore to v$v needs vacuumed file $p — past the retention " +
+          "horizon")
     }
+    Some(Plan(removes = (have -- want).toSeq.sortBy(_._2),
+      readds = (want -- have).toSeq.sortBy(_._2), keeps = want.toSeq,
+      readShards = AnyShard))
+  }
 
   /** [[mergeCommit]]'s plan: the batch's touched shards are collected
     * ONCE (≤ nShards values), then each `vRead` re-lands those shards.

@@ -380,7 +380,7 @@ object ScaleRun {
         d.groupBy(md5(col("text").cast("binary")).as("h"))
           .agg(count(lit(1)).as("n"), min(col("doc_id")).as("m"))),
       docsLeg("simhash_band (q31 shape)", 10) { d =>
-        graft.functions.TextFunctions.registerSimHash(spark)
+        graft.GraftExtensions.install(spark)
         // simhash is order-INsensitive, so shuffled copies would still
         // collide — salt every token with the copy index instead
         val sigs = d

@@ -1533,6 +1533,69 @@ class ExportSpec extends AnyFunSuite {
       .filter(col("doc_id") === 1000L).count() == 1)
   }
 
+  test("OCC rewrite: restore conflicts when a winner removes a file of its target set") {
+    import graft.sinks.VersionedShards
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+      .select(col("doc_id"), col("source"), col("lang"),
+        col("n_chars"), col("text"))
+    val dir = tmp("occ-restore")
+    VersionedShards.commitAppend(spark, docs.filter(col("doc_id") < 50),
+      "doc_id", dir, 4)
+    // v1 lands ONE file holding only doc 1000 — live in the restore
+    // target (v1) and in the current snapshot (v2)
+    VersionedShards.commitAppend(spark,
+      docs.limit(1).withColumn("doc_id", lit(1000L)), "doc_id", dir, 4)
+    VersionedShards.commitAppend(spark,
+      docs.limit(1).withColumn("doc_id", lit(1001L)), "doc_id", dir, 4)
+    // the rival, injected at the plan seam, deletes doc 1000: its
+    // commit only REMOVES that file (no add). A restore that kept the
+    // file without validating it would publish a "v1" lacking doc 1000
+    var plans = 0
+    val v = VersionedShards.commit(spark, dir) { vRead =>
+      plans += 1
+      if (plans == 1)
+        VersionedShards.deleteCommit(spark, dir, col("doc_id") === 1000L, 4)
+      VersionedShards.restorePlan(spark, dir, 1)(vRead)
+    }
+    assert(plans == 2, "restore did not replan around the winner's remove")
+    assert(v == 4, s"restore landed at the wrong version: $v")
+    val ids = (w: Int) => VersionedShards.readAsOf(spark, dir, w)
+      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids(v) == ids(1), "the restored snapshot is not the v1 snapshot")
+    assert(ids(v).contains(1000L) && !ids(v).contains(1001L))
+  }
+
+  test("OCC rewrite: a delete racing a rival's remove-only commit serializes rival-first") {
+    import graft.sinks.VersionedShards
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+      .select(col("doc_id"), col("source"), col("lang"),
+        col("n_chars"), col("text"))
+    val dir = tmp("occ-del-rm")
+    VersionedShards.commitAppend(spark, docs.filter(col("doc_id") < 50),
+      "doc_id", dir, 4)
+    VersionedShards.commitAppend(spark,
+      docs.limit(1).withColumn("doc_id", lit(1001L)), "doc_id", dir, 4)
+    // the same race as the restore's, against a delete: the rival drops
+    // the doc-1001 file, which our predicate does not match. The delete
+    // neither keeps nor rewrites that file, so its result does not
+    // depend on it: no conflict, and the outcome is rival, then delete
+    val pred = col("doc_id") % 5 === 0
+    var plans = 0
+    val v = VersionedShards.commit(spark, dir) { vRead =>
+      plans += 1
+      if (plans == 1)
+        VersionedShards.deleteCommit(spark, dir, col("doc_id") === 1001L, 4)
+      VersionedShards.deletePlan(spark, dir, pred, 4)(vRead)
+    }
+    assert(plans == 1, "a remove-only rival outside the victims forced a replan")
+    assert(v == 3, s"delete landed at the wrong version: $v")
+    val got = VersionedShards.readAsOf(spark, dir, v)
+      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    val serial = docs.filter(col("doc_id") < 50 && not(coalesce(pred, lit(false))))
+      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(got == serial)
+  }
+
   test("OCC rewrite: a slow-but-alive writer always lands — stalls can never be judged as crashes") {
     import graft.sinks.VersionedShards
     val docs = Tables.documents(spark, TestSpark.sf0001)

@@ -73,7 +73,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("codegen VecDotFloat is bit-identical to the HOF dot product") {
     import graft.functions.VectorFunctions
-    VectorFunctions.registerVecDot(spark)
+    GraftExtensions.install(spark)
     val e = Tables.embeddings(spark, TestSpark.sf0001).limit(200)
     val diff = e.select(
         expr("vec_dot_f(embedding, embedding)").as("fast"),
@@ -82,6 +82,36 @@ class ScaleSpec extends AnyFunSuite {
           VectorFunctions.vecToDouble(col("embedding"))).as("ref"))
       .filter(col("fast") =!= col("ref"))
     assert(diff.count() == 0)
+    // the kernel's cosine and squared-L2 on the same 200 rows against
+    // one fixed query vector: bit-equal to the HOF cosine and to a
+    // driver-side index-order double loop
+    val rows = e.filter(col("embedding").isNotNull)
+    val q = rows.orderBy(col("vec_id")).limit(1)
+      .select(col("embedding").as("qemb"))
+    val scored = VectorFunctions.withNorm(rows.crossJoin(q))
+      .withColumn("qnrm", VectorFunctions.normF(col("qemb")))
+      .select(col("embedding"), col("qemb"),
+        VectorFunctions.cosineF(col("embedding"), col("qemb"), col("nrm"),
+          col("qnrm")).as("cos"),
+        VectorFunctions.cosine(VectorFunctions.vecToDouble(col("embedding")),
+          VectorFunctions.vecToDouble(col("qemb"))).as("cos_ref"),
+        VectorFunctions.sqL2("embedding", "qemb").as("l2"))
+      .collect()
+    assert(scored.length > 100)
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    scored.foreach { r =>
+      val a = r.getSeq[Float](0)
+      val b = r.getSeq[Float](1)
+      var dot, na, nb, l2 = 0.0
+      a.indices.foreach { i =>
+        val (x, y) = (a(i).toDouble, b(i).toDouble)
+        dot += x * y; na += x * x; nb += y * y; l2 += (x - y) * (x - y)
+      }
+      val cos = dot / (math.sqrt(na) * math.sqrt(nb))
+      assert(bits(r.getDouble(2)) == bits(r.getDouble(3)), r.getDouble(2))
+      assert(bits(r.getDouble(2)) == bits(cos), r.getDouble(2))
+      assert(bits(r.getDouble(4)) == bits(l2), r.getDouble(4))
+    }
   }
 
   test("q39 HLL estimate stays within the analytic error of exact") {

@@ -37,7 +37,7 @@ class TextVectorSpec extends AnyFunSuite {
   }
 
   test("codegen'd SimHash64 expression equals the HOF reference impl") {
-    TextFunctions.registerSimHash(spark)
+    GraftExtensions.install(spark)
     val docs = Tables.documents(spark, TestSpark.sf0001).limit(100)
       .withColumn("toks", expr("array_distinct(split(text, ' '))"))
     val diff = docs.select(
@@ -48,7 +48,7 @@ class TextVectorSpec extends AnyFunSuite {
   }
 
   test("codegen'd SimHashMd5 equals the interpreted HOF md5 chain") {
-    TextFunctions.registerSimHashMd5(spark)
+    GraftExtensions.install(spark)
     // the r16 SQL formulation, kept verbatim as the parity reference:
     // per-token md5 hex → two conv() radix decodes → per-(p,k) vote
     // folds → hex re-pack, ties-to-0 via strict > 0
@@ -99,7 +99,7 @@ class TextVectorSpec extends AnyFunSuite {
   test("MinHashK codegen equals the interpreted eval path") {
     // a doGenCode bug would silently diverge from nullSafeEval inside
     // whole-stage codegen; force both execution modes and compare
-    graft.functions.TextFunctions.registerMinHash(spark)
+    GraftExtensions.install(spark)
     val docs = Tables.documents(spark, TestSpark.sf0001).limit(200)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(col("toks").isNotNull)
@@ -126,7 +126,7 @@ class TextVectorSpec extends AnyFunSuite {
     // the fraction of equal slots for a pair with known Jaccard J is an
     // unbiased estimate, sd = sqrt(J(1-J)/64) ≈ 0.06 at J = 0.5 —
     // assert within 4 sigma. Deterministic under the fixed seeds.
-    graft.functions.TextFunctions.registerMinHash(spark)
+    GraftExtensions.install(spark)
     import spark.implicits._
     // |A| = |B| = 60, |A∩B| = 40 -> J = 40/80 = 0.5
     val a = (0 until 60).map(i => s"s$i")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{MinHashK, SimHash64, SimHashMd5, VecDotFloat}
+import graft.functions.{MinHashK, MinHashMd5, SimHash64, SimHashMd5, VecDotFloat}
 
 /** Session extensions: registers the engine's native expressions
   * ([[GraftExtensions.functions]]) for every session created with
@@ -47,6 +47,10 @@ object GraftExtensions {
     fn("minhash_k", classOf[MinHashK], 2) { a =>
       require(a(1).foldable, "minhash_k: k must be a literal")
       MinHashK(a(0), a(1).eval().asInstanceOf[Number].intValue())
+    },
+    fn("minhash_md5", classOf[MinHashMd5], 2) { a =>
+      require(a(1).foldable, "minhash_md5: k must be a literal")
+      MinHashMd5(a(0), a(1).eval().asInstanceOf[Number].intValue())
     })
 
   /** Registers every function of [[functions]] the session lacks — a

@@ -18,11 +18,14 @@ object Tables {
     * file thousands of times per bench run. The memo returns the SAME
     * immutable DataFrame (a logical plan — reuse is free and
     * side-effect-less); keys carry the session token, so a new session
-    * re-resolves. Fixture tables are immutable for the life of a
-    * session (the driver contract: one sfDir per process), which is
-    * exactly the raw-`memo` contract. */
+    * re-resolves, and the table's snapshot fingerprint
+    * ([[graft.operators.SessionCache.memoOn]], one listing per call), so
+    * an in-place overwrite re-resolves too — a stale resolution lists
+    * deleted part files, and every snapshot-keyed artifact built over it
+    * would fail or be built from the superseded snapshot. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    graft.operators.SessionCache.memo(spark, s"tables|$dir|$name") {
+    graft.operators.SessionCache.memoOn(spark, s"$dir/$name.parquet",
+        s"tables|$dir|$name") {
       spark.read.parquet(s"$dir/$name.parquet")
     }
 
@@ -48,7 +51,8 @@ object Tables {
     *  - ordinary UTC-adjusted µs/ms timestamp: pass through.
     */
   def events(s: SparkSession, d: String): DataFrame =
-    graft.operators.SessionCache.memo(s, s"tables|$d|events-normalized") {
+    graft.operators.SessionCache.memoOn(s, s"$d/events.parquet",
+        s"tables|$d|events-normalized") {
       eventsUnmemoized(s, d)
     }
 

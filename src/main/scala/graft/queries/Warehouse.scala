@@ -573,12 +573,13 @@ object Warehouse {
     * meant TWO ObjectHashAggregate percentile evaluations per q233
     * run). The rollup is ≤ 11 rows by construction (decile =
     * size(filter(9-cut array)) ∈ 0..9, plus at most a null-cuts row),
-    * so it is collected ONCE under the bounded-collect contract and
-    * both the totals and the final projection run on the driver-local
-    * relation — the scored stream is now scanned exactly once here, and
-    * the ppm/milli expressions are UNCHANGED (exact integer DIV with
-    * the DECIMAL(38,0) cross products), so every output digit is
-    * identical. */
+    * so it is collected ONCE under the bounded-collect contract, its
+    * totals are summed on the driver and enter as BIGINT literals, and
+    * the final projection runs on the driver-local relation — the
+    * scored stream is scanned exactly once, no totals re-aggregation or
+    * join runs, and the ppm/milli expressions are UNCHANGED (exact
+    * integer DIV with the DECIMAL(38,0) cross products), so every
+    * output digit is identical. */
   private[graft] def gainsFromCuts(scored: DataFrame,
       cuts: Column): DataFrame = {
     val spark = scored.sparkSession
@@ -588,13 +589,15 @@ object Warehouse {
         .as("decile"), col("pos"))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n"), sum(col("pos")).as("n_pos"))
-    // ≤ 11 rows, see above; a LocalRelation (no RDD scan job)
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    byDecile.collect().foreach(rows.add)
-    val local = spark.createDataFrame(rows, byDecile.schema)
-    val totals = local.agg(sum(col("n")).as("nn"),
-      sum(col("n_pos")).as("pp"))
-    local.join(broadcast(totals))
+    // ≤ 11 rows, see above; a LocalRelation (no RDD scan job), and the
+    // totals summed here on the driver (no count nulls; n_pos sums a
+    // 0/1 flag, never NULL) instead of a re-aggregation joined back
+    val rows = byDecile.collect()
+    val nn = rows.map(_.getAs[Long]("n")).sum
+    val pp = rows.map(_.getAs[Long]("n_pos")).sum
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), byDecile.schema)
+      .select(col("decile"), col("n"), col("n_pos"),
+        lit(nn).as("nn"), lit(pp).as("pp"))
       .select(col("decile"), col("n"), col("n_pos"),
         expr("(n_pos * 1000000) DIV n").as("pos_rate_ppm"),
         expr("(n_pos * 1000000) DIV pp").as("pos_share_ppm"),

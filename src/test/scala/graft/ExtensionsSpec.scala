@@ -101,13 +101,16 @@ class ExtensionsSpec extends AnyFunSuite {
   test("source scan: native functions are built and registered only in " +
       "graft/functions and GraftExtensions") {
     // the oracle-pinned vector arithmetic (vec_dot_f, the full-vector
-    // squared-L2 fold) lives in VectorFunctions, and native functions
-    // are registered through GraftExtensions' one table; comments and
-    // the DuckDB oracle SQL (Some(\"\"\"...\"\"\")) are not scanned
+    // squared-L2 fold) lives in VectorFunctions, q30's md5 slot fold in
+    // the MinHashMd5 kernel, and native functions are registered
+    // through GraftExtensions' one table; comments and the DuckDB
+    // oracle SQL (Some(\"\"\"...\"\"\")) are not scanned
     val rules = Seq(
       "builds vec_dot_f" -> "vec_dot_f".r,
       "inlines the squared-L2 fold" ->
         """\(CAST\(v AS DOUBLE\) - (CAST\(m AS DOUBLE\)|m)\)\s*\*""".r,
+      "inlines the md5 slot fold" ->
+        """(?i)md5\(\s*concat\(\s*CAST\(\s*\w+\s+AS\s+STRING\s*\)\s*,\s*'\|'""".r,
       "registers a native function" -> ("""\bregister(VecDot|SimHash|""" +
         """SimHashMd5|MinHash)\b|\b(VectorFunctions|TextFunctions|""" +
         """GraftExtensions)\s*\.\s*register\w*|""" +

@@ -54,6 +54,56 @@ class SessionCacheSpec extends AnyFunSuite {
     assert(half > 0)
   }
 
+  /** A fresh corpus directory holding sf0.001's documents, kept whole
+    * or halved to the even doc ids — q30 reads nothing else. */
+  private def documentsCopy(dir: String, halved: Boolean): String = {
+    import org.apache.spark.sql.functions._
+    val docs = spark.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+    (if (halved) docs.filter(col("doc_id") % 2 === 0) else docs)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+  private def freshDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def q30Rows(dir: String): Set[(Long, Long, Double)] =
+    ext.MinHashDedup.q30.run(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  test("q30 signatures keyed by path: a halved corpus in the same session signs its own docs") {
+    val full = q30Rows(TestSpark.sf0001)
+    val half = q30Rows(documentsCopy(freshDir("graft_mh30_half"), halved = true))
+    assert(full != half, "halved corpus produced the full corpus's pairs - memo under-keyed")
+    assert(half.nonEmpty && half.forall { case (a, b, _) => a % 2 == 0 && b % 2 == 0 })
+  }
+
+  test("q30 signatures rebuild when documents.parquet is overwritten in place") {
+    val dir = documentsCopy(freshDir("graft_mh30_snap"), halved = false)
+    val before = q30Rows(dir)
+    assert(before == q30Rows(TestSpark.sf0001))
+    documentsCopy(dir, halved = true)
+    val after = q30Rows(dir)
+    assert(after != before, "stale signatures served after in-place overwrite")
+    assert(after == q30Rows(documentsCopy(freshDir("graft_mh30_ref"), halved = true)))
+  }
+
+  test("three q30 calls in one session leave one live mh30-sig staged directory") {
+    val root = java.nio.file.Files.createTempDirectory("graft_mh30_stage").toFile
+    val prev = spark.conf.getOption("graft.stage.dir")
+    spark.conf.set("graft.stage.dir", root.getAbsolutePath)
+    try {
+      val dir = documentsCopy(freshDir("graft_mh30_calls"), halved = false)
+      (1 to 3).foreach(_ => ext.MinHashDedup.q30.run(spark, dir).count())
+      val sigDirs = Option(root.listFiles()).toSeq.flatten
+        .filter(f => f.isDirectory && f.getName.startsWith("mh30-sig"))
+      assert(sigDirs.size == 1, s"live signature dirs: ${sigDirs.map(_.getName)}")
+    } finally {
+      prev match {
+        case Some(p) => spark.conf.set("graft.stage.dir", p)
+        case None => spark.conf.unset("graft.stage.dir")
+      }
+    }
+  }
+
   test("memoOn rebuilds when the input directory is overwritten in place") {
     // the daily-refresh shape at scale: same path, new snapshot. The
     // listing fingerprint (count/bytes/max-mtime) must invalidate the

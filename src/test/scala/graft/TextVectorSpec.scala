@@ -96,6 +96,76 @@ class TextVectorSpec extends AnyFunSuite {
     assert(one == viaSql)
   }
 
+  test("codegen'd MinHashMd5 equals the interpreted HOF md5 slot chain") {
+    GraftExtensions.install(spark)
+    // q30's former signature expression, kept verbatim as the parity
+    // reference: k interpreted md5 lambdas per shingle, array_min per slot
+    val ref = "transform(sequence(0, 11), i -> array_min(transform(" +
+      "shingles, s -> md5(concat(CAST(i AS STRING), '|', s)))))"
+    def both(df: org.apache.spark.sql.DataFrame) =
+      df.select(expr(ref).as("a"), expr("minhash_md5(shingles, 12)").as("b"))
+    def drift(df: org.apache.spark.sql.DataFrame): Long =
+      both(df).filter(!(col("a") <=> col("b"))).count()
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+      both(df).collect().toSeq.flatMap(r =>
+        Seq(r.getSeq[String](0), r.getSeq[String](1)))
+    // sf0.001's shingled documents, short and NULL texts included
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+      .select(split(col("text"), " ").as("toks"))
+      .select(TextFunctions.shinglesExpr("toks", 3).as("shingles"))
+    assert(drift(docs) == 0,
+      "codegen signature drifted from the md5 HOF reference on fixture")
+    // same type as the SQL form, so q30's staged schema is unchanged
+    assert(both(docs).schema("a").dataType == both(docs).schema("b").dataType)
+    // adversarial: NULL array, NULL elements, empty, all-NULL, "",
+    // duplicates, non-ASCII
+    val adv = Seq(
+      None, Some(Seq("a b c", null, "d e f")), Some(Seq.empty[String]),
+      Some(Seq[String](null, null)), Some(Seq("")), Some(Seq("x", "x", "y")),
+      Some(Seq("héllo wörld ✓", "日本 語 文", "\u0000|é"))
+    ).toDF("shingles")
+    assert(drift(adv) == 0,
+      "codegen signature drifted on adversarial shingle arrays")
+    val advRows = rows(adv).grouped(2).toSeq
+    // a NULL array signs to 12 NULL slots, not to NULL
+    assert(advRows.head == Seq.fill(2)(Seq.fill[String](12)(null)))
+    advRows.foreach { case Seq(a, b) => assert(a == b) }
+    // the interpreted eval path (no codegen) agrees with codegen, and
+    // the kernel really generates code
+    val kernel = graft.functions.MinHashMd5(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(
+        Seq("x y z", null, "é"),
+        org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.StringType)), 12)
+    assert(!kernel.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback])
+    assert(kernel.eval(null).asInstanceOf[
+        org.apache.spark.sql.catalyst.util.ArrayData]
+      .toSeq[AnyRef](org.apache.spark.sql.types.StringType).map(_.toString) ==
+      spark.sql("SELECT " + ref.replace("shingles",
+        "array('x y z', NULL, 'é')")).head().getSeq[String](0))
+    def withConf[A](kv: (String, String)*)(body: => A): A = {
+      val prev = kv.map { case (key, _) => key -> spark.conf.getOption(key) }
+      kv.foreach { case (key, v) => spark.conf.set(key, v) }
+      try body
+      finally prev.foreach {
+        case (key, Some(v)) => spark.conf.set(key, v)
+        case (key, None) => spark.conf.unset(key)
+      }
+    }
+    // no silent fallback: a generated class that fails to compile fails
+    // here instead of quietly running the interpreted path
+    val withCodegen = withConf("spark.sql.codegen.fallback" -> "false",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
+      rows(docs) ++ rows(adv)
+    }
+    val interpreted = withConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+      rows(docs) ++ rows(adv)
+    }
+    assert(withCodegen == interpreted)
+  }
+
   test("MinHashK codegen equals the interpreted eval path") {
     // a doGenCode bug would silently diverge from nullSafeEval inside
     // whole-stage codegen; force both execution modes and compare
